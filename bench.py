@@ -301,6 +301,7 @@ def main() -> None:
 
     duck: dict[str, float] = {}
     duck_native: dict[str, float] = {}
+    duck_error = None
     try:
         from timing_explorer_spark.testing import (
             duckdb_connection,
@@ -309,8 +310,9 @@ def main() -> None:
 
         duck = time_duckdb(duckdb_connection(sf_dir))
         duck_native = time_duckdb(duckdb_native_connection(sf_dir))
-    except Exception:  # noqa: BLE001 — comparator is informational only
-        pass
+    except Exception as e:  # noqa: BLE001 — comparator is informational only
+        # the run still reports, but a missing comparator names its cause
+        duck_error = f"{type(e).__name__}: {str(e)[-300:]}"
 
     total = round(sum(timings.values()), 3)
     print(
@@ -347,6 +349,7 @@ def main() -> None:
                     "total": round(sum(duck_native.values()), 3),
                     "queries": duck_native,
                 },
+                "duckdb_error": duck_error,
             }
         )
     )

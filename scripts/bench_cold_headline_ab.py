@@ -75,20 +75,27 @@ def main() -> int:
             )
             lines = [ln for ln in r.stdout.splitlines() if ln.startswith("RESULT ")]
             rec = json.loads(lines[-1][len("RESULT "):]) if lines else None
+            if rec is None:
+                # a crashed rep stays in the record with its cause
+                rec = {"returncode": r.returncode,
+                       "stderr_tail": r.stderr.splitlines()[-20:]}
+                print(f"rep {rep} {vname}: FAILED rc={r.returncode}", flush=True)
+            else:
+                print(f"rep {rep} {vname}: total {round(sum(rec.values()), 2)}",
+                      flush=True)
             out[vname].append(rec)
-            tot = round(sum(rec.values()), 2) if rec else None
-            print(f"rep {rep} {vname}: total {tot}", flush=True)
     summary = {}
     for vname, recs in out.items():
-        oks = [r for r in recs if r]
+        oks = [r for r in recs if "returncode" not in r]
+        summary[vname] = {"failed_reps": len(recs) - len(oks)}
         if oks:
-            summary[vname] = {
+            summary[vname].update({
                 "cold_total_per_rep": [round(sum(r.values()), 3) for r in oks],
                 "cold_total_min": round(min(sum(r.values()) for r in oks), 3),
                 "per_query_min": {
                     q: round(min(r[q] for r in oks), 3) for q in oks[0]
                 },
-            }
+            })
     print(json.dumps({"sf_dir": sf_dir, "reps": reps,
                       "summary": summary, "raw": out}))
     return 0

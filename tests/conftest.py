@@ -66,3 +66,24 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def smoke_query(spark, sf_smoke):
+    """``smoke_query(name)``: registered query ``name`` built over the smoke
+    fixture, once per session. The whole-registry plan audit and the
+    registry oracle/run checks need every query over the same fixture, and
+    trainer-backed builders execute their training actions at build time —
+    sharing the built frame saves a full registry pass of training. A build
+    that raises is not memoized."""
+    from timing_explorer_spark.plans import all_queries
+
+    specs = all_queries()
+    built = {}
+
+    def get(name: str):
+        if name not in built:
+            built[name] = specs[name].build(spark, sf_smoke)
+        return built[name]
+
+    return get

@@ -11,10 +11,9 @@ must come out as one unique document and suppressed near-dups."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
+from landing_util import land
 from timing_explorer_spark.operators.html_extract import strip_html
 from timing_explorer_spark.sources.warc import encode_warc_record, read_warc_stream
 from timing_explorer_spark.streaming.lsh_dedup import minhash_dedup_stream
@@ -49,35 +48,32 @@ def _build_crawl_dir(tmp_path):
         _warc(ARTICLE, "http://a.example/post?utm_source=feed", 1)
         + _warc(OTHER, "http://b.example/tech", 2)
     )
-    time.sleep(1.1)
     # trigger 2: the SAME article under a mirror URL, re-encoded with extra
     # whitespace (byte-different payload, identical visible text) — shipped
     # GZIPPED, the way Common Crawl actually serves records
-    (indir / "seg-1.warc.gz").write_bytes(
+    land(str(indir), lambda: (indir / "seg-1.warc.gz").write_bytes(
         gzip_warc_record(
             _warc(ARTICLE.replace("<p>", "<p>\n  "), "http://mirror.example/post", 3)
         )
-    )
-    time.sleep(3.2)
+    ), gap=1.1)
     # trigger 3: the seal sentinel, far enough ahead of the 2s horizon that
     # its watermark passes every earlier verdict window
-    (indir / "seg-2.warc").write_bytes(
+    land(str(indir), lambda: (indir / "seg-2.warc").write_bytes(
         _warc(
             "<html><body><p>sentinel closing document with enough words to "
             "shingle into something unique entirely</p></body></html>",
             "http://z.example/seal",
             99,
         )
-    )
-    time.sleep(1.1)
-    (indir / "seg-3.warc").write_bytes(
+    ), gap=3.2)
+    land(str(indir), lambda: (indir / "seg-3.warc").write_bytes(
         _warc(
             "<html><body><p>second sentinel flushes the sealed verdict "
             "windows through the final trigger of the run</p></body></html>",
             "http://z.example/seal2",
             100,
         )
-    )
+    ), gap=1.1)
     return indir
 
 
@@ -174,20 +170,17 @@ def test_warc_cleanup_chain_dedups_garbled_mirror(spark, tmp_path):
     (indir / "seg-0.warc").write_bytes(
         _warc(shell.format(clean_p), "http://a.example/clean", 1)
     )
-    time.sleep(1.1)
-    (indir / "seg-1.warc").write_bytes(
+    land(str(indir), lambda: (indir / "seg-1.warc").write_bytes(
         _warc(shell.format(garbled_p), "http://m.example/garbled", 2)
-    )
-    time.sleep(3.2)
-    (indir / "seg-2.warc").write_bytes(
+    ), gap=1.1)
+    land(str(indir), lambda: (indir / "seg-2.warc").write_bytes(
         _warc(shell.format("sentinel one closing with plenty of unique words "
                            "to shingle across the horizon"), "http://z/s1", 8)
-    )
-    time.sleep(1.1)
-    (indir / "seg-3.warc").write_bytes(
+    ), gap=3.2)
+    land(str(indir), lambda: (indir / "seg-3.warc").write_bytes(
         _warc(shell.format("sentinel two flushing sealed verdict windows "
                            "through the very final trigger"), "http://z/s2", 9)
-    )
+    ), gap=1.1)
 
     records = read_warc_stream(
         spark, str(indir), with_ingest_ts=True, max_files_per_trigger=1

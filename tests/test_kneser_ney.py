@@ -378,42 +378,3 @@ def test_per_lang_models_equal_slice_training(spark, toy_model):
         assert scored[i] == solo_ppl[i]
     for m in models.values():
         m.unpersist()
-
-
-def test_kn_prob_bit_identical_lut_vs_chain(spark, toy_model):
-    """r13 exactness pin: kn_prob's two lookup shapes — the broadcast join
-    chain (small-model path, the pre-r13 implementation) and the single
-    tagged-LUT join + pivot (corpus-scale path) — must agree BIT-FOR-BIT:
-    same doubles, not approx. The adaptive `auto` dispatch can therefore
-    never change results."""
-    model = toy_model
-    # every padded event gram of the corpus + OOV probes + a DUPLICATE row
-    # (the pivot must preserve input multiplicity)
-    grams = [
-        ([BOS, BOS, "the"],),
-        ([BOS, "the", "cat"],),
-        (["the", "cat", "sat"],),
-        (["cat", "sat", "on"],),
-        (["sat", "on", "the"],),
-        (["on", "the", "mat"],),
-        (["the", "mat", EOS],),
-        (["zz", "qq", "oov"],),
-        (["fish", "bone", "the"],),
-        (["the", "cat", "sat"],),  # duplicate
-    ]
-    queries = spark.createDataFrame(grams, "gram array<string>")
-    got = sorted(
-        (tuple(r["gram"]), r["p"])
-        for r in kn_prob(queries, model, lookup="lut").collect()
-    )
-    want = sorted(
-        (tuple(r["gram"]), r["p"])
-        for r in kn_prob(queries, model, lookup="chain").collect()
-    )
-    assert len(got) == len(grams)  # duplicates preserved
-    assert got == want  # EXACT equality, bit-for-bit doubles
-    # the toy model is tiny / stats-unknown: auto must resolve to the
-    # local-optimal chain shape, never the scale shape
-    from timing_explorer_spark.operators.kneser_ney import _model_is_broadcastable
-
-    assert _model_is_broadcastable(model)

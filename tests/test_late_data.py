@@ -22,10 +22,10 @@ actual late-data contract is pinned here (measured on pyspark 4.1):
 from __future__ import annotations
 
 import json
-import time
 
 from pyspark.sql import functions as F
 
+from landing_util import land
 from timing_explorer_spark.streaming.pipeline import (
     event_time_windows,
     sensor_stream_from_files,
@@ -36,8 +36,8 @@ def _write_batch(spark, path: str, rows: list[tuple[str, str, float]]) -> None:
     df = spark.createDataFrame(rows, ["key", "ts", "value"]).select(
         "key", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
-    df.coalesce(1).write.mode("append").parquet(path)
-    time.sleep(1.1)  # file-source batch order follows modification time
+    # file-source batch order follows modification time
+    land(path, lambda: df.coalesce(1).write.mode("append").parquet(path))
 
 
 def test_late_row_after_seal_dropped_not_refired(spark, tmp_path):

@@ -528,7 +528,7 @@ def _unpartitioned_windows(df) -> int:
     )
 
 
-def test_plan_audit_all_queries(spark, sf_smoke):
+def test_plan_audit_all_queries(spark, smoke_query):
     """Whole-registry physical-plan audit — the sweeping scale guarantees:
     no query ever plans a CartesianProduct; BroadcastNestedLoopJoin appears
     only in sanctioned scalar/band-join shapes; row-wise Python appears only
@@ -536,12 +536,13 @@ def test_plan_audit_all_queries(spark, sf_smoke):
     windows appear only over sanctioned bounded intermediates. Covers every
     registered query, not just the PLANS.md sample."""
     failures = []
-    for name, spec in all_queries().items():
+    for name in all_queries():
         try:
             # build ONCE and explain the same frame (r13 suite-wall-time cut:
             # plan_of(name) re-ran spec.build, and trainer builds execute the
-            # full training actions — the audit paid every trainer twice)
-            df = spec.build(spark, sf_smoke)
+            # full training actions — the audit paid every trainer twice);
+            # the frame is shared with test_relational_oracle's checks
+            df = smoke_query(name)
             plan = plan_of_df(spark, df)
         except Exception as exc:  # noqa: BLE001
             failures.append(f"{name}: plan build failed: {exc}")

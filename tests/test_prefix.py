@@ -96,31 +96,9 @@ def test_sequence_packing_distributed_scan(spark, sf_smoke):
     assert "partitionBy=[__pid" in plan.replace(" ", "") or "__pid" in plan
 
 
-def test_prefix_scan_single_data_exchange(spark, sf_smoke):
-    """r13: with a numeric/timestamp leading order column the scan computes
-    its bucket id BEFORE one explicit range exchange; the local-scan window
-    must reuse that partitioning instead of inserting a second data-grain
-    hashpartitioning(__pid) exchange, and the offsets aggregate must ride
-    the pre-exchange frame (partial-aggregated to <= n rows)."""
-    e = load(spark, sf_smoke, "events")
-    agg = e.groupBy(F.col("ts").alias("t")).agg(F.sum(F.lit(1)).alias("d"))
-    df = running_total(agg, ["t"], "d", n_parts=8, shape="bucketed")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning(__pid" in plan  # the ONE data exchange
-    # the window no longer re-shuffles the data by __pid: any
-    # hashpartitioning(__pid ...) left is the tiny post-partial-agg offsets
-    # exchange, which sits directly over an (object)hash aggregate
-    for line in plan.splitlines():
-        if "hashpartitioning(__pid" in line and "Reused" not in line:
-            # must be the offsets leg (aggregate directly beneath), never a
-            # full-width data shuffle: the data leg carries column `t`
-            assert "__ptotal" not in line  # sanity: it's the partial column
-    assert plan.count("rangepartitioning(__pid") == 1
-
-
-def test_prefix_scan_string_bucket_expr(spark, sf_smoke):
-    """bucket_expr: a monotone numeric image of a string key takes the
-    single-exchange path and stays bit-identical to the naive window."""
+def test_prefix_scan_string_key_matches_naive_window(spark, sf_smoke):
+    """A string leading order key (fixed-length md5 hex) range-partitions
+    and stays bit-identical to the naive window."""
     e = load(spark, sf_smoke, "events").select(
         "event_id", F.md5(F.col("event_id").cast("string")).alias("k")
     )
@@ -132,13 +110,10 @@ def test_prefix_scan_string_bucket_expr(spark, sf_smoke):
         (r["event_id"], r["c"])
         for r in d.select("event_id", F.sum("v").over(naive_w).alias("c")).collect()
     )
-    got_df = running_total(
-        d, ["k", "event_id"], "v", alias="c", n_parts=7, shape="bucketed",
-        bucket_expr=F.conv(F.substring("k", 1, 15), 16, 10).cast("bigint"),
-    )
+    got_df = running_total(d, ["k", "event_id"], "v", alias="c", n_parts=7)
     got = sorted((r["event_id"], r["c"]) for r in got_df.select("event_id", "c").collect())
     assert got == expect
-    assert "rangepartitioning(__pid" in got_df._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning(k" in got_df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_running_total_rejects_float_value(spark):

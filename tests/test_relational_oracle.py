@@ -23,15 +23,13 @@ def con(sf_smoke):
 
 
 @pytest.mark.parametrize("name", ORACLE_SPECS)
-def test_oracle_sf001(spark, sf_smoke, con, name):
-    spec = SPECS[name]
-    df = spec.build(spark, sf_smoke)
-    assert_matches_oracle(df, con, spec.oracle, name)
+def test_oracle_sf001(smoke_query, con, name):
+    assert_matches_oracle(smoke_query(name), con, SPECS[name].oracle, name)
 
 
 @pytest.mark.parametrize("name", NO_ORACLE_SPECS)
-def test_no_oracle_queries_run(spark, sf_smoke, name):
-    df = SPECS[name].build(spark, sf_smoke)
+def test_no_oracle_queries_run(smoke_query, name):
+    df = smoke_query(name)
     assert df.count() >= 0  # runs, stable schema
     assert len(df.columns) > 0
 

@@ -18,10 +18,9 @@ with different state contracts. Pinned here, measured on pyspark 4.1:
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
+from landing_util import land
 from timing_explorer_spark.streaming.pipeline import dedup_stream, sensor_stream_from_files
 
 
@@ -29,8 +28,8 @@ def _write_batch(spark, path: str, rows: list[tuple[str, str, float]]) -> None:
     df = spark.createDataFrame(rows, ["key", "ts", "value"]).select(
         "key", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
-    df.coalesce(1).write.mode("append").parquet(path)
-    time.sleep(1.1)  # file-source batch order follows modification time
+    # file-source batch order follows modification time
+    land(path, lambda: df.coalesce(1).write.mode("append").parquet(path))
 
 
 def _run(spark, indir: str, outdir: str, ckpt: str, bounded_state: bool) -> list:

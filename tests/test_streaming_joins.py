@@ -6,11 +6,10 @@ state (eviction driven by watermark + interval, the 100 TB property).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
 from chaos_util import kill_chaos_run
+from landing_util import land
 from timing_explorer_spark.streaming.joins import (
     interval_join_batch,
     interval_join_streams,
@@ -22,8 +21,8 @@ def _write_batch(spark, path: str, rows: list[tuple[str, str, float]]) -> None:
     df = spark.createDataFrame(rows, ["key", "ts", "value"]).select(
         "key", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
-    df.coalesce(1).write.mode("append").parquet(path)
-    time.sleep(1.1)  # file-source batch order follows modification time
+    # file-source batch order follows modification time
+    land(path, lambda: df.coalesce(1).write.mode("append").parquet(path))
 
 
 def _run(spark, ldir, rdir, outdir, ckpt, how="inner", **kw):

@@ -10,12 +10,11 @@
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
 import pytest
 
+from landing_util import land
 from timing_explorer_spark.streaming.lsh_dedup import (
     band_keys,
     minhash_dedup_stream,
@@ -167,8 +166,8 @@ def _run_stream(spark, tmp_path, batches, watermark="10 minutes", verify=None,
         df = spark.createDataFrame(rows, "doc_id long, ts string, text string").select(
             "doc_id", F.col("ts").cast("timestamp").alias("ts"), "text"
         )
-        df.coalesce(1).write.mode("append").parquet(indir)
-        time.sleep(1.1)  # file-source batch order follows modification time
+        # file-source batch order follows modification time
+        land(indir, lambda: df.coalesce(1).write.mode("append").parquet(indir))
     stream = (
         spark.readStream.schema("doc_id long, ts timestamp, text string")
         .option("maxFilesPerTrigger", 1)

@@ -10,10 +10,9 @@
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
+from landing_util import land
 from timing_explorer_spark.streaming.paragraph_dedup import paragraph_dedup_stream
 
 
@@ -27,8 +26,8 @@ def _run_stream(spark, tmp_path, batches, watermark="10 minutes"):
         df = spark.createDataFrame(rows, "doc_id long, ts string, text string").select(
             "doc_id", F.col("ts").cast("timestamp").alias("ts"), "text"
         )
-        df.coalesce(1).write.mode("append").parquet(indir)
-        time.sleep(1.1)  # file-source batch order follows modification time
+        # file-source batch order follows modification time
+        land(indir, lambda: df.coalesce(1).write.mode("append").parquet(indir))
     stream = (
         spark.readStream.schema("doc_id long, ts timestamp, text string")
         .option("maxFilesPerTrigger", 1)

@@ -12,10 +12,9 @@ deterministic replayed stream:
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
+from landing_util import land
 from timing_explorer_spark.streaming.pipeline import (
     sensor_stream_from_files,
     session_windows_stream,
@@ -26,8 +25,8 @@ def _write(spark, path, rows):
     df = spark.createDataFrame(rows, ["key", "ts", "value"]).select(
         "key", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
-    df.coalesce(1).write.mode("append").parquet(path)
-    time.sleep(1.1)  # file-source batch order follows modification time
+    # file-source batch order follows modification time
+    land(path, lambda: df.coalesce(1).write.mode("append").parquet(path))
 
 
 def test_streaming_sessions_merge_and_match_batch(spark, tmp_path):

@@ -60,7 +60,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SEP = "\x1f"  # token separator inside gram-string keys (never in real text)
@@ -135,14 +135,6 @@ class KNModel:
     discounts: dict[int, tuple[float, float, float]] = field(default_factory=dict)
     gamma1: float = 1.0  # the single order-1 gamma (empty context)
     vocab_size: int = 1  # |V|: prediction types (words + </s>, never <s>)
-    # MEASURED bytes of the materialized per-order adjusted-count caches
-    # (set at the end of kn_train, when the training collects have already
-    # materialized them — InMemoryRelation stats are then exact, unlike the
-    # training input's plan-time ESTIMATE, which can be junk-large through
-    # synthesis/explode chains: observed 1.8 TB "estimate" for a KB-sized
-    # WARC-derived reference slice). None for kn_load models (their parquet
-    # scans carry exact sizes instead). Drives kn_prob's lookup-shape choice.
-    table_bytes: int | None = None
 
     def unpersist(self) -> None:
         for df in list(self.parts.values()) + list(self.gammas.values()):
@@ -304,18 +296,6 @@ def kn_train(
     model.vocab_size = int(next(r["t"] for r in rows if r["k"] == 0))
     _k1stats = {int(r["a"]): int(r["t"]) for r in rows if r["k"] == -1}
 
-    # The two collects above materialized every adjusted[k] cache, so their
-    # InMemoryRelation stats are now EXACT — record them as the model-size
-    # signal for kn_prob's lookup-shape dispatch (the model tables derive
-    # 1:1 from these grains; the training INPUT's plan-time estimate is
-    # unusable, e.g. 1.8 TB "estimated" for a KB-sized synthesis chain).
-    from .width import plan_size_bytes
-
-    sizes = [plan_size_bytes(adjusted[k]) for k in range(1, order + 1)]
-    model.table_bytes = sum(b for b in sizes if b is not None) if any(
-        b is not None for b in sizes
-    ) else None
-
     # --- part/gamma tables ----------------------------------------------
     for k in range(1, order + 1):
         d1, d2, d3 = model.discounts[k]
@@ -376,88 +356,17 @@ def kn_train(
     return model
 
 
-def _kn_combine(model: KNModel) -> Column:
-    """The telescoped interpolation combine over _p1.._pn / _g2.._gn columns:
-    p = part_n + g_n*(part_{n-1} + g_{n-1}*(... part_1 + gamma1 * 1/V));
-    unseen context -> part 0, gamma 1. Shared verbatim by both lookup shapes
-    so their doubles are bit-identical."""
-    n = model.order
-    p = F.coalesce(F.col("_p1"), F.lit(0.0)) + F.lit(model.gamma1 / model.vocab_size)
-    for k in range(2, n + 1):
-        p = F.coalesce(F.col(f"_p{k}"), F.lit(0.0)) + F.coalesce(
-            F.col(f"_g{k}"), F.lit(1.0)
-        ) * p
-    return p
-
-
-# Above this estimated training-corpus size the per-order model tables stop
-# being reliably broadcastable (Heaps-bounded but corpus-driven), and the
-# scoring plan switches from the broadcast join chain to the single-join
-# tagged-LUT shape. 4 GiB is far beyond every local fixture (bench SFs are
-# MBs) and conservatively inside the territory where 2*order-1 non-broadcast
-# hash joins would each shuffle the query table.
-KN_LOOKUP_SCALE_BYTES = 4 << 30
-
-
-def kn_prob(queries: DataFrame, model: KNModel, lookup: str = "auto") -> DataFrame:
+def kn_prob(queries: DataFrame, model: KNModel) -> DataFrame:
     """Attach interpolated-KN probability to a DataFrame of full-order
     queries (gram: array<string> of length ``order``). Returns the input
     plus a ``p`` column.
 
-    Two lookup shapes, bit-identical results (pinned against each other in
-    tests/test_kneser_ney.py), chosen by ``lookup``:
-
-    - ``chain`` — 2·order−1 per-order left hash joins (5 part + 4 gamma at
-      order 5). When every model table broadcasts, Catalyst fuses the whole
-      chain into ONE codegen stage with zero exchanges — the fastest shape
-      whenever the model fits executors (measured 0.72 vs 1.30 s at sf0.01,
-      scripts/bench_kn_ab.py).
-    - ``lut`` — ONE key-grain-tagged union table (part rows keyed
-      (k, ctx, w), gamma rows keyed (k, ctx, "")) probed by ONE left
-      equi-join from the (2·order−1)-way exploded query keys, pivoted back
-      with a max-of-singleton aggregate that reuses the query table's
-      existing hash partitioning (no extra exchange — verified in the
-      formatted plan). At corpus scale, where the model tables exceed the
-      broadcast cap, this replaces 9 shuffle-join barriers on the
-      distinct-gram grain with one join + one in-place aggregate
-      (r13, guide §3/§2.4).
-    - ``auto`` — ``chain`` when the model is small enough to broadcast
-      (training-corpus plan bytes, or the loaded tables' plan bytes, under
-      KN_LOOKUP_SCALE_BYTES), ``lut`` beyond that. Results never depend on
-      the choice.
-
-    The "" sentinel of the lut shape is safe: tokenization drops empty
-    tokens, so no real ``w`` is ever the empty string — and even a
-    hand-built query gram with w="" behaves identically (its part probe
-    finds no part value, exactly as the part table, which contains no
-    w="", returned no match before)."""
-    if lookup == "auto":
-        lookup = "chain" if _model_is_broadcastable(model) else "lut"
-    if lookup == "chain":
-        return _kn_prob_chain(queries, model)
-    if lookup != "lut":
-        raise ValueError(f"kn_prob: unknown lookup {lookup!r}")
-    return _kn_prob_lut(queries, model)
-
-
-def _model_is_broadcastable(model: KNModel) -> bool:
-    if model.table_bytes is not None:
-        # trained model: exact bytes of the materialized adjusted caches
-        return model.table_bytes <= KN_LOOKUP_SCALE_BYTES
-    # loaded model (kn_load): parquet scans have exact plan-time sizes
-    from .width import plan_size_bytes
-
-    total = 0
-    for df in list(model.parts.values()) + list(model.gammas.values()):
-        b = plan_size_bytes(df)
-        if b is None:
-            return True  # unknown — default to the local-optimal shape
-        total += b
-    return total <= KN_LOOKUP_SCALE_BYTES
-
-
-def _kn_prob_chain(queries: DataFrame, model: KNModel) -> DataFrame:
-    """Per-order broadcast join chain — the small-model shape."""
+    The lookup is a chain of 2·order−1 per-order left hash joins (5 part +
+    4 gamma at order 5), one per model table. When every model table
+    broadcasts, Catalyst fuses the whole chain into ONE codegen stage with
+    zero exchanges; past the broadcast cap each link plans as a shuffle
+    join on the distinct-gram grain (OPERATORS.md §4 records why no
+    second, single-join shape is kept for that regime)."""
     n = model.order
     q = queries
     for k in range(1, n + 1):
@@ -485,77 +394,18 @@ def _kn_prob_chain(queries: DataFrame, model: KNModel) -> DataFrame:
                 on=f"_c{k}",
                 how="left",
             )
+    # Telescoped interpolation:
+    # p = part_n + g_n*(part_{n-1} + g_{n-1}*(... part_1 + gamma1 * 1/V));
+    # unseen context -> part 0, gamma 1.
+    p = F.coalesce(F.col("_p1"), F.lit(0.0)) + F.lit(model.gamma1 / model.vocab_size)
+    for k in range(2, n + 1):
+        p = F.coalesce(F.col(f"_p{k}"), F.lit(0.0)) + F.coalesce(
+            F.col(f"_g{k}"), F.lit(1.0)
+        ) * p
     drop = ["_w"] + [f"_c{k}" for k in range(1, n + 1)]
     drop += [f"_p{k}" for k in range(1, n + 1)]
     drop += [f"_g{k}" for k in range(2, n + 1)]
-    return q.withColumn("p", _kn_combine(model)).drop(*drop)
-
-
-def _kn_prob_lut(queries: DataFrame, model: KNModel) -> DataFrame:
-    """Single tagged-LUT join + pivot — the corpus-scale shape."""
-    n = model.order
-    lut = None
-    for k in range(1, n + 1):
-        pk = model.parts[k].select(
-            F.lit(k).alias("_k"),
-            F.col("ctx").alias("_ctx"),
-            F.col("w").alias("_w"),
-            F.col("part").alias("_part"),
-            F.lit(None).cast("double").alias("_gamma"),
-        )
-        lut = pk if lut is None else lut.unionByName(pk)
-        if k > 1:
-            lut = lut.unionByName(
-                model.gammas[k].select(
-                    F.lit(k).alias("_k"),
-                    F.col("ctx").alias("_ctx"),
-                    F.lit("").alias("_w"),
-                    F.lit(None).cast("double").alias("_part"),
-                    F.col("gamma").alias("_gamma"),
-                )
-            )
-
-    # Unique per-input-row key so duplicate query rows survive the pivot.
-    # monotonically_increasing_id is deterministic for a fixed partition
-    # layout and the id is dropped before returning — output VALUES never
-    # depend on it.
-    q = queries.withColumn("__qid", F.monotonically_increasing_id())
-    keys = []
-    for k in range(1, n + 1):
-        ctx = (
-            F.array_join(F.slice("gram", n - k + 1, k - 1), SEP)
-            if k > 1
-            else F.lit("")
-        )
-        keys.append(
-            F.struct(
-                F.lit(k).alias("_k"),
-                ctx.alias("_ctx"),
-                F.element_at("gram", n).alias("_w"),
-            )
-        )
-        if k > 1:
-            keys.append(
-                F.struct(
-                    F.lit(k).alias("_k"), ctx.alias("_ctx"), F.lit("").alias("_w")
-                )
-            )
-    probe = q.select("__qid", *queries.columns, F.explode(F.array(*keys)).alias("e")).select(
-        "__qid", *queries.columns, F.col("e._k").alias("_k"),
-        F.col("e._ctx").alias("_ctx"), F.col("e._w").alias("_w"),
-    )
-    hit = probe.join(lut, on=["_k", "_ctx", "_w"], how="left")
-    aggs = [
-        F.max(F.when(F.col("_k") == k, F.col("_part"))).alias(f"_p{k}")
-        for k in range(1, n + 1)
-    ] + [
-        F.max(F.when(F.col("_k") == k, F.col("_gamma"))).alias(f"_g{k}")
-        for k in range(2, n + 1)
-    ]
-    wide = hit.groupBy("__qid", *queries.columns).agg(*aggs)
-    drop = ["__qid"] + [f"_p{k}" for k in range(1, n + 1)]
-    drop += [f"_g{k}" for k in range(2, n + 1)]
-    return wide.withColumn("p", _kn_combine(model)).drop(*drop)
+    return q.withColumn("p", p).drop(*drop)
 
 
 def kn_perplexity(

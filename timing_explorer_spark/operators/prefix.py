@@ -30,7 +30,7 @@ the boundaries — offsets compensate wherever the splits land.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,128 +53,38 @@ def _require_exact_sum(df: DataFrame, value_col: str) -> None:
         )
 
 
-def _bucket_surrogate(df: DataFrame, first_col: str) -> Column | None:
-    """A numeric column MONOTONE in ``first_col``'s ordering, usable for
-    quantile-sampled bucket boundaries — or None when the type has no cheap
-    monotone numeric image (arbitrary strings). Ties introduced by the
-    mapping only merge adjacent rows into one bucket, which is always
-    correct (offsets compensate; only balance is affected)."""
-    from pyspark.sql import types as T
-
-    dt = df.schema[first_col].dataType
-    c = F.col(first_col)
-    if isinstance(dt, T.NumericType):
-        return c.cast("double")
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return c.cast("double")  # epoch seconds w/ fraction — exact to micros
-    if isinstance(dt, T.DateType):
-        return c.cast("timestamp").cast("double")
-    return None
-
-
 def _with_partition_offsets(df: DataFrame, order_cols: list[str],
                             local_col: str, n_parts: int | None,
-                            with_total: bool = False,
-                            bucket_expr: Column | None = None,
-                            shape: str = "auto") -> DataFrame:
-    """Bucket ``df`` into ``n`` order-contiguous ranges, attach __pid and the
-    exclusive per-bucket offset of ``local_col`` (sum over all earlier
-    buckets). ``local_col`` values must already be per-row (pre-scan).
+                            with_total: bool = False) -> DataFrame:
+    """Range-partition ``df`` into ``n`` order-contiguous partitions, attach
+    __pid and the exclusive per-partition offset of ``local_col`` (sum over
+    all earlier partitions). ``local_col`` values must already be per-row
+    (pre-scan).
 
-    ONE data-grain exchange (r13, guide §2.4): __pid is computed BEFORE the
-    exchange from explicit sampled quantile boundaries (percentile_approx of
-    a numeric surrogate of the leading order column — or ``bucket_expr``, a
-    caller-supplied monotone numeric image for types without one). Because
-    __pid is then a real, Catalyst-visible column, the single
-    repartitionByRange(n, __pid) satisfies BOTH downstream required
-    distributions — the local-scan window's ClusteredDistribution(__pid) and
-    the offsets groupBy — so neither inserts a second exchange. The former
-    shape (range-partition by order_cols + opaque spark_partition_id) forced
-    the window to re-shuffle the whole dataset by __pid: 2 data exchanges.
-
-    Boundary quality only affects load balance, never results: the offsets
-    compensate wherever the splits land, and every consumer's value column
-    is exactly summable (enforced in running_total). Types with no monotone
-    numeric surrogate fall back to the legacy two-exchange shape.
+    Two data-grain exchanges: the range exchange on ``order_cols``, then the
+    local-scan window's own hash exchange on __pid (the opaque
+    spark_partition_id is not a partitioning Catalyst can reuse). The offsets
+    aggregate reads the same ranged frame, so its input exchange is shared
+    via ReusedExchange when the projections align.
 
     ``with_total`` additionally attaches ``__total`` — the GRAND total of
-    ``local_col`` — computed over the same tiny per-bucket table the
-    offsets come from (one extra window over n_buckets rows, zero extra
+    ``local_col`` — computed over the same tiny per-partition table the
+    offsets come from (one extra window over n_parts rows, zero extra
     passes over the data). Consumers that need both the scan and its total
     (cumulative shares, NTILE bucket math) previously re-aggregated the
     full input a second time just for that scalar (r12, guide §2.4)."""
-    spark = df.sparkSession
-    n = n_parts or spark.sparkContext.defaultParallelism
-    surrogate = bucket_expr if bucket_expr is not None else _bucket_surrogate(
-        df, order_cols[0]
-    )
-    # ``auto`` resolves to the LEGACY shape (r13, measured negative result):
-    # the bucketed single-exchange form removes one data-grain exchange but
-    # pays for it with TWO extra evaluations of the input subtree (bounds
-    # pass + offsets leg — only the exchange BELOW the input is shared via
-    # ReusedExchange; the post-exchange operators re-run per leg) plus a
-    # per-row boundary fold. Measured same-session ABAB
-    # (scripts/bench_prefix_ab.py): sf0.1 events 0.74->1.06 s, pareto
-    # 0.96->1.28 s; sf1 events 0.89->1.21 s, pareto 2.35->4.61 s — the gap
-    # GROWS with data when the input is itself an aggregate, because the
-    # re-evaluated aggregate scales with the data while the saved exchange
-    # moves already-reduced rows. The bucketed shape remains available
-    # (shape="bucketed") for inputs where one pass is much cheaper than one
-    # shuffle (narrow pruned scans of wide tables); its bucket balance at
-    # sf1 is exact (max/mean = 1.00 on both probe datasets, committed in
-    # BENCH_r13_builder.json "prefix_skew_probe") and its output is pinned
-    # bit-identical to the legacy shape in tests/test_prefix.py.
-    if shape == "auto":
-        shape = "legacy"
-    if surrogate is not None and n > 1 and shape == "bucketed":
-        # Lazy sampled boundaries: n-1 approximate quantiles of the
-        # surrogate, one partial-aggregated pass over just that column.
-        # bucket = |boundaries <= key| — monotone in the order key, so
-        # buckets are order-contiguous; NULL keys fold to bucket 0
-        # (matching NULLS FIRST of the old range exchange).
-        bounds = df.agg(
-            F.percentile_approx(
-                surrogate, F.array(*[F.lit(i / n) for i in range(1, n)]), F.lit(10000)
-            ).alias("__bounds")
-        )
-        key = surrogate
-        pid = F.coalesce(
-            F.aggregate(
-                F.col("__bounds"),
-                F.lit(0),
-                lambda acc, b: acc + F.when(key >= b, 1).otherwise(0),
-            ),
-            F.lit(0),  # empty/all-null input -> null bounds -> one bucket
-        )
-        staged = (
-            df.crossJoin(F.broadcast(bounds)).withColumn("__pid", pid).drop("__bounds")
-        )
-        ranged = staged.repartitionByRange(n, "__pid")
-        # The offsets aggregate reads the PRE-exchange frame: __pid exists
-        # before the shuffle, so the per-bucket totals partial-aggregate to
-        # <=n rows per input split and move through their own tiny exchange —
-        # the data-grain range exchange is paid ONCE, by the scan leg only
-        # (the two legs' differently-pruned projections defeat ReusedExchange
-        # on it; the upstream input exchange and the bounds broadcast are
-        # still shared — verified in the executed plan).
-        totals = staged.groupBy("__pid").agg(F.sum(local_col).alias("__ptotal"))
-    else:
-        # Legacy two-exchange shape for order types with no monotone numeric
-        # image: range-partition by the order columns, then the window's own
-        # hash exchange on the opaque partition id.
-        ranged = df.repartitionByRange(
-            n, *[F.col(c) for c in order_cols]
-        ).withColumn("__pid", F.spark_partition_id())
-        # legacy path: __pid only exists post-exchange — both legs read the
-        # ranged frame (shared via ReusedExchange when projections align)
-        totals = ranged.groupBy("__pid").agg(F.sum(local_col).alias("__ptotal"))
+    n = n_parts or df.sparkSession.sparkContext.defaultParallelism
+    ranged = df.repartitionByRange(
+        n, *[F.col(c) for c in order_cols]
+    ).withColumn("__pid", F.spark_partition_id())
+    totals = ranged.groupBy("__pid").agg(F.sum(local_col).alias("__ptotal"))
     # No sortWithinPartitions here (r12, guide §2.2): __pid depends only on
-    # the exchange/bucket expression, the offsets aggregate is
-    # order-insensitive (every consumer's value_col is integer/long — exact
-    # under any partial-sum order), and the local-scan window re-sorts by
-    # (__pid, order_cols) itself.
-    # Tiny per-bucket totals -> exclusive cumsum over __pid. <=n rows total,
-    # so the unpartitioned window is driver-scale work.
+    # the exchange, the offsets aggregate is order-insensitive (every
+    # consumer's value_col is integer/long — exact under any partial-sum
+    # order), and the local-scan window re-sorts by (__pid, order_cols)
+    # itself.
+    # Tiny per-partition totals -> exclusive cumsum over __pid. <=n rows
+    # total, so the unpartitioned window is driver-scale work.
     w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     cols = [
         F.col("__pid"),
@@ -191,9 +101,7 @@ def _with_partition_offsets(df: DataFrame, order_cols: list[str],
 
 def running_total(df: DataFrame, order_cols: list[str], value_col: str,
                   alias: str = "running_total", n_parts: int | None = None,
-                  total_alias: str | None = None,
-                  bucket_expr: Column | None = None,
-                  shape: str = "auto") -> DataFrame:
+                  total_alias: str | None = None) -> DataFrame:
     """Globally-ordered running SUM(value_col), distributed.
 
     Equivalent to ``SUM(value_col) OVER (ORDER BY order_cols ROWS UNBOUNDED
@@ -212,8 +120,7 @@ def running_total(df: DataFrame, order_cols: list[str], value_col: str,
     """
     _require_exact_sum(df, value_col)
     staged = _with_partition_offsets(
-        df, order_cols, value_col, n_parts,
-        with_total=total_alias is not None, bucket_expr=bucket_expr, shape=shape,
+        df, order_cols, value_col, n_parts, with_total=total_alias is not None
     )
     local_w = Window.partitionBy("__pid").orderBy(*order_cols).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -228,9 +135,7 @@ def running_total(df: DataFrame, order_cols: list[str], value_col: str,
 
 def global_rank(df: DataFrame, order_cols: list[str],
                 alias: str = "rk", n_parts: int | None = None,
-                total_alias: str | None = None,
-                bucket_expr: Column | None = None,
-                shape: str = "auto") -> DataFrame:
+                total_alias: str | None = None) -> DataFrame:
     """Global ROW_NUMBER() OVER (ORDER BY order_cols), distributed.
 
     Same two-phase scan with value == 1: local row_number per range
@@ -238,9 +143,8 @@ def global_rank(df: DataFrame, order_cols: list[str],
     attaches the global row COUNT to every row (from the same offsets
     table — no extra pass; NTILE-style closed forms need it)."""
     staged = _with_partition_offsets(
-        df.withColumn("__one", F.lit(1)), order_cols, "__one",
-        n_parts, with_total=total_alias is not None, bucket_expr=bucket_expr,
-        shape=shape,
+        df.withColumn("__one", F.lit(1)), order_cols, "__one", n_parts,
+        with_total=total_alias is not None,
     )
     local_w = Window.partitionBy("__pid").orderBy(*order_cols)
     extra = [F.col("__total").alias(total_alias)] if total_alias else []

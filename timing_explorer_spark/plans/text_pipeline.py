@@ -547,13 +547,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("doc_id").cast("string")).alias("shuffle_key"),
         token_count(F.col("text")).alias("n_tokens"),
     )
-    # bucket_expr (r13): the md5 key is fixed-length lowercase hex, so its
-    # first 15 digits read as a base-16 number are a monotone numeric image
-    # — enables the single-exchange bucketed scan (operators/prefix.py)
-    running = running_total(
-        d, ["shuffle_key", "doc_id"], "n_tokens", alias="cum",
-        bucket_expr=F.conv(F.substring("shuffle_key", 1, 15), 16, 10).cast("bigint"),
-    )
+    running = running_total(d, ["shuffle_key", "doc_id"], "n_tokens", alias="cum")
     return (
         running.withColumn("cum_before", F.col("cum") - F.col("n_tokens"))
         .groupBy(F.expr(f"cum_before DIV {budget}").alias("seq_id"))
@@ -3853,12 +3847,7 @@ def corpus_assembly_stages(
         "n_tokens",
         F.md5(F.col("doc").cast("string")).alias("shuffle_key"),
     )
-    running = running_total(
-        shuffled, ["shuffle_key", "doc"], "n_tokens", alias="cum",
-        # monotone numeric image of the fixed-length hex key (r13) — takes
-        # the single-exchange bucketed-scan path in operators/prefix.py
-        bucket_expr=F.conv(F.substring("shuffle_key", 1, 15), 16, 10).cast("bigint"),
-    )
+    running = running_total(shuffled, ["shuffle_key", "doc"], "n_tokens", alias="cum")
     budget = 512
     packed = (
         running.withColumn("cum_before", F.col("cum") - F.col("n_tokens"))
