@@ -19,6 +19,40 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from timing_explorer_spark.plans import all_queries  # noqa: E402
 from timing_explorer_spark.session import get_spark  # noqa: E402
 
+# The pinned-cache layout the bench measures over: bench.py, scripts/ab.py
+# and the plan renderers pass it to warm_cache. perfbench/workloads.py keeps
+# its own copy (WARM_CACHE_ARGS), pinned equal by tests/test_warm_cache.py.
+#
+# 16 cache partitions ≈ 38k rows/task at sf0.1 for the FACT tables:
+# re-measured grid (8/16/32) after the long-units aggregation rewrite —
+# 16 is the sweet spot (the heavier agg scans benefit from scan-side
+# parallelism, while 32 pays more task-launch overhead than it
+# recovers). Small tables override it in partition_counts.
+# The fact tables are HASH-bucketed by their dominant join key — the
+# in-memory analog of a bucketed on-disk layout (warm_cache docstring):
+# with preferSortMergeJoin=false this turns lineitem⋈orders and the
+# asof-join's per-user shuffle into co-partitioned, exchange-free
+# ShuffledHashJoins (q03 0.235→0.117s, q_asof 0.174→0.117s measured).
+# events.props (raw JSON payload) is ~2/3 of the table's bytes and no
+# headline query touches it: projection-aware caching drops it from the
+# pinned copy (measured: q_events_per_window 0.131→0.094 s, q_asof
+# 0.135→0.105 s at sf0.1 — wide cold columns tax every cached batch
+# scan even when pruned at the plan level).
+# Partition counts track TABLE SIZE (r5 grid; see scripts/bench_sf1.py
+# for the full rationale): every task costs ~3-5 ms of scheduling, and
+# broadcast-hash-join builds re-scan their cached dim per execution, so
+# a 5-row region cached across 16 partitions pays 16 task launches per
+# build. Dims drop to 1-2 partitions, events (100k rows) to 4; the two
+# bucketed fact tables keep the full width so their orderkey SHJ stays
+# co-partitioned and exchange-free. Measured (same-session A/B at
+# sf0.1): q01 0.192->0.12, q03 0.192->0.15, q05 0.183->0.15 s.
+WARM_CACHE_LAYOUT = dict(
+    n_partitions=16,
+    partition_counts={"region": 1, "nation": 1, "supplier": 1, "customer": 2, "part": 2, "events": 4},
+    partition_keys={"lineitem": "l_orderkey", "orders": "o_orderkey", "events": "user_id"},
+    drop_columns={"events": ("props",)},
+)
+
 
 def bench_streaming_throughput(spark, n_events: int = 1_000_000) -> dict:
     """Replay throughput of the reference-parity streaming pipeline: N
@@ -63,8 +97,10 @@ def bench_streaming_throughput(spark, n_events: int = 1_000_000) -> dict:
 
 
 def bench_session(app_name: str = "timing-explorer-spark-bench"):
-    """The bench's SparkSession confs — shared with scripts/gen_plans.py so
-    PLANS.md always renders under the confs bench actually runs.
+    """The bench's SparkSession confs — shared with scripts/ab.py,
+    bench_registry.py and the plan renderers (gen_plans.py, explain.py,
+    capture_plans.py), so A/Bs, sweeps and PLANS.md run under the confs
+    bench actually runs.
 
     Partitioning sized to the benchmark scale (single-digit-MB fact tables
     on one node): 8 shuffle partitions keeps task-launch overhead below the
@@ -129,48 +165,7 @@ def main() -> None:
     # separately and never touch the cache.
     from timing_explorer_spark.sources.tables import warm_cache
 
-    # 16 cache partitions ≈ 38k rows/task at sf0.1 for the FACT tables:
-    # re-measured grid (8/16/32) after the long-units aggregation rewrite —
-    # 16 is the sweet spot (the heavier agg scans benefit from scan-side
-    # parallelism, while 32 pays more task-launch overhead than it
-    # recovers). Small tables override per-table below.
-    # The fact tables are HASH-bucketed by their dominant join key — the
-    # in-memory analog of a bucketed on-disk layout (warm_cache docstring):
-    # with preferSortMergeJoin=false this turns lineitem⋈orders and the
-    # asof-join's per-user shuffle into co-partitioned, exchange-free
-    # ShuffledHashJoins (q03 0.235→0.117s, q_asof 0.174→0.117s measured).
-    # events.props (raw JSON payload) is ~2/3 of the table's bytes and no
-    # headline query touches it: projection-aware caching drops it from the
-    # pinned copy (measured: q_events_per_window 0.131→0.094 s, q_asof
-    # 0.135→0.105 s at sf0.1 — wide cold columns tax every cached batch
-    # scan even when pruned at the plan level).
-    # Partition counts track TABLE SIZE (r5 grid; see scripts/bench_sf1.py
-    # for the full rationale): every task costs ~3-5 ms of scheduling, and
-    # broadcast-hash-join builds re-scan their cached dim per execution, so
-    # a 5-row region cached across 16 partitions pays 16 task launches per
-    # build. Dims drop to 1-2 partitions, events (100k rows) to 4; the two
-    # bucketed fact tables keep the full width so their orderkey SHJ stays
-    # co-partitioned and exchange-free. Measured (same-session A/B at
-    # sf0.1): q01 0.192->0.12, q03 0.192->0.15, q05 0.183->0.15 s.
-    warm_cache(
-        spark,
-        sf_dir,
-        n_partitions=16,
-        partition_counts={
-            "region": 1,
-            "nation": 1,
-            "supplier": 1,
-            "customer": 2,
-            "part": 2,
-            "events": 4,
-        },
-        partition_keys={
-            "lineitem": "l_orderkey",
-            "orders": "o_orderkey",
-            "events": "user_id",
-        },
-        drop_columns={"events": ("props",)},
-    )
+    warm_cache(spark, sf_dir, **WARM_CACHE_LAYOUT)
 
     # Steady state reuses the declared logical plan (the prepared-statement
     # analog: plan CONSTRUCTION is py4j-bound and ~0.15s/query here, pure

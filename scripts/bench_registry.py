@@ -3,8 +3,9 @@
 round's measurement sweep (guide §1: measure first).
 
 For each registry entry: plan-construction time, first execution (cold),
-and min of two further executions (warm). Runs under the exact bench.py
-session confs + warm cache so numbers reflect engine steady state.
+and min of two further executions (warm). Runs under the bench.py session
+confs and warm-cache layout, except that events.props stays cached (some
+registry queries read it), so numbers reflect engine steady state.
 
 Usage: python scripts/bench_registry.py [--sf DIR] [--json OUT] [--only a,b]
 """
@@ -31,31 +32,16 @@ def main() -> int:
     if "--only" in args:
         only = set(args[args.index("--only") + 1].split(","))
 
-    from bench import bench_session
+    from bench import WARM_CACHE_LAYOUT, bench_session
     from timing_explorer_spark.operators.dedup import release_cached
     from timing_explorer_spark.plans import all_queries
     from timing_explorer_spark.sources.tables import warm_cache
 
     spark = bench_session("bench-registry")
     spark.sparkContext.setLogLevel("ERROR")
-    warm_cache(
-        spark,
-        sf_dir,
-        n_partitions=16,
-        partition_counts={
-            "region": 1,
-            "nation": 1,
-            "supplier": 1,
-            "customer": 2,
-            "part": 2,
-            "events": 4,
-        },
-        partition_keys={
-            "lineitem": "l_orderkey",
-            "orders": "o_orderkey",
-            "events": "user_id",
-        },
-    )
+    # events.props stays cached: the sweep runs q_json_extract and
+    # q_data_profile, which read it.
+    warm_cache(spark, sf_dir, **{**WARM_CACHE_LAYOUT, "drop_columns": None})
 
     qs = all_queries()
     if only is not None:

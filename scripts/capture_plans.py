@@ -20,7 +20,7 @@ def main() -> int:
     sel = sys.argv[2] if len(sys.argv) > 2 else "--headline"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from bench import bench_session
+    from bench import WARM_CACHE_LAYOUT, bench_session
     from timing_explorer_spark.plans import all_queries
     from timing_explorer_spark.sources.tables import warm_cache
 
@@ -33,25 +33,7 @@ def main() -> int:
 
     spark = bench_session("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    warm_cache(
-        spark,
-        sf_dir,
-        n_partitions=16,
-        partition_counts={
-            "region": 1,
-            "nation": 1,
-            "supplier": 1,
-            "customer": 2,
-            "part": 2,
-            "events": 4,
-        },
-        partition_keys={
-            "lineitem": "l_orderkey",
-            "orders": "o_orderkey",
-            "events": "user_id",
-        },
-        drop_columns={"events": ("props",)},
-    )
+    warm_cache(spark, sf_dir, **WARM_CACHE_LAYOUT)
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",

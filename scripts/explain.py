@@ -40,24 +40,14 @@ def main() -> int:
         print(f"unknown query {name!r}; run with no arguments for the list")
         return 1
 
-    from bench import bench_session
+    from bench import WARM_CACHE_LAYOUT, bench_session
 
     spark = bench_session("explain")
     spark.sparkContext.setLogLevel("ERROR")
     if warm:
         from timing_explorer_spark.sources.tables import warm_cache
 
-        warm_cache(
-            spark,
-            sf_dir,
-            n_partitions=16,
-            partition_keys={
-                "lineitem": "l_orderkey",
-                "orders": "o_orderkey",
-                "events": "user_id",
-            },
-            drop_columns={"events": ("props",)},
-        )
+        warm_cache(spark, sf_dir, **WARM_CACHE_LAYOUT)
     df = qs[name].build(spark, sf_dir)
     df.explain("formatted")
     return 0

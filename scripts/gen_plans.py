@@ -3,7 +3,8 @@
 
 Reuses the WANT annotations already present in PLANS.md (the reviewed
 property per query) and re-renders each plan tree under the CURRENT bench
-session confs, so the doc never drifts from what bench.py actually runs.
+session confs and warm-cache layout (bench.WARM_CACHE_LAYOUT), so the doc
+never drifts from what bench.py actually runs.
 
 Usage: python scripts/gen_plans.py   (writes /root/repo/PLANS.md in place)
 """
@@ -22,9 +23,11 @@ Per the build rule "explain every operator and iterate until it's the plan
 you'd want": the tree below each query is the physical plan under the bench
 session (8 shuffle partitions, 32 MB broadcast threshold, AQE off at this
 micro-scale, ShuffledHashJoin preferred over SortMergeJoin when the build
-side fits — see bench.py), with the fact tables warm-cached HASH-BUCKETED
-by their dominant join key as bench.py runs them (at sf0.1 the filtered
-dims still broadcast; the co-partitioned exchange-free SHJ shapes appear at
+side fits — see bench.py), over bench.py's warm cache
+(`WARM_CACHE_LAYOUT`): fact tables HASH-BUCKETED by their dominant join
+key, partition counts sized per table (dims 1-2, events 4, facts 16) and
+`events.props` dropped from the pinned copy (at sf0.1 the filtered dims
+still broadcast; the co-partitioned exchange-free SHJ shapes appear at
 sf1 — scripts/bench_sf1.py). The WANT line records the property the plan
 was reviewed against; plan-shape tests in `tests/test_plans_scale.py`
 enforce the load-bearing ones in CI. Regenerate with
@@ -58,28 +61,18 @@ def main() -> None:
     out_path = os.path.join(repo, "PLANS.md")
     wants = existing_wants(out_path)
 
-    from bench import bench_session
+    from bench import WARM_CACHE_LAYOUT, bench_session
     from timing_explorer_spark.plans import all_queries
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = bench_session(app_name="gen-plans")  # same confs as bench.py
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Mirror bench.py's warm cache (incl. the fact tables bucketed by join
-    # key) so the rendered plans are the ones bench actually measures —
-    # co-partitioned ShuffledHashJoins appear only with this layout.
+    # bench.py's warm-cache layout, so the rendered plans are the ones bench
+    # actually measures — co-partitioned ShuffledHashJoins appear only with it.
     from timing_explorer_spark.sources.tables import warm_cache
 
-    warm_cache(
-        spark,
-        sf_dir,
-        n_partitions=16,
-        partition_keys={
-            "lineitem": "l_orderkey",
-            "orders": "o_orderkey",
-            "events": "user_id",
-        },
-    )
+    warm_cache(spark, sf_dir, **WARM_CACHE_LAYOUT)
 
     # Headline queries plus reviewed non-headline plans worth documenting
     # (scale-critical shapes: skew, broadcast semi-join, decorrelation).

@@ -4,6 +4,10 @@ prunes safely, and drop_warm_cache restores the on-disk view."""
 
 from __future__ import annotations
 
+import ast
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,3 +112,20 @@ def test_warm_cache_per_table_partition_counts(spark):
         assert li.count() == disk_counts["lineitem"]
     finally:
         drop_warm_cache(spark, SF)
+
+
+def test_benchmark_layout_matches_bench():
+    """perfbench keeps its own copy of the pinned-cache layout (it may not
+    import bench.py); it must stay equal to bench.WARM_CACHE_LAYOUT."""
+    root = Path(__file__).resolve().parent.parent
+    tree = ast.parse((root / "perfbench" / "workloads.py").read_text())
+    (call,) = [
+        node.value
+        for node in tree.body
+        if isinstance(node, ast.Assign) and [t.id for t in node.targets] == ["WARM_CACHE_ARGS"]
+    ]
+    perfbench_args = {kw.arg: ast.literal_eval(kw.value) for kw in call.keywords}
+    sys.path.insert(0, str(root))
+    from bench import WARM_CACHE_LAYOUT
+
+    assert perfbench_args == WARM_CACHE_LAYOUT

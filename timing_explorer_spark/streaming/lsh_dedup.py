@@ -110,16 +110,6 @@ from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 _SEED = 42  # matches operators/dedup.py::minhash_signatures
 
-# cost-attribution probe knobs (scripts/bench only — NOT a user surface):
-# _PROBE_TINY_DIGEST ships a 2-byte constant instead of the slot digest
-# (isolates payload BYTES); _PROBE_NO_DIGEST ships NULL (isolates the
-# per-row PyBytes object allocation + all digest state work — occupants
-# are never stored, so this is an upper bound on any payload/state fix).
-# est-J never matches under either, so only meaningful on no-collision
-# corpora.
-_PROBE_TINY_DIGEST = False
-_PROBE_NO_DIGEST = False
-
 
 def row_local_signature(text: Column, num_perm: int = 64, n: int = 3) -> Column:
     """array<bigint>[num_perm] MinHash signature as ONE row-local expression
@@ -869,13 +859,7 @@ def minhash_dedup_stream(
             "doc",
             "ev_ts",
             "sig",
-            (
-                F.lit(None).cast("binary")
-                if _PROBE_NO_DIGEST
-                else F.lit(b"\x00\x00")
-                if _PROBE_TINY_DIGEST
-                else slot_digests(F.col("sig"), num_perm)
-            ).alias("dig"),
+            slot_digests(F.col("sig"), num_perm).alias("dig"),
         )
         r = num_perm // bands
         rb = 8 * r  # bytes per band slice
@@ -932,9 +916,7 @@ def minhash_dedup_stream(
             ).alias("bucket"),
         )
         scored = banded.groupBy("mk", "bucket").transformWithStateInPandas(
-            _BandVerifyProcessor(
-                float(verify), horizon_ms, 1 if _PROBE_TINY_DIGEST else num_perm
-            ),
+            _BandVerifyProcessor(float(verify), horizon_ms, num_perm),
             outputStructType="doc long, ev_ts timestamp, val int",
             outputMode="append",
             timeMode="eventTime",
