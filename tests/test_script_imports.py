@@ -2,8 +2,8 @@
 
 Scripts are not imported by any other test, so deleting an operator helper
 can leave a script that only fails when someone runs it. This walks the
-source of ``scripts/*.py``, ``bench.py`` and ``__spark_entry__.py`` (no
-execution, no Spark session) and resolves each
+source of ``scripts/*.py``, ``perfbench/*.py``, ``bench.py`` and
+``__spark_entry__.py`` (no execution, no Spark session) and resolves each
 ``from timing_explorer_spark... import name`` — including imports nested
 inside functions — against the package as it is now. ``from bench import
 name`` in a script resolves against ``bench.py``'s top-level definitions.
@@ -21,7 +21,11 @@ PACKAGE = "timing_explorer_spark"
 
 
 def _sources() -> list[Path]:
-    return sorted(ROOT.glob("scripts/*.py")) + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    return (
+        sorted(ROOT.glob("scripts/*.py"))
+        + sorted(ROOT.glob("perfbench/*.py"))
+        + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    )
 
 
 def _top_level_names(path: Path) -> set[str]:

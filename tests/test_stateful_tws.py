@@ -35,28 +35,8 @@ from timing_explorer_spark.streaming.pipeline import (
     sensor_stream_from_files,
     write_generator_files,
 )
-from timing_explorer_spark.streaming.state import rocksdb_state_conf
 
 N_EVENTS = 300
-
-
-@pytest.fixture(scope="module")
-def tws_spark(spark):
-    """TWS requires the RocksDB state store provider; session confs are
-    runtime-settable and scoped to these tests."""
-    saved = {}
-    for k, v in rocksdb_state_conf().items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    yield spark
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
 
 
 def _run(spark, df, out, ckpt):
@@ -71,11 +51,11 @@ def _run(spark, df, out, ckpt):
     q.awaitTermination()
 
 
-def test_tws_exactly_ten_and_parity(tws_spark, tmp_path):
+def test_tws_exactly_ten_and_parity(rocksdb_spark, tmp_path):
     from timing_explorer_spark.streaming.pipeline import event_time_windows
     from timing_explorer_spark.streaming.stateful_tws import pseudo_window_tws
 
-    spark = tws_spark
+    spark = rocksdb_spark
     data = str(tmp_path / "input")
     write_generator_files(spark, data, n_events=N_EVENTS, files=6)
 
@@ -98,13 +78,13 @@ def test_tws_exactly_ten_and_parity(tws_spark, tmp_path):
     assert tws_n.exceptAll(decl).count() == 0
 
 
-def test_tws_initial_state_rehydration(tws_spark, tmp_path):
+def test_tws_initial_state_rehydration(rocksdb_spark, tmp_path):
     """WindowBootstrapper parity: seed per-key open windows offline, then
     stream the matching tail — rehydrated counts + new events must close the
     seeded window at exactly 10."""
     from timing_explorer_spark.streaming.stateful_tws import pseudo_window_tws
 
-    spark = tws_spark
+    spark = rocksdb_spark
     data = str(tmp_path / "input")
     # Events 5..N: the first window (ending at +999 ms) is missing its first
     # 5 events (0-4). Seed those 5 into initial state per key.
@@ -141,7 +121,7 @@ def test_tws_initial_state_rehydration(tws_spark, tmp_path):
     assert len(seeded) == 2, f"seeded window not closed: {seeded}"
 
 
-def test_tws_state_reader_open_windows(tws_spark, tmp_path):
+def test_tws_state_reader_open_windows(rocksdb_spark, tmp_path):
     """PseudoWindowReaderFunction parity on the TWS operator: after a run
     whose final window the 0-lag watermark holds open, the statestore reader
     decodes the 'windows' MapState to exactly that open (key, end, count)
@@ -151,7 +131,7 @@ def test_tws_state_reader_open_windows(tws_spark, tmp_path):
         read_tws_window_state,
     )
 
-    spark = tws_spark
+    spark = rocksdb_spark
     data = str(tmp_path / "input")
     # 95 events/key at 100 ms -> windows 0..8 close; window 9 holds 5 events
     write_generator_files(spark, data, n_events=95, files=2)
@@ -169,7 +149,7 @@ def test_tws_state_reader_open_windows(tws_spark, tmp_path):
     }
 
 
-def test_tws_proctime_conserves_counts(tws_spark, tmp_path):
+def test_tws_proctime_conserves_counts(rocksdb_spark, tmp_path):
     """Processing-time PseudoWindow on TWS runtime timers
     (PseudoWindow.java:79-90, timeMode=processingTime): window assignment is
     non-deterministic by design, the per-key total is conserved once the
@@ -178,7 +158,7 @@ def test_tws_proctime_conserves_counts(tws_spark, tmp_path):
 
     from timing_explorer_spark.streaming.stateful_tws import pseudo_window_tws_proctime
 
-    spark = tws_spark
+    spark = rocksdb_spark
     data = str(tmp_path / "input")
     write_generator_files(spark, data, n_events=100, files=2)
     q = (

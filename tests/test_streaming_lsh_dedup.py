@@ -20,7 +20,6 @@ from timing_explorer_spark.streaming.lsh_dedup import (
     minhash_dedup_stream,
     row_local_signature,
 )
-from timing_explorer_spark.streaming.state import rocksdb_state_conf
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -37,25 +36,6 @@ def _narrow_state_partitions(spark):
     yield
     spark.conf.set("spark.sql.shuffle.partitions", saved)
 
-
-@pytest.fixture(scope="module")
-def tws_spark(spark):
-    """verify-mode dedup rides transformWithStateInPandas, which requires
-    the RocksDB state store provider; session confs are runtime-settable
-    and scoped to these tests (same pattern as tests/test_stateful_tws.py)."""
-    saved = {}
-    for k, v in rocksdb_state_conf().items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    yield spark
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
 
 NUM_PERM, BANDS, N = 64, 16, 3
 
@@ -268,8 +248,8 @@ def test_same_batch_duplicates_default_mode(spark, tmp_path):
     assert len(unique) + len(routed) == 2
 
 
-def test_verify_mode_same_batch_first_wins(tws_spark, tmp_path):
-    spark = tws_spark
+def test_verify_mode_same_batch_first_wins(rocksdb_spark, tmp_path):
+    spark = rocksdb_spark
     """verify mode processes each band bucket's batch rows in (ts, doc)
     order -> deterministic: the first copy is unique, the second fully
     suppressed (no verdict row) — no mutual strip, ever."""
@@ -283,8 +263,8 @@ def test_verify_mode_same_batch_first_wins(tws_spark, tmp_path):
     assert 2 not in got  # all bands verified-collided: hard duplicate
 
 
-def test_verify_mode_rescues_band_collision_fp(tws_spark, tmp_path):
-    spark = tws_spark
+def test_verify_mode_rescues_band_collision_fp(rocksdb_spark, tmp_path):
+    spark = rocksdb_spark
     """The precision gap verify mode closes: a merely-similar document that
     shares >=1 LSH band with an earlier doc is marked non-unique by the
     default mode (silent data loss if consumers drop it) but is rescued by
@@ -312,8 +292,8 @@ def test_verify_mode_rescues_band_collision_fp(tws_spark, tmp_path):
     # FPDOC rescue above; both sides of the threshold are now pinned
 
 
-def test_verify_bucket_collisions_safe(tws_spark, tmp_path):
-    spark = tws_spark
+def test_verify_bucket_collisions_safe(rocksdb_spark, tmp_path):
+    spark = rocksdb_spark
     """r8: verify-mode state keys are BUCKETED (pmod(hash, state_buckets))
     to amortize state RPCs. Exact (band_idx, band_hash) / full-signature
     matching happens inside the processors, so forcing EVERY key into ONE
@@ -337,8 +317,8 @@ def test_verify_bucket_collisions_safe(tws_spark, tmp_path):
     assert got[11]["is_unique"] is True
 
 
-def test_verify_mode_state_evicts_after_horizon(tws_spark, tmp_path):
-    spark = tws_spark
+def test_verify_mode_state_evicts_after_horizon(rocksdb_spark, tmp_path):
+    spark = rocksdb_spark
     """Bounded state holds in verify mode too: the signature store evicts
     past the watermark horizon, so a late copy re-classifies unique."""
     batches = [

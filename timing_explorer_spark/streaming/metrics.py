@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from .pipeline import event_time_windows
+
 
 def observed(df: DataFrame, name: str = "datapoints") -> DataFrame:
     """Attach the reference's 'datapoints' counter as a named observation."""
@@ -104,13 +106,7 @@ def prometheus_metrics_conf(ui_port: int = 4040) -> dict[str, str]:
     }
 
 
-def live_rate_windows(
-    spark,
-    rows_per_second: int,
-    duration: str = "1 second",
-    watermark: str = "0 seconds",
-    n_keys: int = 2,
-) -> DataFrame:
+def live_rate_windows(spark, rows_per_second: int) -> DataFrame:
     """The reference pipeline shape driven by a LIVE wall-clock source: the
     ``rate`` source stamps each row with its generation time, so event time
     is real wall time and sink-side event-time lag is a real latency. Keys
@@ -124,19 +120,10 @@ def live_rate_windows(
         .load()
         .select(
             F.col("timestamp").alias("ts"),
-            F.concat(F.lit("key-"), (F.col("value") % n_keys)).alias("key"),
+            F.concat(F.lit("key-"), (F.col("value") % 2)).alias("key"),
         )
     )
-    return (
-        base.withWatermark("ts", watermark)
-        .groupBy("key", F.window("ts", duration).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "key",
-            (F.col("w.end") - F.expr("INTERVAL 1 MILLISECOND")).alias("window_end_label"),
-            "n_events",
-        )
-    )
+    return event_time_windows(base)
 
 
 def nearest_rank(sorted_vals: list[float], p: float) -> float | None:
@@ -154,7 +141,6 @@ def measure_event_time_lag(
     rows_per_second: int,
     run_seconds: float = 12.0,
     trigger_ms: int = 500,
-    checkpoint_dir: str | None = None,
     settle_seconds: float = 0.0,
 ) -> dict[str, Any]:
     """Drive the live-rate pipeline for ``run_seconds`` and collect the
@@ -178,6 +164,7 @@ def measure_event_time_lag(
     the query's progress events: the structural lag floor is
     ~window_size + trigger + batch time, so these let a reader separate
     scheduling load (batch time) from pipeline latency."""
+    import shutil
     import tempfile
     import time as _time
 
@@ -192,7 +179,7 @@ def measure_event_time_lag(
             if settled:
                 lags.append(float(r["event_time_lag_ms"]))
 
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="lag-bench-ckpt-")
+    ckpt = tempfile.mkdtemp(prefix="lag-bench-ckpt-")
     q = (
         live_rate_windows(spark, rows_per_second)
         .writeStream.foreachBatch(sink)
@@ -216,6 +203,7 @@ def measure_event_time_lag(
             batch_ms = []
         q.stop()
         q.awaitTermination()
+        shutil.rmtree(ckpt, ignore_errors=True)
     lags.sort()
 
     def pct(p: float) -> float | None:

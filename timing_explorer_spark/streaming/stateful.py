@@ -1,38 +1,14 @@
-"""PseudoWindow, low-level parity: per-key MapState + event-time timers.
+"""Streaming time-weighted-average front half on applyInPandasWithState.
 
-The declarative path (pipeline.event_time_windows) is the idiomatic Spark
-answer for the reference's keyed tumbling count window. This module is the
-*operator-level* re-expression of PseudoWindow itself
-(/root/reference/src/main/java/com/ververica/functions/PseudoWindow.java:33-100):
-
-  reference                                this module
-  ---------------------------------------  -----------------------------------
-  MapState<Long,Integer> window→count      GroupState rows (window_end, count)
-    (PseudoWindow.java:36,52-56)
-  processElement: bucket event, increment  data invocation of the pandas fn
-    (PseudoWindow.java:58-72)
-  registerEventTimeTimer(window end)       GroupState.setTimeoutTimestamp
-    (PseudoWindow.java:88-90)                (event-time timeout)
-  onTimer: emit KeyedDataPoint, clear key  timeout/watermark sweep: emit rows
-    (PseudoWindow.java:92-99)                with end <= watermark, drop them
-
-Window identity matches the reference's end-INCLUSIVE millisecond label:
-``end = t - t % duration + duration - 1`` (PseudoWindow.java:74-84).
-
-Why applyInPandasWithState and not timers-per-window: Spark exposes ONE
-timeout per key (not one per registered timestamp), so the operator keeps the
-earliest open window end as the timeout and re-arms after each sweep — the
-standard translation of Flink's multi-timer pattern onto GroupState.
-
-Scale: state is hash-partitioned by key (same shuffle as the reference's
-keyBy, TimingExplorer.java:89); per key it holds only OPEN windows (closed
-ones are emitted and dropped), so state size is O(keys x open windows), not
-O(events) — identical to the reference's MapState footprint.
+``twa_segments`` keeps (last_ts, last_value) per key and emits one LOCF
+holding segment per arriving event; any time-bucketed
+sum(held_value * dt) / sum(dt) downstream is the TWA. The operator-level
+PseudoWindow lives in ``stateful_tws.py``.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Any, Iterable, Iterator
+from typing import TYPE_CHECKING, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -47,211 +23,6 @@ from pyspark.sql.types import (
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("window_end_label", TimestampType()),
-        StructField("value", LongType()),
-    ]
-)
-
-# MapState<windowEnd, count> flattened into parallel arrays (GroupState rows
-# are a fixed StructType; arrays are the supported encoding of a small map).
-STATE_SCHEMA = StructType(
-    [
-        StructField("ends", StringType()),  # csv of window-end ms (tiny: open windows only)
-        StructField("counts", StringType()),
-    ]
-)
-
-
-def _decode(state_row) -> dict[int, int]:
-    if state_row is None or not state_row[0]:
-        return {}
-    ends = [int(x) for x in state_row[0].split(",")]
-    counts = [int(x) for x in state_row[1].split(",")]
-    return dict(zip(ends, counts))
-
-
-def _encode(windows: dict[int, int]) -> tuple[str, str]:
-    items = sorted(windows.items())
-    return (
-        ",".join(str(e) for e, _ in items),
-        ",".join(str(c) for _, c in items),
-    )
-
-
-def make_pseudo_window_fn(duration_ms: int = 1000):
-    """Build the (key, pdf_iter, state) function for applyInPandasWithState."""
-
-    def fn(
-        key: tuple[str],
-        pdfs: Iterable["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        windows = _decode(state.get) if state.exists else {}
-
-        if not state.hasTimedOut:
-            for pdf in pdfs:
-                # Bucket each event: end-inclusive window id (PseudoWindow.java:82).
-                ts_ms = (pdf["ts"].astype("int64") // 1_000_000).to_numpy()
-                ends = ts_ms - (ts_ms % duration_ms) + duration_ms - 1
-                uniq, cnt = __import__("numpy").unique(ends, return_counts=True)
-                for e, c in zip(uniq.tolist(), cnt.tolist()):
-                    windows[e] = windows.get(e, 0) + int(c)
-
-        # Timer sweep (onTimer parity): close every window the watermark has
-        # passed. Watermark is in ms; window end is inclusive, so a window
-        # closes when watermark > end.
-        wm = state.getCurrentWatermarkMs()
-        closed = sorted(e for e in windows if e < wm)
-        out = None
-        if closed:
-            out = pd.DataFrame(
-                {
-                    "key": [key[0]] * len(closed),
-                    "window_end_label": pd.to_datetime(closed, unit="ms"),
-                    "value": [windows.pop(e) for e in closed],
-                }
-            )
-
-        if windows:
-            state.update(_encode(windows))
-            # Re-arm the single per-key timer at the earliest open window end
-            # (+1 ms: timeout fires when watermark PASSES the inclusive end).
-            state.setTimeoutTimestamp(min(windows) + 1)
-        elif state.exists:
-            state.remove()
-
-        if out is not None:
-            yield out
-
-    return fn
-
-
-def pseudo_window_stateful(
-    sensors: DataFrame,
-    duration_ms: int = 1000,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Keyed tumbling count windows via explicit keyed state + timers —
-    output-compatible with pipeline.event_time_windows (same schema, same
-    end-inclusive labels), for backend/declarative parity tests."""
-    return (
-        sensors.withWatermark("ts", watermark)
-        .groupBy("key")
-        .applyInPandasWithState(
-            make_pseudo_window_fn(duration_ms),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def make_pseudo_window_proctime_fn(duration_ms: int = 1000):
-    """Processing-time PseudoWindow (PseudoWindow.java:79-90's
-    ``useProcessingTime`` branch): events are bucketed by their ARRIVAL time
-    at the operator, a per-key processing-time timer fires at the window end,
-    and the count is emitted from the timer callback — non-deterministic by
-    design, exactly like the reference (the assigned window depends on when
-    the event physically arrives).
-
-    GroupState gives one timeout per key, so as in the event-time operator
-    the timer is kept at the earliest open window end and re-armed after
-    every sweep (the multi-timer → single-timeout translation)."""
-
-    def fn(
-        key: tuple[str],
-        pdfs: Iterable["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        windows = _decode(state.get) if state.exists else {}
-        now_ms = state.getCurrentProcessingTimeMs()
-
-        if not state.hasTimedOut:
-            n = 0
-            for pdf in pdfs:
-                n += len(pdf)
-            if n:
-                # All rows in this invocation arrive NOW (processElement's
-                # ctx.timerService().currentProcessingTime()).
-                end = now_ms - (now_ms % duration_ms) + duration_ms - 1
-                windows[end] = windows.get(end, 0) + n
-
-        # onTimer parity: close every window whose inclusive end has passed.
-        closed = sorted(e for e in windows if e < now_ms)
-        out = None
-        if closed:
-            out = pd.DataFrame(
-                {
-                    "key": [key[0]] * len(closed),
-                    "window_end_label": pd.to_datetime(closed, unit="ms"),
-                    "value": [windows.pop(e) for e in closed],
-                }
-            )
-
-        if windows:
-            state.update(_encode(windows))
-            state.setTimeoutDuration(max(1, min(windows) + 1 - now_ms))
-        elif state.exists:
-            state.remove()
-
-        if out is not None:
-            yield out
-
-    return fn
-
-
-def pseudo_window_proctime(sensors: DataFrame, duration_ms: int = 1000) -> DataFrame:
-    """Keyed tumbling PROCESSING-time count windows with real per-key timers
-    (GroupStateTimeout.ProcessingTimeTimeout) — the timer-based analog of the
-    reference's proc-time mode; pipeline.processing_time_windows remains the
-    deterministic-ish foreachBatch alternative. No watermark: processing time
-    needs none (late data cannot exist)."""
-    return (
-        sensors.groupBy("key").applyInPandasWithState(
-            make_pseudo_window_proctime_fn(duration_ms),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
-def read_state_rows(spark, checkpoint_dir: str, **options: str) -> DataFrame:
-    """ChangeBackend read-path parity for the stateful operator: decode the
-    operator's GroupState rows from a checkpoint via the Spark 4 statestore
-    reader into (key, window_end_label, count) — the same view
-    PseudoWindowReaderFunction produces from a savepoint
-    (jobs/ChangeBackend.java:48-69)."""
-    from pyspark.sql import functions as F
-
-    reader = spark.read.format("statestore")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    raw = reader.load(checkpoint_dir)
-    ends = F.split(F.col("value.ends"), ",").cast("array<long>")
-    counts = F.split(F.col("value.counts"), ",").cast("array<long>")
-    return (
-        raw.select(
-            F.col("key.key").alias("key"),
-            F.explode(F.arrays_zip(ends.alias("e"), counts.alias("c"))).alias("wc"),
-        )
-        .select(
-            "key",
-            F.timestamp_millis(F.col("wc.e")).alias("window_end_label"),
-            F.col("wc.c").alias("count"),
-        )
-    )
-
 
 TWA_OUTPUT_SCHEMA = StructType(
     [

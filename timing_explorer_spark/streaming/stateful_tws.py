@@ -15,19 +15,20 @@ offers (SURVEY §2 rows 8, 13-14):
     re-register timers from a savepoint                  an initialState
     (ChangeBackend.java:125-154)                         GroupedData
 
-applyInPandasWithState (streaming/stateful.py) emulates multi-timer with a
-single earliest-deadline timeout; this module needs no emulation — the TWS
-runtime tracks every registered timer. Requires the RocksDB state store
-provider (streaming/state.py::rocksdb_state_conf), which is also the
-reference's target backend — ChangeBackend's entire migration job reduces to
-that one config plus this initial-state hook.
+Requires the RocksDB state store provider
+(streaming/state.py::rocksdb_state_conf), which is also the reference's
+target backend — ChangeBackend's entire migration job reduces to that one
+config plus this initial-state hook.
+
+One processor serves both time modes: ``ProcTimePseudoWindowProcessor``
+only re-buckets input by processing time; state, timers and emission are
+shared.
 
 NOTE: the TWS Python runner imports protobuf. On images without it, the
 repo's vendored minimal proto3 runtime (compat.ensure_protobuf(),
 ``_vendor/google/protobuf``) supplies the wire codec, so
 tests/test_stateful_tws.py runs everywhere; a real protobuf install always
-takes precedence. applyInPandasWithState (streaming/stateful.py) remains the
-protobuf-free stateful path.
+takes precedence.
 """
 
 from __future__ import annotations
@@ -41,11 +42,20 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
     TimerValues,
 )
+from pyspark.sql.types import LongType, StringType, StructField, StructType, TimestampType
 
-from .stateful import OUTPUT_SCHEMA
+from .state import read_window_state
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
+
+OUTPUT_SCHEMA = StructType(
+    [
+        StructField("key", StringType()),
+        StructField("window_end_label", TimestampType()),
+        StructField("value", LongType()),
+    ]
+)
 
 
 class PseudoWindowProcessor(StatefulProcessor):
@@ -117,23 +127,18 @@ def read_tws_window_state(spark, checkpoint_dir: str) -> DataFrame:
     """PseudoWindowReaderFunction parity over the TWS operator
     (ChangeBackend.java:48-69): every (key, window_end, count) entry of the
     'windows' MapState, read offline from the checkpoint via the Spark 4
-    statestore source — no emulation, the reader decodes the named TWS state
-    variable natively."""
+    statestore source; the reader decodes the named TWS state variable
+    natively."""
     from pyspark.sql import functions as F
 
-    raw = (
-        spark.read.format("statestore")
-        .option("stateVarName", "windows")
-        .load(checkpoint_dir)
-    )
-    return raw.select(
+    return read_window_state(spark, checkpoint_dir, stateVarName="windows").select(
         F.col("key.key").alias("key"),
         F.timestamp_millis(F.col("user_map_key.end")).alias("window_end_label"),
         F.col("user_map_value.cnt").alias("count"),
     )
 
 
-class ProcTimePseudoWindowProcessor(StatefulProcessor):
+class ProcTimePseudoWindowProcessor(PseudoWindowProcessor):
     """PseudoWindow, processing-time mode (PseudoWindow.java:79-90): rows
     bucket into the CURRENT processing-time window — deliberately
     non-deterministic per window (the reference's teaching point) while the
@@ -141,13 +146,6 @@ class ProcTimePseudoWindowProcessor(StatefulProcessor):
     end emits-and-clears it. Direct analog of the reference's
     ``registerProcessingTimeTimer`` branch on TWS's ``timeMode=
     processingTime`` runtime timers."""
-
-    def __init__(self, duration_ms: int = 1000) -> None:
-        self.duration_ms = duration_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.handle = handle
-        self.windows = handle.getMapState("windows", "end long", "cnt long")
 
     def handleInputRows(
         self, key, rows, timerValues: TimerValues
@@ -157,33 +155,9 @@ class ProcTimePseudoWindowProcessor(StatefulProcessor):
             return iter(())
         now = timerValues.getCurrentProcessingTimeInMs()
         end = now - (now % self.duration_ms) + self.duration_ms - 1
-        k = (end,)
-        cur = self.windows.getValue(k)[0] if self.windows.containsKey(k) else 0
-        self.windows.updateValue(k, (cur + n,))
+        self._bump(end, n)
         self.handle.registerTimer(end + 1)
         return iter(())
-
-    def handleExpiredTimer(
-        self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        end = expiredTimerInfo.getExpiryTimeInMs() - 1
-        k = (end,)
-        if not self.windows.containsKey(k):
-            return iter(())
-        cnt = self.windows.getValue(k)[0]
-        self.windows.removeKey(k)
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "window_end_label": pd.to_datetime([end], unit="ms"),
-                "value": [int(cnt)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
 
 
 def pseudo_window_tws_proctime(sensors: DataFrame, duration_ms: int = 1000) -> DataFrame:
@@ -207,7 +181,7 @@ def pseudo_window_tws(
 
     ``initial_state``: optional (key, window_end_ms, count) DataFrame to
     rehydrate before the first batch — the savepoint-bootstrap path. Output
-    schema matches the declarative and applyInPandasWithState variants."""
+    schema matches pipeline.event_time_windows."""
     grouped_init = initial_state.groupBy("key") if initial_state is not None else None
     return (
         sensors.withWatermark("ts", watermark)
