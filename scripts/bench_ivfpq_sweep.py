@@ -28,7 +28,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
-from make_sf10 import make_sf10  # noqa: E402
+from make_sf1 import make_sf10  # noqa: E402
 
 N_CENTROIDS = 64
 K_SUB = 64

@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # must be set before the JVM launches.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
-from make_sf10 import make_sf10  # noqa: E402
+from make_sf1 import make_sf10  # noqa: E402
 
 WEAK4 = (
     "q01_pricing_summary",
@@ -244,7 +244,7 @@ def main() -> None:
                 "metric": "sf10_decider",
                 "unit": "sec",
                 "sf": 10.0,
-                "note": "100x-tiled sf0.1 (scripts/make_sf10.py); interleaved S1 D1 S2 D2 blocks (min-of-3 each), both engines 32 threads, duckdb native tables",
+                "note": "100x-tiled sf0.1 (scripts/make_sf1.py --sf10); interleaved S1 D1 S2 D2 blocks (min-of-3 each), both engines 32 threads, duckdb native tables",
                 "levers": {
                     "broadcast_mb": bcast_mb,
                     "cache_compressed": compressed,

@@ -32,7 +32,7 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
-from make_sf10 import make_sf10  # noqa: E402
+from make_sf1 import make_sf10  # noqa: E402
 
 # (name, builder) — components run over the MINHASH candidate pairs, not
 # the exact inverted-index pairs: at 100-copy dup groups every shingle has

@@ -1,14 +1,21 @@
 #!/usr/bin/env python
-"""Generate an sf1-scale fixture by tiling the sf0.1 test data 10x.
+"""Generate the sf1 and sf10 fixtures by tiling the sf0.1 test data.
 
-Purpose (round-3 verdict directive #2): the five stage-floor-dominated
-headline queries are sub-0.3s absolute at sf0.1 — below Spark's ~0.1s
-stage-launch floor — so the per-query "within 2x of DuckDB" gate cannot be
-decided at that scale. This script builds a 10x fixture (lineitem 6M rows,
-orders 1.5M, events 1M) so scripts/bench_sf1.py can demonstrate where the
-crossover actually lands, with BOTH engines reading the SAME parquet.
+sf1 (10 replicas, every table): the five stage-floor-dominated headline
+queries are sub-0.3s absolute at sf0.1 — below Spark's ~0.1s stage-launch
+floor — so the per-query "within 2x of DuckDB" gate cannot be decided at
+that scale. The 10x fixture (lineitem 6M rows, orders 1.5M, events 1M) lets
+scripts/bench_sf1.py show where the crossover actually lands, with BOTH
+engines reading the SAME parquet.
 
-Construction: each fact/dim table is the union of 10 key-shifted replicas
+sf10 (100 replicas, every table but part, ~2.5 GB): at sf0.1/sf1 the
+remaining >2x-of-DuckDB headliners (q01, q03, q05, q_events_per_window) are
+partially masked by the local-mode scheduling floor (measured 0.086-0.18 s,
+comparable to their whole runtime). At sf10 (lineitem 60M rows) the floor is
+<5% of runtime, so the Spark-vs-DuckDB ratio measures per-row throughput
+(scripts/bench_sf10.py, bench_sf10_llm.py, bench_ivfpq_sweep.py).
+
+Construction: each fact/dim table is the union of key-shifted replicas
 (keys += replica * 10_000_000; all other columns unchanged), so every join
 relationship of the original data is preserved exactly and per-key
 cardinalities stay identical — output sizes scale linearly, join fan-outs do
@@ -20,8 +27,9 @@ perturbation (near-duplicate vectors, not exact copies — see EMB_PERTURB).
 DuckDB writes the parquet (multi-row-group files, so Spark's scan
 parallelizes naturally — unlike the single-row-group driver fixtures).
 
-Usage: python scripts/make_sf1.py [out_dir]   (default /tmp/sf1-fixture)
-Idempotent: skips generation if out_dir already has all tables.
+Usage: python scripts/make_sf1.py [out_dir]          (default /tmp/sf1-fixture)
+       python scripts/make_sf1.py --sf10 [out_dir]   (default /tmp/sf10-fixture)
+Idempotent: skips any table whose tiled row count is already right.
 """
 
 from __future__ import annotations
@@ -32,7 +40,6 @@ import sys
 
 SRC = "/root/testdata/sf0.1"
 SHIFT = 10_000_000
-N_REPLICAS = 10
 
 # table -> key columns to shift per replica
 SHIFTED = {
@@ -42,23 +49,27 @@ SHIFTED = {
     "part": ("p_partkey",),
     "supplier": ("s_suppkey",),
     "events": ("event_id", "user_id"),
-    # documents tile too (r4 verdict task #4 — scale evidence for the LLM
-    # heavy ops): doc_id shifts per replica, text kept VERBATIM, so the
-    # corpus models a heavily-duplicated crawl (every doc has 10 copies) —
-    # the realistic adversarial shape for dedup: exact-dup groups of 10,
-    # dense near-dup candidate clusters, connected components that merge
-    # replicas. 50k docs / ~10x the shingle index of sf0.1.
+    # documents: doc_id shifts per replica, text kept VERBATIM, so the
+    # corpus models a heavily-duplicated crawl (every doc has one copy per
+    # replica) — the realistic adversarial shape for dedup: exact-dup
+    # groups, dense near-dup candidate clusters, connected components that
+    # merge replicas.
     "documents": ("doc_id",),
 }
+# sf10 carries only the tables its benches read
+SF10_TABLES = tuple(t for t in SHIFTED if t != "part")
 COPIED = ("region", "nation")
 # embeddings tile specially: vec_id shifts AND each replica's vector is
 # deterministically perturbed (x + r*0.001 per element) so replicas are
 # NEAR-duplicates in cosine space, not exact copies — the realistic shape
-# for ANN at scale (exact copies would make top-k degenerate). 20k vectors.
+# for ANN at scale (exact copies would make top-k degenerate).
 EMB_PERTURB = 0.001
 
 
-def make_sf1(out_dir: str = "/tmp/sf1-fixture") -> str:
+def tile(out_dir: str, n_replicas: int, tables: tuple[str, ...]) -> str:
+    """Write ``n_replicas`` key-shifted copies of each of ``tables`` (keys of
+    SHIFTED), plus the COPIED catalogs and the perturbed embeddings, under
+    ``out_dir``."""
     import duckdb
 
     con = duckdb.connect()
@@ -72,28 +83,27 @@ def make_sf1(out_dir: str = "/tmp/sf1-fixture") -> str:
                 f"SELECT COUNT(*) FROM read_parquet('{os.path.join(SRC, t)}.parquet')"
             ).fetchone()[0]
             out_n = con.execute(f"SELECT COUNT(*) FROM read_parquet('{path}')").fetchone()[0]
-            return out_n == src_n * N_REPLICAS
+            return out_n == src_n * n_replicas
         return True
 
-    tables = list(SHIFTED) + list(COPIED) + ["embeddings"]
-    if all(fresh(t) for t in tables):
+    if all(fresh(t) for t in (*tables, *COPIED, "embeddings")):
         con.close()
         return out_dir
     os.makedirs(out_dir, exist_ok=True)
-    for t, keys in SHIFTED.items():
+    for t in tables:
         if fresh(t):
             continue
         src = os.path.join(SRC, f"{t}.parquet")
         cols = [r[0] for r in con.execute(f"DESCRIBE SELECT * FROM read_parquet('{src}')").fetchall()]
         proj = ", ".join(
-            f"({c} + r.r * {SHIFT}) AS {c}" if c in keys else c for c in cols
+            f"({c} + r.r * {SHIFT}) AS {c}" if c in SHIFTED[t] else c for c in cols
         )
         con.execute(
             f"""
             COPY (
                 SELECT {proj}
                 FROM read_parquet('{src}')
-                CROSS JOIN (SELECT UNNEST(range({N_REPLICAS})) AS r) r
+                CROSS JOIN (SELECT UNNEST(range({n_replicas})) AS r) r
                 ORDER BY r.r
             ) TO '{out_dir}/{t}.parquet' (FORMAT PARQUET)
             """
@@ -111,7 +121,7 @@ def make_sf1(out_dir: str = "/tmp/sf1-fixture") -> str:
                            AS embedding,
                        label
                 FROM read_parquet('{src}')
-                CROSS JOIN (SELECT UNNEST(range({N_REPLICAS})) AS r) r
+                CROSS JOIN (SELECT UNNEST(range({n_replicas})) AS r) r
                 ORDER BY r.r
             ) TO '{out_dir}/embeddings.parquet' (FORMAT PARQUET)
             """
@@ -120,6 +130,17 @@ def make_sf1(out_dir: str = "/tmp/sf1-fixture") -> str:
     return out_dir
 
 
+def make_sf1(out_dir: str = "/tmp/sf1-fixture") -> str:
+    return tile(out_dir, 10, tuple(SHIFTED))
+
+
+def make_sf10(out_dir: str = "/tmp/sf10-fixture") -> str:
+    return tile(out_dir, 100, SF10_TABLES)
+
+
 if __name__ == "__main__":
-    out = make_sf1(sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1-fixture")
-    print(out)
+    args = sys.argv[1:]
+    if args[:1] == ["--sf10"]:
+        print(make_sf10(*args[1:2]))
+    else:
+        print(make_sf1(*args[:1]))

@@ -5,8 +5,11 @@ can leave a script that only fails when someone runs it. This walks the
 source of ``scripts/*.py``, ``perfbench/*.py``, ``bench.py`` and
 ``__spark_entry__.py`` (no execution, no Spark session) and resolves each
 ``from timing_explorer_spark... import name`` — including imports nested
-inside functions — against the package as it is now. ``from bench import
-name`` in a script resolves against ``bench.py``'s top-level definitions.
+inside functions — against the package as it is now. A dotless module
+that is not an installed one is a first-party sibling: ``from make_sf1
+import make_sf1`` resolves against the top-level definitions of
+``make_sf1.py`` next to the importing file or at the repo root (``from bench
+import name``), and fails when no such file exists.
 """
 
 from __future__ import annotations
@@ -51,8 +54,16 @@ def _resolves(module: str, name: str) -> bool:
     return hasattr(mod, "__path__") and importlib.util.find_spec(f"{module}.{name}") is not None
 
 
+def _sibling(path: Path, mod: str) -> Path | None:
+    """The first-party file ``mod`` names for ``path``: one beside it, or
+    one at the repo root (scripts put it on sys.path)."""
+    for d in (path.parent, ROOT):
+        if (d / f"{mod}.py").exists():
+            return d / f"{mod}.py"
+    return None
+
+
 def test_script_imports_resolve():
-    bench_names = _top_level_names(ROOT / "bench.py")
     checked = 0
     missing = []
     for path in _sources():
@@ -61,15 +72,17 @@ def test_script_imports_resolve():
             if not isinstance(node, ast.ImportFrom) or node.level != 0:
                 continue
             mod = node.module
-            from_bench = mod == "bench" and path.parent.name == "scripts"
-            if not from_bench and mod != PACKAGE and not mod.startswith(PACKAGE + "."):
-                continue
+            names = None  # None: resolve against the package
+            if mod != PACKAGE and not mod.startswith(PACKAGE + "."):
+                if "." in mod:
+                    continue  # stdlib or third party
+                sibling = _sibling(path, mod)
+                if sibling is None and importlib.util.find_spec(mod) is not None:
+                    continue  # stdlib or third party
+                names = _top_level_names(sibling) if sibling else set()
             for alias in node.names:
                 checked += 1
-                if from_bench:
-                    ok = alias.name in bench_names
-                else:
-                    ok = _resolves(mod, alias.name)
+                ok = _resolves(mod, alias.name) if names is None else alias.name in names
                 if not ok:
                     missing.append(f"{path.name}:{node.lineno}: {mod}.{alias.name}")
     assert checked > 0

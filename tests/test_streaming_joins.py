@@ -223,3 +223,24 @@ def test_join_kill_restart_exactly_once(spark, tmp_path):
         len(got_set - want_set),
         len(want_set - got_set),
     )
+
+
+def test_interval_grammar_shared_by_joins_and_lsh_watermark():
+    """One case-insensitive parser serves the join bounds and the verify-mode
+    LSH watermark horizon (no Spark session needed): every form Spark's
+    withWatermark takes for a single unit parses, and a bad unit or shape is
+    a ValueError naming the input."""
+    import re
+
+    import pytest
+
+    from timing_explorer_spark.streaming.joins import _plain, interval_ms
+
+    assert interval_ms("1 day") == 86_400_000
+    assert interval_ms("10 MINUTES") == 600_000
+    assert interval_ms("10minutes") == 600_000
+    assert interval_ms("1.5 minutes") == 90_000
+    assert _plain("-2 Seconds") == "-2 second"
+    for bad in ("10 fortnights", "10", "1 minute; DROP TABLE t"):
+        with pytest.raises(ValueError, match=re.escape(repr(bad))):
+            interval_ms(bad)

@@ -135,6 +135,35 @@ def _greedy_expected(spark, rows):
     return verdicts
 
 
+def _land_batches(indir, batches):
+    """One parquet file per batch, ts parsed in the session zone (UTC).
+    pyarrow writes the same rows a Spark write job would, without paying a
+    job per tiny file; file-source batch order follows modification time."""
+    import os
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(indir, exist_ok=True)
+    for i, rows in enumerate(batches):
+        table = pa.table(
+            {
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array(
+                    [
+                        datetime.fromisoformat(r[1]).replace(tzinfo=timezone.utc)
+                        for r in rows
+                    ],
+                    pa.timestamp("us", tz="UTC"),
+                ),
+                "text": pa.array([r[2] for r in rows], pa.string()),
+            }
+        )
+        path = os.path.join(indir, f"batch-{i:03d}.parquet")
+        land(indir, lambda: pq.write_table(table, path))
+
+
 def _run_stream(spark, tmp_path, batches, watermark="10 minutes", verify=None,
                 state_buckets=8192):
     indir, outdir, ckpt = (
@@ -142,12 +171,7 @@ def _run_stream(spark, tmp_path, batches, watermark="10 minutes", verify=None,
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
     )
-    for rows in batches:
-        df = spark.createDataFrame(rows, "doc_id long, ts string, text string").select(
-            "doc_id", F.col("ts").cast("timestamp").alias("ts"), "text"
-        )
-        # file-source batch order follows modification time
-        land(indir, lambda: df.coalesce(1).write.mode("append").parquet(indir))
+    _land_batches(indir, batches)
     stream = (
         spark.readStream.schema("doc_id long, ts timestamp, text string")
         .option("maxFilesPerTrigger", 1)
@@ -393,3 +417,182 @@ def test_blob_rows_size_bounded_and_lossless():
     assert _compaction_due(_MAX_CHUNKS, 0)
     assert not _compaction_due(_MAX_CHUNKS, 10 * _MAX_BLOB_BYTES)
     assert _compaction_due(_MAX_CHUNKS + 10, 10 * _MAX_BLOB_BYTES)
+
+
+# --- chunk-blob state commit path, driven through fake state handles -------
+# The verify-mode processors touch their handle only through getListState,
+# registerTimer and ListState get/put/appendList/clear, so these tests call
+# handleInputRows / handleExpiredTimer directly, with no Spark call. The
+# record dtypes are the stored layouts, pinned so old checkpoints decode.
+
+P, H, T0 = 4, 600_000, 1_000_000  # slots, horizon ms, first event ms
+PRE_DT = [("ts", ">i8"), ("h", ">i8"), ("sig", f"V{8 * P}")]
+BAND_DT = [("bi", ">i4"), ("bh", ">i8"), ("ts", ">i8"), ("dig", ">i2", (P,))]
+
+
+class _FakeState:
+    def __init__(self):
+        self.rows, self.timers, self.ms = [], [], 0
+
+    # handle
+    def getListState(self, name, schema):
+        assert schema == "blob binary"
+        self.name = name
+        return self
+
+    def registerTimer(self, ms):
+        self.timers.append(int(ms))
+
+    # ListState
+    def get(self):
+        return iter(list(self.rows))
+
+    def put(self, rows):
+        self.rows = list(rows)
+
+    def appendList(self, rows):
+        self.rows.extend(rows)
+
+    def clear(self):
+        self.rows = []
+
+    # TimerValues / ExpiredTimerInfo
+    def getCurrentWatermarkInMs(self):
+        return self.ms
+
+    def getExpiryTimeInMs(self):
+        return self.fired
+
+    def records(self, fields):
+        import numpy as np
+
+        return np.frombuffer(b"".join(bytes(r[0]) for r in self.rows), dtype=fields)
+
+
+def _feed(proc, st, key, cols):
+    import pandas as pd
+
+    cols["ev_ts"] = pd.to_datetime(cols["ev_ts"], unit="ms")
+    outs = list(proc.handleInputRows(key, iter([pd.DataFrame(cols)]), st))
+    return sorted(int(d) for o in outs for d in o["doc"])
+
+
+def _expire(proc, st, wm):
+    """Fire the latest armed timer once the watermark has passed it to ``wm``."""
+    st.ms, st.fired = wm, st.timers[-1]
+    assert list(proc.handleExpiredTimer((0,), st, st)) == []
+
+
+def _sig(i):
+    import numpy as np
+
+    return np.arange(i * P, (i + 1) * P, dtype=">i8").tobytes()
+
+
+def _pre(proc, st, items):
+    """items: (doc, ts_ms, sig[, h]); h defaults to the signature's first slot."""
+    h = [it[3] if len(it) > 3 else int.from_bytes(it[2][:8], "big") for it in items]
+    cols = {"doc": [it[0] for it in items], "ev_ts": [it[1] for it in items]}
+    return _feed(proc, st, (0,), {**cols, "sig": [it[2] for it in items], "h": h})
+
+
+def test_prefilter_blob_commit_fake_handle():
+    from timing_explorer_spark.streaming.lsh_dedup import (
+        _MAX_CHUNKS,
+        _ExactSigPrefilter,
+    )
+
+    st, proc, n = _FakeState(), _ExactSigPrefilter(H, P), _MAX_CHUNKS + 6
+    proc.init(st)
+    assert st.name == "sigs"
+    # one row per batch: a chunk per batch until _MAX_CHUNKS, then the bucket
+    # compacts; nothing is lost and only the first occupancy arms a timer
+    for i in range(n):
+        assert _pre(proc, st, [(i, T0 + i * 1000, _sig(i))]) == [i]
+    recs = st.records(PRE_DT)
+    assert sorted(recs["ts"]) == [T0 + i * 1000 for i in range(n)]
+    assert {r.tobytes() for r in recs["sig"]} == {_sig(i) for i in range(n)}
+    assert len(st.rows) < _MAX_CHUNKS and st.timers == [T0 + H]
+    # an in-horizon duplicate is suppressed and leaves state alone; a new
+    # signature whose hash collides with a stored one is kept; of two copies
+    # of one new signature in a batch, the (ts, doc) first is kept
+    before, ts = list(st.rows), T0 + n * 1000
+    assert _pre(proc, st, [(500, ts, _sig(3))]) == [] and st.rows == before
+    batch = [(501, ts, _sig(1000), 3 * P), (503, ts + 1, _sig(1001)), (502, ts + 1, _sig(1001))]
+    assert _pre(proc, st, batch) == [501, 502]
+    assert len(st.records(PRE_DT)) == n + 2 and st.timers == [T0 + H]
+    # watermark jump: records 0..10 expire, so an evicted signature is fresh
+    # again; the rewrite holds only live records and re-arms the timer
+    st.ms = T0 + 10_000 + H + 1
+    assert _pre(proc, st, [(700, st.ms, _sig(700)), (701, st.ms, _sig(0))]) == [700, 701]
+    want = {_sig(i) for i in [*range(11, n), 1000, 1001, 700, 0]}
+    recs = st.records(PRE_DT)
+    assert {r.tobytes() for r in recs["sig"]} == want and len(recs) == len(want)
+    assert st.timers == [T0 + H, T0 + 11_000 + H]
+    # an expired timer evicts at the watermark, which has passed its expiry
+    # time, and re-arms once at the new earliest record; past every record
+    # it empties the bucket and arms nothing
+    _expire(proc, st, T0 + 50_000 + H)
+    assert len(st.records(PRE_DT)) == n - 50 + 4
+    assert st.timers[-1] == T0 + 50_000 + H
+    _expire(proc, st, 10**12)
+    assert st.rows == [] and len(st.timers) == 3
+
+
+def _bands(proc, st, items, key=(0, 3)):
+    """items: (doc, ts_ms, band_idx, band_hash, digest slots or None, val)."""
+    import numpy as np
+
+    cols = {c: [it[k] for it in items] for k, c in enumerate(["doc", "ev_ts", "band_idx", "band_hash", "sig", "val"])}
+    cols["sig"] = [None if d is None else np.array(d, dtype=">i2").tobytes() for d in cols["sig"]]
+    return _feed(proc, st, key, cols)
+
+
+def test_band_verify_blob_commit_fake_handle():
+    from timing_explorer_spark.streaming.lsh_dedup import (
+        _MAX_CHUNKS,
+        _BandVerifyProcessor,
+    )
+
+    st, proc, n = _FakeState(), _BandVerifyProcessor(0.9, H, P), _MAX_CHUNKS + 6
+    proc.init(st)
+    assert st.name == "entries"
+    # marker rows pass straight through without touching state
+    assert _bands(proc, st, [(1, T0, -2, 77, None, BANDS)], key=(-2, 5)) == [1]
+    assert st.rows == [] and st.timers == []
+
+    def band(i):
+        return (i % 4, 1000 + i)
+
+    # fresh bands emit nothing and become occupants; compaction at
+    # _MAX_CHUNKS chunks; one timer from the first occupancy
+    for i in range(n):
+        assert _bands(proc, st, [(i, T0 + i * 1000, *band(i), [i] * P, -1)]) == []
+    recs = st.records(BAND_DT)
+    assert sorted(zip(recs["bi"], recs["bh"])) == sorted(band(i) for i in range(n))
+    assert len(st.rows) < _MAX_CHUNKS and st.timers == [T0 + H]
+    # an identical digest under an occupied band key strips; a dissimilar one
+    # (est-J 0.75 < 0.9) and a same-hash row of another band index stay
+    # fresh; of two same-batch copies of a new band, the (ts, doc) first
+    # occupies and the second strips
+    ts = T0 + n * 1000
+    batch = [
+        (800, ts, *band(5), [5] * P, -1),
+        (801, ts, *band(6), [6, 6, 6, 9], -1),
+        (802, ts, band(7)[0] + 1, band(7)[1], [7] * P, -1),
+        (804, ts + 1, 3, 5000, [1, 2, 3, 4], -1),
+        (803, ts + 1, 3, 5000, [1, 2, 3, 4], -1),
+    ]
+    assert _bands(proc, st, batch) == [800, 804]
+    assert len(st.records(BAND_DT)) == n + 3 and st.timers == [T0 + H]
+    # watermark jump: occupants 0..10 expire, so band(2) is fresh again
+    st.ms = T0 + 10_000 + H + 1
+    assert _bands(proc, st, [(900, st.ms, *band(2), [2] * P, -1)]) == []
+    recs = st.records(BAND_DT)
+    assert recs["ts"].min() == T0 + 11_000 and len(recs) == n - 11 + 4
+    assert st.timers == [T0 + H, T0 + 11_000 + H]
+    _expire(proc, st, T0 + 50_000 + H)
+    assert len(st.records(BAND_DT)) == n - 50 + 4
+    assert st.timers[-1] == T0 + 50_000 + H
+    _expire(proc, st, 10**12)
+    assert st.rows == [] and len(st.timers) == 3

@@ -26,6 +26,8 @@ micro-batch boundaries never show in the output.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -104,15 +106,32 @@ def interval_join_batch(
     )
 
 
+_UNIT_MS = {"millisecond": 1, "second": 1_000, "minute": 60_000, "hour": 3_600_000,
+            "day": 86_400_000}
+_INTERVAL = re.compile(r"\s*([+-]?(?:\d+\.?\d*|\.\d+))\s*([a-z]+?)s?\s*", re.IGNORECASE)
+
+
+def _parse_interval(interval: str) -> tuple[str, str]:
+    """'10 minutes' / '1 DAY' / '10minutes' -> ('10', 'minute'): one signed
+    number and one unit from millisecond to day, case-insensitive, as in
+    Spark's interval strings. Anything else (including injection-shaped
+    input) is a ValueError naming the input."""
+    m = _INTERVAL.fullmatch(str(interval))
+    if m is None or m.group(2).lower() not in _UNIT_MS:
+        raise ValueError(
+            f"bad interval {interval!r}: want '<number> <unit>' with unit "
+            "millisecond, second, minute, hour or day"
+        )
+    return m.group(1), m.group(2).lower()
+
+
+def interval_ms(interval: str) -> int:
+    """'10 minutes' -> 600000."""
+    n, unit = _parse_interval(interval)
+    return int(float(n) * _UNIT_MS[unit])
+
+
 def _plain(interval: str) -> str:
-    """'5 seconds' -> '5 seconds' (validated); rejects injection-shaped input."""
-    parts = interval.strip().split()
-    if len(parts) != 2:
-        raise ValueError(f"bad interval: {interval!r}")
-    float(parts[0])  # raises on non-numeric
-    if parts[1].lower() not in (
-        "millisecond", "milliseconds", "second", "seconds",
-        "minute", "minutes", "hour", "hours", "day", "days",
-    ):
-        raise ValueError(f"bad interval unit: {interval!r}")
-    return f"{parts[0]} {parts[1]}"
+    """'5 SECONDS' -> '5 second', safe to splice into an INTERVAL literal."""
+    n, unit = _parse_interval(interval)
+    return f"{n} {unit}"

@@ -1,105 +1,79 @@
 """Streaming MinHash-LSH near-duplicate suppression on the ingest path.
 
-Round-6 verdict task #6: the batch near-dup family (operators/dedup.py::
-minhash_lsh_pairs) assumes the corpus is at rest; an LLM ingest pipeline
-wants to suppress near-duplicates AS DOCUMENTS LAND, with state that does
-not grow with stream length. This operator is the streaming counterpart:
+The streaming counterpart of the batch near-dup family
+(operators/dedup.py::minhash_lsh_pairs): near-duplicates are suppressed as
+documents land, with state bounded by the watermark horizon rather than by
+stream length.
 
   1. Per-document MinHash signature computed ROW-LOCALLY (one nested HOF
-     expression — sequence x transform x array_min — so no aggregation is
-     needed before the stateful step; a streaming query stays in append
-     mode). Same hash family as the batch path: slot i = min over shingles
-     of xxhash64(shingle, seed + i).
-  2. LSH banding: band j's key = xxhash64 of signature slots [j*r, (j+1)*r)
-     — one row per (doc, band) via posexplode.
-  3. ``dropDuplicatesWithinWatermark`` on (band_idx, band_hash): a band
-     bucket's fingerprint is held only within the watermark horizon, so
-     state is bounded by ingest rate x horizon (the exact-dedup contract of
-     pipeline.py::dedup_stream, pinned in tests/test_streaming_dedup.py).
-  4. A document is NEAR-DUPLICATE iff ANY of its bands collided with an
-     earlier document -> it survives iff ALL ``bands`` band-rows survive
-     step 3. That count is a watermarked event-time aggregation, so verdicts
+     expression, so no aggregation is needed before the stateful step and
+     the query stays in append mode). Same hash family as the batch path:
+     slot i = min over shingles of xxhash64(shingle, seed + i).
+  2. LSH banding: band j's key = xxhash64 of signature slots [j*r, (j+1)*r),
+     one row per (doc, band).
+  3. A band key held by an earlier document inside the watermark horizon
+     strips that band.
+  4. A document is NEAR-DUPLICATE iff ANY of its bands was stripped. The
+     per-document count is a watermarked event-time aggregation, so verdicts
      emit when the watermark seals them (append mode).
 
-Semantics vs batch: this is FIRST-ARRIVAL-WINS over the LSH CANDIDATE
-relation (what a dedup-at-ingest must do — it cannot re-rank history).
-Two precision levels (round-7 verdict task #3):
+Semantics vs batch: FIRST-ARRIVAL-WINS over the LSH CANDIDATE relation (a
+dedup-at-ingest cannot re-rank history). Two precision levels:
 
-``verify=None`` (default, all-JVM): candidates are NOT re-verified — a
-band collision from a merely-similar document strips that band. Within
-one micro-batch ``dropDuplicatesWithinWatermark`` keeps an ARBITRARY
-survivor per band key, so two near/exact duplicates landing in the SAME
-batch can mutually strip each other's bands (both emit is_unique=false,
-or neither emits a verdict). Consumers of this mode must therefore route
-is_unique=false rows to the batch precision layer
-(operators/dedup.py::minhash_lsh_pairs exact-verify) rather than drop
-them — pinned by tests/test_streaming_lsh_dedup.py::
+``verify=None`` (default, all-JVM): step 3 is ``dropDuplicatesWithinWatermark``
+on (band_idx, band_hash) (the exact-dedup contract of
+pipeline.py::dedup_stream), and candidates are NOT re-verified — a band
+collision with a merely-similar document strips that band. Within one
+micro-batch the dedup keeps an ARBITRARY survivor per band key, so two
+near/exact duplicates landing in the SAME batch can mutually strip each
+other's bands (both emit is_unique=false, or neither emits a verdict).
+Consumers of this mode must therefore route is_unique=false rows to the batch
+precision layer (operators/dedup.py::minhash_lsh_pairs exact-verify) rather
+than drop them — pinned by tests/test_streaming_lsh_dedup.py::
 test_same_batch_duplicates_default_mode.
 
-``verify=<threshold>``: two stateful layers. (a) An exact-signature
-PREFILTER keyed by one xxhash64 of the full signature per document
-suppresses identical-signature duplicates — the bulk of a dup-heavy
-crawl — at doc grain, before banding (r8: cut the verify-mode price from
-4.3x to ~(see BENCH_lsh_stream.json) by keeping ``bands``x row
-amplification and signature re-shipping off the hot path; provably
-verdict-identical, see _ExactSigPrefilter). (b) A
-transformWithStateInPandas layer keyed by (band_idx, band_hash) holds
-the full MinHash signatures of recent bucket occupants (within the
-watermark horizon) and a colliding band is stripped ONLY when estimated
-Jaccard (matching-slot fraction) against some occupant reaches the
-threshold. This both removes the false-positive data loss AND makes
-same-batch behavior deterministic: rows are processed in (ts, doc)
-order in BOTH layers, so the earliest document always wins every
-contested band. Measured FP/recall at several (bands, rows) operating
-points: scripts/lsh_operating_points.py -> BENCH_lsh_fp.json.
-Requires the RocksDB state store (streaming/state.py::rocksdb_state_conf)
-like every TWS operator here.
+``verify=<threshold>``: two transformWithStateInPandas layers, keyed by
+pmod(hash, state_buckets) so state-server round trips amortize over every key
+in a bucket; exact matching happens inside the processors, so bucketing is a
+purely physical regrouping (pinned by test_verify_bucket_collisions_safe,
+which forces one bucket).
 
-Round-9 cost work (verdict task #1 + the measured follow-ons; artifact
-BENCH_lsh_stream.json, interleaved-round protocol):
+  (a) _ExactSigPrefilter, at doc grain: a document whose full signature
+      equals an in-horizon earlier document's is suppressed before banding,
+      so the band layer sees only distinct content (the bulk of a dup-heavy
+      crawl never pays ``bands``x row amplification).
+  (b) _BandVerifyProcessor, at band grain: a colliding band is stripped ONLY
+      when the estimated Jaccard (matching-slot fraction) against an occupant
+      of the same band key reaches the threshold. This removes the default
+      mode's false-positive data loss and makes same-batch behavior
+      deterministic: both layers process rows in (ts, doc) order, so the
+      earliest document wins every contested band.
 
-  - signatures cross every Arrow boundary as ONE packed BinaryType scalar
-    (pack_signature — 8 B/slot big-endian), never a 64-element list: the
-    list->pandas conversion allocates one numpy array PER ROW and was the
-    top all-unique-regime cost;
-  - the band shuffle and verify-layer state carry a 16-bit-per-slot DIGEST
-    (slot_digests, 128 B vs 512 B): est-Jaccard only tests slot EQUALITY,
-    so digests decide identically up to 2^-16-per-slot collisions — three
-    orders below the 64-perm estimator's own sigma, and erring only toward
-    an (immediately verified) strip. The doc-grain exact prefilter keeps
-    the full signature;
-  - both handlers are VECTORIZED on the common path: rows whose key is
-    unique in-batch and absent from state (steady-state traffic is ~all of
-    them) are classified with pandas duplicated()/isin()/MultiIndex.isin
-    and bulk-appended; only contested rows walk the per-row est-J loop;
-  - state_buckets default re-measured at 2048 (see the parameter doc —
-    vectorization moved the sweet spot to fatter buckets).
+Measured FP/recall at several (bands, rows) operating points:
+scripts/lsh_operating_points.py -> BENCH_lsh_fp.json. Requires the RocksDB
+state store (streaming/state.py::rocksdb_state_conf) like every TWS operator
+here.
 
-Round-10 cost work (verdict task #1 — close the last measured verify-mode
-cost, the per-batch full-bucket state re-read): both stateful layers store
-CHUNK-BLOB rows — a bucket's occupants packed as fixed-size records into a
-few binary rows — so a batch decodes its whole bucket with ONE b"".join +
-ONE np.frombuffer into a structured array (the r9 layout paid one Python
-tuple conversion + one np.frombuffer PER OCCUPANT per batch: ~1.6M
-per-entry decodes on the 200k-doc drain's second trigger). Eviction
-filtering, membership/contested classification (int64/uint64 isin), and
-new-occupant packing are whole-array operations; commits stay append-only
-(one blob row per batch) with eviction- or _MAX_CHUNKS-triggered
-compaction to SIZE-BOUNDED rows (_blob_rows, ADVICE r10: a compacted
-bucket is never one element scaling with rate x horizon / buckets —
-at most _MAX_BLOB_BYTES per row, cut on record boundaries). The prefilter's membership test became
-two-stage: a vectorized isin on the stored full-signature hash column
-(shipped as ``h`` from the JVM), then byte-exact verification against only
-the records whose hash the batch actually mentions — so exactness is
-unchanged while all-unique traffic does zero per-entry Python.
+Verify-mode state (_BlobStateProcessor, shared by both layers): a bucket's
+records are fixed-size numpy records packed into a FEW binary "chunk-blob"
+rows of one ListState, so a batch decodes its bucket with one b"".join + one
+np.frombuffer, and eviction, classification and packing are whole-array
+operations. A batch that finds records past the watermark horizon rewrites
+the bucket without them; otherwise its commit appends one row, and the
+bucket compacts after _MAX_CHUNKS appends. No row exceeds _MAX_BLOB_BYTES.
+One event-time timer per non-empty bucket, at its earliest record's expiry,
+empties idle buckets.
 
-At 100 TB/day: everything before the stateful step is map-only; the
-stateful operators hold (rate x horizon) band keys — plus, in verify
-mode, one num_perm x 2-byte digest per surviving occupant per band
-(bands x num_perm x 2 ≈ 2 KB/doc at the defaults) plus one full
-num_perm x 8-byte signature (+ hash) per distinct doc in the prefilter —
-and doc counters; state stays rate x horizon bounded in both modes
-(asserted in tests).
+Signatures cross every Arrow boundary as ONE packed binary (pack_signature),
+and band rows carry a 16-bit-per-slot digest (slot_digests) instead of the
+full slots.
+
+At 100 TB/day: everything before the stateful step is map-only; the stateful
+operators hold (rate x horizon) band keys — plus, in verify mode, one
+num_perm x 2-byte digest per surviving occupant per band (bands x num_perm x
+2 ≈ 2 KB/doc at the defaults) plus one full num_perm x 8-byte signature
+(+ hash) per distinct doc in the prefilter — and doc counters; state stays
+rate x horizon bounded in both modes (asserted in tests).
 """
 
 from __future__ import annotations
@@ -107,6 +81,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+
+from .joins import interval_ms
 
 _SEED = 42  # matches operators/dedup.py::minhash_signatures
 
@@ -131,7 +107,7 @@ def row_local_signature(text: Column, num_perm: int = 64, n: int = 3) -> Column:
 
     # let-bind the shingle set: without it each of the num_perm outer slots
     # re-evaluates the whole shingle expression (split + n-gram build) —
-    # measured 6.5 -> 815 docs/s/core at the defaults (r7)
+    # measured 6.5 -> 815 docs/s/core at the defaults
     return let(word_shingles(text, n), build)
 
 
@@ -140,13 +116,11 @@ def pack_signature(sig: Column) -> Column:
     slot, big-endian), built entirely JVM-side: hex each slot to 16 chars,
     join, one unhex. Null signature -> null binary.
 
-    Round-9 verdict task #1: in verify mode every (doc, band) row used to
-    ship the 64-slot long array through the Arrow boundary into the Python
-    TWS layer — Arrow list columns land in pandas as one numpy allocation
-    PER ROW, which dominated the all-unique regime (3.86x the default
-    mode's cost). A binary scalar crosses as a single bytes object; the
-    handlers unpack with ``np.frombuffer(b, dtype='>i8')`` only where slot
-    arithmetic is actually needed (the est-Jaccard comparison)."""
+    A binary scalar crosses the Arrow boundary into the Python TWS layer as
+    a single bytes object, whereas an Arrow list column lands in pandas as
+    one numpy allocation PER ROW (the dominant verify-mode cost on
+    all-unique traffic when signatures shipped as lists). The handlers unpack
+    with ``np.frombuffer`` only where slot arithmetic is needed."""
     return F.unhex(
         F.array_join(F.transform(sig, lambda x: F.lpad(F.hex(x), 16, "0")), "")
     )
@@ -156,10 +130,10 @@ def slot_digests(packed: Column, num_perm: int) -> Column:
     """16-bit-per-slot digest of a pack_signature binary: the low 2 bytes of
     each big-endian 8-byte slot, concatenated (num_perm x 2 bytes).
 
-    r9: the band-grain verify layer compares signatures ONLY for slot
-    EQUALITY (the est-Jaccard matching-slot fraction), so shipping the full
-    64-bit slot values through the band shuffle and into state is 4x more
-    bytes than the decision needs. xxhash64's low 16 bits are uniform, so a
+    The band-grain verify layer compares signatures ONLY for slot EQUALITY
+    (the est-Jaccard matching-slot fraction), so shipping the full 64-bit
+    slot values through the band shuffle and into state is 4x more bytes
+    than the decision needs. xxhash64's low 16 bits are uniform, so a
     digest-slot collision between UNEQUAL slots is 2^-16 per slot — the
     induced est-J inflation (expected < 0.001 matching slots per
     comparison) is three orders of magnitude below the estimator's own
@@ -194,29 +168,17 @@ def band_keys(
     return band_keys_from_sig(row_local_signature(text, num_perm, n), num_perm, bands)
 
 
-def _duration_ms(s: str) -> int:
-    """'10 minutes' / '2 seconds' / '500 milliseconds' -> ms (the subset of
-    Spark's interval grammar the streaming operators here use)."""
-    n, unit = s.strip().split()
-    unit = unit.rstrip("s")
-    factor = {"millisecond": 1, "second": 1000, "minute": 60_000, "hour": 3_600_000}[unit]
-    return int(float(n) * factor)
-
-
-# A bucket's occupants re-packed into size-bounded blob rows after this
-# many appended chunks, even without an eviction — bounds chunk-row count
+# A bucket's records are re-packed into size-bounded blob rows after this
+# many appended chunks, even without an eviction — bounds the chunk-row count
 # (and with it the per-batch b"".join fan-in) on long-running streams whose
-# horizon has not yet produced an eviction-triggered compaction.
+# horizon has not yet produced an eviction.
 _MAX_CHUNKS = 64
 
-# Hard per-row byte bound on any state blob (ADVICE r10): compaction used
-# to pack an entire bucket's live occupants into ONE list-state element,
-# which scales with rate x horizon / buckets — at the 100 TB/day regime a
-# single element could reach hundreds of MB and trip state-transport /
-# Arrow row-size limits. Every write now goes through _blob_rows, which
-# splits a packed record buffer into rows of at most this many bytes
-# (aligned to whole records); _MAX_CHUNKS stays the COUNT bound, applied
-# relative to the floor a compacted bucket necessarily needs.
+# Hard per-row byte bound on any state blob: a compacted bucket's live
+# records scale with rate x horizon / buckets, and one list-state element
+# that large could reach hundreds of MB at the 100 TB/day regime and trip
+# state-transport / Arrow row-size limits. _MAX_CHUNKS stays the COUNT bound,
+# applied relative to the floor a compacted bucket necessarily needs.
 _MAX_BLOB_BYTES = 4 * 1024 * 1024
 
 
@@ -237,431 +199,264 @@ def _compaction_due(n_chunks: int, live_bytes: int) -> bool:
     return n_chunks >= _MAX_CHUNKS + live_bytes // _MAX_BLOB_BYTES
 
 
-class _ExactSigPrefilter(StatefulProcessor):
-    """Round-8 verdict task #1: the verify-mode prefilter. Keyed by ONE long
-    per document — pmod(xxhash64(full MinHash signature), state_buckets)
-    (shingle-less docs, which can never be duplicates, hash by doc id) — it
-    suppresses EXACT-signature duplicates before banding, so the expensive
-    per-band verify layer sees only distinct-content documents: 1 row/doc
-    with a single-long grouping key instead of ``bands`` rows/doc each
-    re-shipping the 64-slot signature. Bucketing the key amortizes state
-    RPCs; membership is a full-signature byte-equality check, so distinct
-    documents sharing a bucket can never wrongly suppress each other.
+class _BlobStateProcessor(StatefulProcessor):
+    """The chunk-blob state store of both verify-mode processors.
 
-    Semantics are EXACTLY those of the unprefixed verify path: a document
-    whose signature is identical to an earlier in-horizon document would
-    receive identical per-band est-Jaccard comparisons (same sig ⇒ same
-    band keys ⇒ same occupants ⇒ same outcomes), and est-J = 1.0 ≥ any
-    threshold on every colliding band ⇒ full suppression ⇒ no verdict row.
-    Suppressing it here produces the same absence. Exact duplicates were
-    never stored as band occupants (only survivors are), so downstream
-    state is also unchanged. Rows are processed in (ts, doc) order per key
-    ⇒ the same-batch determinism guarantee is preserved.
+    State per grouping key: one ListState ``STATE_NAME`` with schema
+    "blob binary". Each row packs many fixed-size records of the subclass's
+    ``_fields()`` (always including ``ts``, event time in ms), so any row
+    subset decodes with one np.frombuffer. A record is live while
+    ts + horizon >= watermark. A commit either rewrites the live records
+    plus the new ones (after an eviction, or once the chunk count is
+    _compaction_due) or appends the new ones as one more row; every row is
+    cut to at most _MAX_BLOB_BYTES. One event-time timer per non-empty key,
+    at its earliest record's expiry, physically drops expired records, so
+    idle keys shrink to nothing: state is rate x horizon bounded.
 
-    State layout (r10 verdict task #1 — CHUNKED BLOBS): the bucket's
-    occupants live in a FEW binary blob rows, each packing many fixed-size
-    records (ts_ms >i8, sig_hash >i8, sig V{8*num_perm}); a batch decodes
-    the whole bucket with ONE b"".join + ONE np.frombuffer instead of one
-    Python tuple + bytes() per occupant (r9's top remaining verify-mode
-    cost: per-batch full-bucket state re-read at per-entry granularity).
-    Membership is two-stage and exact: a vectorized int64 isin on the
-    stored xxhash64(sig) column picks candidate records (zero per-entry
-    work on all-unique traffic), and only records whose hash actually
-    appears in the batch are materialized into a bytes-set for the
-    full-signature equality check (so a hash collision can never wrongly
-    suppress). Append-only commits add one blob row per batch; evictions
-    (and a _MAX_CHUNKS cap) compact to size-bounded rows of at most
-    _MAX_BLOB_BYTES each (ADVICE r10). One event-time timer
-    at the earliest entry's expiry; state is rate x horizon bounded."""
+    Subclasses set STATE_NAME and ``_fields`` and classify their rows in
+    ``handleInputRows`` through ``_rows``, ``_live``, ``_pack`` and
+    ``_commit``."""
 
     def __init__(self, horizon_ms: int, num_perm: int = 64) -> None:
+        import numpy as np
+
         self.horizon_ms = horizon_ms
         self.num_perm = num_perm
-        self._dt = None
-
-    def _dtype(self):
-        if self._dt is None:
-            import numpy as np
-
-            self._dt = np.dtype(
-                [("ts", ">i8"), ("h", ">i8"), ("sig", f"V{8 * self.num_perm}")]
-            )
-        return self._dt
+        self.dtype = np.dtype(self._fields())
 
     def init(self, handle) -> None:
         self.handle = handle
-        # same state name as the pre-r10 row-per-occupant layout, so a
-        # checkpoint written by the old schema fails state-schema validation
-        # LOUDLY on resume instead of silently missing duplicates (see the
-        # STATE FORMAT note in minhash_dedup_stream)
-        self.entries = handle.getListState("sigs", "blob binary")
+        self.blobs = handle.getListState(self.STATE_NAME, "blob binary")
 
-    def _decode(self, np):
-        parts = [bytes(e[0]) for e in self.entries.get()]
-        buf = b"".join(parts)
-        arr = (
-            np.frombuffer(buf, dtype=self._dtype())
-            if buf
-            else np.empty(0, dtype=self._dtype())
-        )
-        return arr, len(parts)
+    def _decode(self):
+        import numpy as np
 
-    def _pack(self, np, ts_arr, h_arr, sig_bytes_list):
-        a = np.empty(len(ts_arr), dtype=self._dtype())
-        a["ts"] = ts_arr
-        a["h"] = h_arr
-        a["sig"] = np.frombuffer(
-            b"".join(sig_bytes_list), dtype=f"V{8 * self.num_perm}"
-        )
-        return a.tobytes()
+        parts = [bytes(e[0]) for e in self.blobs.get()]
+        return np.frombuffer(b"".join(parts), dtype=self.dtype), len(parts)
 
-    def handleInputRows(self, key, rows, timerValues):
+    def _pack(self, **cols):
+        """New records, field by field; a list of bytes fills a binary or
+        sub-array field."""
+        import numpy as np
+
+        new = np.empty(len(next(iter(cols.values()))), dtype=self.dtype)
+        for name, col in cols.items():
+            new[name] = (
+                np.frombuffer(b"".join(col), dtype=self.dtype[name])
+                if isinstance(col, list)
+                else col
+            )
+        return new
+
+    @staticmethod
+    def _rows(rows):
+        """The key's input frames as one frame, its event times in ms and the
+        (ts, doc) processing order; None when there are no rows."""
         import numpy as np
         import pandas as pd
 
-        first = next(rows, None)
-        if first is None:
-            return
-        rest = list(rows)
-        pdf = pd.concat([first, *rest], ignore_index=True) if rest else first
-        n_rows = len(pdf)
-        if n_rows == 0:
-            return
-        arr, n_chunks = self._decode(np)
-        wm = timerValues.getCurrentWatermarkInMs()
-        live_mask = arr["ts"] + self.horizon_ms >= wm
-        evicted = not bool(live_mask.all())
-        live = arr[live_mask] if evicted else arr
-        docs = pdf["doc"].to_numpy()
+        frames = [f for f in rows if len(f)]
+        if not frames:
+            return None
+        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
         ts_ms = pdf["ev_ts"].to_numpy().astype("datetime64[ms]").astype(np.int64)
-        # r9: whole-batch vectorized membership (sig arrives PRE-PACKED via
-        # pack_signature, so each value is one hashable bytes object). The
-        # loop-free form is exactly first-arrival-wins: process in (ts, doc)
-        # order, suppress a row iff its sig is in state OR appeared earlier
-        # in the batch; survivors of a fresh sig become state entries.
-        order = np.lexsort((docs, ts_ms)) if n_rows > 1 else np.arange(n_rows)
+        return pdf, ts_ms, np.lexsort((pdf["doc"].to_numpy(), ts_ms))
+
+    def _live(self, wm: int):
+        """(live records, whether any expired, stored chunk count)."""
+        arr, n_chunks = self._decode()
+        mask = arr["ts"] + self.horizon_ms >= wm
+        evicted = not bool(mask.all())
+        return (arr[mask] if evicted else arr), evicted, n_chunks
+
+    def _commit(self, live, evicted: bool, n_chunks: int, new) -> None:
+        """Store ``live`` + ``new`` with the fewest state calls: append
+        ``new`` as one more row unless an eviction or the chunk count calls
+        for a rewrite, and (re-)arm the timer only when the earliest stored
+        record may have changed."""
+        itemsize = self.dtype.itemsize
+        if evicted or (new.size and _compaction_due(n_chunks, live.nbytes)):
+            self.blobs.clear()
+            if live.size or new.size:
+                self.blobs.put(_blob_rows(live.tobytes() + new.tobytes(), itemsize))
+        elif new.size:
+            self.blobs.appendList(_blob_rows(new.tobytes(), itemsize))
+        if (evicted or not live.size) and (live.size or new.size):
+            lo = min(int(a["ts"].min()) for a in (live, new) if a.size)
+            self.handle.registerTimer(lo + self.horizon_ms)
+
+    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
+        # evict at the watermark, not at the fired expiry time: the record
+        # that armed this timer has ts + horizon == expiry, so an expiry-time
+        # filter keeps it and re-arms the same time, which Spark refuses as
+        # an existing timer and then deletes with the fired one
+        live, _, _ = self._live(timerValues.getCurrentWatermarkInMs())
+        self._commit(live, True, 0, live[:0])
+        return iter(())
+
+
+class _ExactSigPrefilter(_BlobStateProcessor):
+    """Verify-mode layer (a): suppresses EXACT-signature duplicates at doc
+    grain, before banding. Keyed by pmod(h, state_buckets), where h =
+    xxhash64 of the packed full signature (shingle-less docs, which can
+    never be duplicates, hash by doc id and pass through unstored). The band
+    layer then sees 1 row per distinct-content document instead of
+    ``bands`` rows per copy.
+
+    Verdict-identical to leaving the copy to the band layer: a document
+    whose signature equals an in-horizon earlier document's gets the same
+    band keys, hence the same occupants and est-J = 1.0 >= any threshold on
+    every band: full suppression, no verdict row — the same absence. Only
+    survivors become band occupants, so downstream state is unchanged too.
+
+    Membership is two-stage and exact: an int64 isin of the batch's h
+    against the stored h column picks candidate records (no per-record
+    Python on all-unique traffic), then byte equality against only those
+    records' full signatures decides, so neither a bucket nor a hash
+    collision can suppress a distinct document.
+
+    Record: ts >i8 (ms), h >i8, sig V{8 x num_perm}."""
+
+    STATE_NAME = "sigs"
+
+    def _fields(self):
+        return [("ts", ">i8"), ("h", ">i8"), ("sig", f"V{8 * self.num_perm}")]
+
+    def handleInputRows(self, key, rows, timerValues):
+        import numpy as np
+
+        got = self._rows(rows)
+        if got is None:
+            return
+        pdf, ts_ms, order = got
+        live, evicted, n_chunks = self._live(timerValues.getCurrentWatermarkInMs())
         sig_s = pdf["sig"].iloc[order].reset_index(drop=True)
-        # length > 0 keeps the pre-vectorization defensive passthrough
-        # (ADVICE r10): a zero-length packed binary — should an empty-array
-        # signature ever arise — is shingle-less, never a duplicate
+        h = pdf["h"].to_numpy()[order]
+        # a zero-length packed binary (an empty-array signature) is
+        # shingle-less, never a duplicate
         valid = (sig_s.notna() & (sig_s.str.len() > 0)).to_numpy()
-        dup_later = sig_s.duplicated(keep="first").to_numpy()
-        in_state = np.zeros(n_rows, dtype=bool)
-        if live.size:
-            # stage 1 (vectorized): candidate rows by stored full-sig hash
-            bh = pdf["h"].to_numpy()[order]
-            hits = np.isin(bh, live["h"])
-            if hits.any():
-                # stage 2 (exact, tiny): byte-equality against only the
-                # state records whose hash the batch actually mentions
-                cand_recs = live[np.isin(live["h"], bh[hits])]
-                cand = {r.tobytes() for r in cand_recs["sig"]}
-                in_state = sig_s.isin(cand).to_numpy()
-        keep = ~valid | (~in_state & ~dup_later)
+        in_state = np.zeros(len(pdf), dtype=bool)
+        hits = np.isin(h, live["h"])
+        if hits.any():
+            cand = {r.tobytes() for r in live["sig"][np.isin(live["h"], h[hits])]}
+            in_state = sig_s.isin(cand).to_numpy()
+        # first-arrival-wins in (ts, doc) order: a row is suppressed iff its
+        # signature is stored or appeared earlier in the batch
+        keep = ~valid | (~in_state & ~sig_s.duplicated(keep="first").to_numpy())
         fresh = valid & keep
-        n_new = int(fresh.sum())
-        if n_new:
-            blob = self._pack(
-                np,
-                ts_ms[order][fresh],
-                pdf["h"].to_numpy()[order][fresh],
-                sig_s.to_numpy()[fresh].tolist(),
-            )
-        if evicted:
-            self.entries.clear()
-            if live.size or n_new:
-                merged = live.tobytes() + (blob if n_new else b"")
-                self.entries.put(_blob_rows(merged, self._dtype().itemsize))
-                lo = int(live["ts"].min()) if live.size else None
-                if n_new:
-                    nn = int(ts_ms[order][fresh].min())
-                    lo = nn if lo is None else min(lo, nn)
-                self.handle.registerTimer(lo + self.horizon_ms)
-        elif n_new:
-            if _compaction_due(n_chunks, live.size * self._dtype().itemsize):
-                self.entries.clear()
-                self.entries.put(
-                    _blob_rows(live.tobytes() + blob, self._dtype().itemsize)
-                )
-            else:
-                self.entries.appendList(
-                    _blob_rows(blob, self._dtype().itemsize)
-                )
-            if not live.size:
-                self.handle.registerTimer(
-                    int(ts_ms[order][fresh].min()) + self.horizon_ms
-                )
+        self._commit(
+            live,
+            evicted,
+            n_chunks,
+            self._pack(ts=ts_ms[order][fresh], h=h[fresh], sig=sig_s[fresh].tolist()),
+        )
         if keep.any():
             yield pdf.iloc[order[keep]][["doc", "ev_ts", "sig"]]
 
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        import numpy as np
 
-        wm = expiredTimerInfo.getExpiryTimeInMs()
-        arr, _ = self._decode(np)
-        live = arr[arr["ts"] + self.horizon_ms >= wm]
-        self.entries.clear()
-        if live.size:
-            self.entries.put(
-                _blob_rows(live.tobytes(), self._dtype().itemsize)
-            )
-            self.handle.registerTimer(int(live["ts"].min()) + self.horizon_ms)
-        return iter(())
+class _BandVerifyProcessor(_BlobStateProcessor):
+    """Verify-mode layer (b), the precision layer. Keyed by (mk, bucket)
+    where bucket = pmod(hash of the band key, state_buckets); an occupant
+    strips a row only when both band coordinates match exactly.
 
-    def close(self) -> None:
-        pass
+    An incoming row's band is STRIPPED (emit one ``val = -1`` row) only when
+    its estimated Jaccard (matching-slot fraction over the 16-bit slot
+    digests — the standard unbiased estimator up to 2^-16-per-slot digest
+    collisions) against some occupant OF THE SAME BAND KEY reaches
+    ``threshold``; otherwise the row becomes an occupant. Fresh bands — the
+    overwhelming majority on any corpus — emit NOTHING: the verdict
+    aggregation counts ``bands - strips`` from a per-doc MARKER row, so the
+    Python->JVM return path carries only collisions. Marker rows (mk == -2,
+    doc-hashed bucket, val = ``bands`` or 0 for shingle-less docs) pass
+    straight through without touching state.
 
+    A row whose band key is unique in the batch and not stored can neither
+    strip nor be stripped, so it is stored in bulk; only contested rows walk
+    the per-row est-J loop, in (ts, doc) order.
 
-class _BandVerifyProcessor(StatefulProcessor):
-    """transformWithStateInPandas processor — the precision layer of
-    verify-mode streaming dedup. Keyed by (mk, bucket) where bucket =
-    pmod(hash, state_buckets): state RPCs (get/append/timer — each a
-    round-trip to the JVM state server) amortize over every band key in the
-    bucket instead of paying 3+ RPCs per SINGLETON band key (r8: the
-    dominant verify-mode cost). Exact (band_idx, band_hash) matching moves
-    INSIDE the processor — an occupant strips a row only when both band
-    coordinates match exactly, so bucketing is a pure physical regrouping
-    with unchanged semantics (pinned by test_verify_bucket_collisions_safe,
-    which forces state_buckets=1).
+    Record: bi >i4, bh >i8, ts >i8 (ms), dig >i2 x num_perm."""
 
-    State per bucket = ListState of (band_idx, band_hash, ts_ms, packed
-    16-bit slot digest — slot_digests, r9) for occupants within the
-    watermark horizon; an incoming row's band is STRIPPED (emit one
-    ``val = -1`` row) only when its estimated Jaccard (matching-slot
-    fraction over the per-slot digests — identical to the standard
-    unbiased estimator up to 2^-16-per-slot digest collisions) against
-    some occupant OF THE SAME BAND KEY reaches ``threshold``. Fresh bands — the
-    overwhelming majority on any corpus — emit NOTHING (r8: the verdict
-    aggregation counts ``bands - strips`` from a per-doc MARKER row instead
-    of counting fresh band rows, so the Python->JVM return path carries only
-    collisions). Marker rows (mk == -2, doc-hashed bucket, val = ``bands``
-    or 0 for shingle-less docs) take a stateless fast path: no state reads,
-    no timers, straight batched passthrough.
-
-    Rows are processed in (ts, doc) order -> deterministic first-arrival-
-    wins even within one micro-batch (the default mode's same-batch hazard).
-    Eviction: semantic eviction is the watermark filter applied on every
-    read; one event-time timer per occupied key (registered at first
-    occupancy or after a compaction) physically drops expired occupants, so
-    idle keys shrink to nothing — rate x horizon bounded state.
-
-    State layout (r10 verdict task #1 — CHUNKED BLOBS): a bucket's
-    occupants live in a FEW binary blob rows, each packing many fixed-size
-    records (band_idx >i4, band_hash >i8, ts_ms >i8, digest >i2 x
-    num_perm); a batch decodes the whole bucket with ONE b"".join + ONE
-    np.frombuffer into a structured array instead of one Python tuple +
-    np.frombuffer PER OCCUPANT (the r9 layout's dominant all-unique-regime
-    cost: at 2048 buckets and a 200k-doc drain, batch 2 re-decoded ~1.6M
-    occupant rows entry by entry). Eviction filtering, the
-    contested-or-bulk classification (uint64 combined-key isin — a
-    combined-key collision can only mark a row contested, never change an
-    outcome: the est-J loop re-checks exact (band_idx, band_hash)), and
-    new-occupant packing are all whole-array operations; only contested
-    rows and the state records under their keys are touched row-wise.
-    Append-only commits add one blob row per batch; evictions (and a
-    _MAX_CHUNKS cap) compact to size-bounded rows of at most
-    _MAX_BLOB_BYTES each (ADVICE r10)."""
+    STATE_NAME = "entries"
 
     def __init__(
         self, threshold: float, horizon_ms: int, num_perm: int = 64
     ) -> None:
+        super().__init__(horizon_ms, num_perm)
         self.threshold = threshold
-        self.horizon_ms = horizon_ms
-        self.num_perm = num_perm
-        self._dt = None
 
-    def _dtype(self):
-        if self._dt is None:
-            import numpy as np
-
-            self._dt = np.dtype(
-                [
-                    ("bi", ">i4"),
-                    ("bh", ">i8"),
-                    ("ts", ">i8"),
-                    ("dig", ">i2", (self.num_perm,)),
-                ]
-            )
-        return self._dt
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        # same state name as the pre-r10 row-per-occupant layout — a
-        # checkpoint written by the old schema fails state-schema validation
-        # loudly on resume (see the STATE FORMAT note in minhash_dedup_stream)
-        self.entries = handle.getListState("entries", "blob binary")
-
-    def _decode(self, np):
-        parts = [bytes(e[0]) for e in self.entries.get()]
-        buf = b"".join(parts)
-        arr = (
-            np.frombuffer(buf, dtype=self._dtype())
-            if buf
-            else np.empty(0, dtype=self._dtype())
-        )
-        return arr, len(parts)
-
-    def _pack(self, np, bi_arr, bh_arr, ts_arr, dig_bytes_list):
-        a = np.empty(len(bi_arr), dtype=self._dtype())
-        a["bi"] = bi_arr
-        a["bh"] = bh_arr
-        a["ts"] = ts_arr
-        a["dig"] = np.frombuffer(
-            b"".join(dig_bytes_list), dtype=">i2"
-        ).reshape(len(bi_arr), self.num_perm)
-        return a.tobytes()
+    def _fields(self):
+        return [
+            ("bi", ">i4"),
+            ("bh", ">i8"),
+            ("ts", ">i8"),
+            ("dig", ">i2", (self.num_perm,)),
+        ]
 
     @staticmethod
-    def _ckey(np, bh_arr, bi_arr):
+    def _ckey(bh, bi):
         # combined (band_hash, band_idx) match key in wrap-around uint64 —
-        # identical arithmetic on both sides, collisions only over-mark rows
-        # as contested (exactness is re-established inside the est-J loop)
-        return bh_arr.astype(np.uint64) * np.uint64(131) + bi_arr.astype(
-            np.uint64
-        )
+        # identical arithmetic on both sides; a collision only marks a row
+        # contested, and the est-J loop re-checks the exact band key
+        import numpy as np
+
+        return bh.astype(np.uint64) * np.uint64(131) + bi.astype(np.uint64)
 
     def handleInputRows(self, key, rows, timerValues):
         import numpy as np
         import pandas as pd
 
-        first = next(rows, None)
-        if first is None:
+        got = self._rows(rows)
+        if got is None:
             return
-        rest = list(rows)
-        pdf = pd.concat([first, *rest], ignore_index=True) if rest else first
-        n_rows = len(pdf)
-        if n_rows == 0:
-            return
+        pdf, ts_ms, order = got
         if int(key[0]) == -2:
-            # marker fast path: stateless passthrough (batched per bucket)
             yield pdf[["doc", "ev_ts", "val"]]
             return
-        arr, n_chunks = self._decode(np)
-        wm = timerValues.getCurrentWatermarkInMs()
-        live_mask = arr["ts"] + self.horizon_ms >= wm
-        evicted = not bool(live_mask.all())
-        live = arr[live_mask] if evicted else arr
-        docs = pdf["doc"].to_numpy()
-        ts_ms = pdf["ev_ts"].to_numpy().astype("datetime64[ms]").astype(np.int64)
+        live, evicted, n_chunks = self._live(timerValues.getCurrentWatermarkInMs())
         bis = pdf["band_idx"].to_numpy()
         bhs = pdf["band_hash"].to_numpy()
         sig_col = pdf["sig"].to_numpy()
-        order = np.lexsort((docs, ts_ms)) if n_rows > 1 else np.arange(n_rows)
-        strip_idx: list[int] = []
-        new: list[tuple] = []  # contested additions only (few)
-        # r9 fast path: a row whose (band_idx, band_hash) appears exactly
-        # once in this batch AND has no stored occupant can neither strip
-        # nor be stripped — it just becomes an occupant. On steady-state
-        # (all-unique) traffic that is essentially every row, so the per-row
-        # est-Jaccard loop below only sees the contested handful. Pure
-        # vectorized reordering of independent rows — first-arrival-wins
-        # semantics are untouched because rows that never share a band key
-        # (in batch or state) cannot interact.
-        valid = pd.notna(sig_col)
-        kdf = pd.DataFrame({"bi": bis[order], "bh": bhs[order]})
-        contested_o = kdf.duplicated(keep=False).to_numpy()
-        bkey = self._ckey(np, bhs[order], bis[order])
-        if live.size:
-            skey = self._ckey(np, live["bh"], live["bi"])
-            contested_o |= np.isin(bkey, skey)
-        bulk_o = valid[order] & ~contested_o
-        sel = order[bulk_o]
-        # occupant digests under CONTESTED keys only — the handful of state
-        # records the per-row loop can actually touch
+        bkey = self._ckey(bhs[order], bis[order])
+        skey = self._ckey(live["bh"], live["bi"])
+        contested = pd.Series(bkey).duplicated(keep=False).to_numpy() | np.isin(
+            bkey, skey
+        )
+        bulk = order[pd.notna(sig_col[order]) & ~contested]
+        # occupant digests under contested keys only: the handful of stored
+        # records the per-row loop can touch
         occ: dict[tuple, list] = {}
-        if live.size and bool(contested_o.any()):
-            cand = live[np.isin(skey, bkey[contested_o])]
-            for rec in cand:
-                occ.setdefault((int(rec["bi"]), int(rec["bh"])), []).append(
-                    rec["dig"]
-                )
-        for i in order[contested_o]:
+        for rec in live[np.isin(skey, bkey[contested])]:
+            occ.setdefault((int(rec["bi"]), int(rec["bh"])), []).append(rec["dig"])
+        strip_idx: list[int] = []
+        new_idx: list[int] = []
+        for i in order[contested]:
             raw_sig = sig_col[i]
             if raw_sig is None or len(raw_sig) == 0:
                 continue  # shingle-less: never occupies, never strips
-            # pre-packed 16-bit digest (slot_digests, r9): view as
-            # big-endian shorts only here, where est-Jaccard needs slot
-            # arithmetic — the estimator is the matching-slot fraction, so
-            # digests decide identically up to 2^-16-per-slot collisions
-            b = bytes(raw_sig)
-            sig = np.frombuffer(b, dtype=">i2")
+            sig = np.frombuffer(raw_sig, dtype=">i2")
             k = (int(bis[i]), int(bhs[i]))
-            lst = occ.get(k)
-            if lst is not None and any(
+            if any(
                 len(o) == len(sig) and float((sig == o).mean()) >= self.threshold
-                for o in lst
+                for o in occ.get(k, ())
             ):
                 strip_idx.append(i)
             else:
-                new.append((k[0], k[1], int(ts_ms[i]), b))
+                new_idx.append(i)
                 occ.setdefault(k, []).append(sig)
-        # pack this batch's occupants (bulk arrays + contested few) as ONE
-        # blob; same minimal-RPC commit discipline as _ExactSigPrefilter
-        n_new = len(sel) + len(new)
-        if n_new:
-            blob = self._pack(
-                np,
-                np.concatenate(
-                    [bis[sel], np.array([e[0] for e in new], dtype=np.int64)]
-                ),
-                np.concatenate(
-                    [bhs[sel], np.array([e[1] for e in new], dtype=np.int64)]
-                ),
-                np.concatenate(
-                    [ts_ms[sel], np.array([e[2] for e in new], dtype=np.int64)]
-                ),
-                sig_col[sel].tolist() + [e[3] for e in new],
-            )
-            new_min_ts = int(
-                min(
-                    int(ts_ms[sel].min()) if len(sel) else 2**62,
-                    min((e[2] for e in new), default=2**62),
-                )
-            )
-        if evicted:
-            self.entries.clear()
-            if live.size or n_new:
-                self.entries.put(
-                    _blob_rows(
-                        live.tobytes() + (blob if n_new else b""),
-                        self._dtype().itemsize,
-                    )
-                )
-                lo = int(live["ts"].min()) if live.size else None
-                if n_new:
-                    lo = new_min_ts if lo is None else min(lo, new_min_ts)
-                self.handle.registerTimer(lo + self.horizon_ms)
-        elif n_new:
-            if _compaction_due(n_chunks, live.size * self._dtype().itemsize):
-                self.entries.clear()
-                self.entries.put(
-                    _blob_rows(live.tobytes() + blob, self._dtype().itemsize)
-                )
-            else:
-                self.entries.appendList(
-                    _blob_rows(blob, self._dtype().itemsize)
-                )
-            if not live.size:
-                self.handle.registerTimer(new_min_ts + self.horizon_ms)
+        stored = np.concatenate([bulk, np.array(new_idx, dtype=bulk.dtype)])
+        self._commit(
+            live,
+            evicted,
+            n_chunks,
+            self._pack(
+                bi=bis[stored],
+                bh=bhs[stored],
+                ts=ts_ms[stored],
+                dig=sig_col[stored].tolist(),
+            ),
+        )
         if strip_idx:
             yield pdf.iloc[strip_idx][["doc", "ev_ts", "val"]]
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        import numpy as np
-
-        wm = expiredTimerInfo.getExpiryTimeInMs()
-        arr, _ = self._decode(np)
-        live = arr[arr["ts"] + self.horizon_ms >= wm]
-        self.entries.clear()
-        if live.size:
-            self.entries.put(
-                _blob_rows(live.tobytes(), self._dtype().itemsize)
-            )
-            self.handle.registerTimer(int(live["ts"].min()) + self.horizon_ms)
-        return iter(())
-
-    def close(self) -> None:
-        pass
 
 
 def minhash_dedup_stream(
@@ -696,16 +491,12 @@ def minhash_dedup_stream(
     pmod(hash, state_buckets) buckets so per-key state-server RPCs amortize
     across co-bucketed keys. Purely physical — exact matching happens
     inside the processors. Default (None) = max(64, 2 x
-    spark.sql.shuffle.partitions): r10 re-measured the sweet spot with the
-    chunk-blob state layout, whose one-frombuffer-per-bucket decode makes
-    per-bucket size nearly free — the dominant per-key cost is now the
-    state-server ROUND TRIPS, so the optimum is as FEW buckets as still
+    spark.sql.shuffle.partitions): the chunk-blob state decodes a bucket
+    with one frombuffer whatever its size, so the dominant per-key cost is
+    the state-server ROUND TRIPS and the optimum is as FEW buckets as still
     spread over the stateful stage's tasks (~2 per task; 64 buckets beat
-    the r9 default of 2048 by ~20% wall on the 200k-doc all-unique drain,
-    measured in FRESH processes — see the bench-protocol note in
-    scripts/bench_lsh_stream.py). The r9 guidance of ~10x cores per bucket
-    predates the chunk layout; fixture-pinning tests that force
-    state_buckets=1 still pass, since bucketing is purely physical.
+    2048 by ~20% wall on the 200k-doc all-unique drain, measured in FRESH
+    processes — see the bench-protocol note in scripts/bench_lsh_stream.py).
 
     Emission: verdicts seal when the watermark passes the doc's
     ``seal_window`` bucket (the count of surviving band-rows is an
@@ -714,19 +505,19 @@ def minhash_dedup_stream(
     row at all — consumers keep docs with is_unique (absence = hard
     duplicate).
 
-    STATE FORMAT (verify mode): v3 as of r10 — chunk-blob rows (see the
-    processor docstrings); v2 (r9) was one row per occupant with digest
-    binaries; v1 (r8) full-signature rows. Verify-mode streams MUST restart
-    from a fresh checkpoint when upgrading across these versions: the state
-    variable NAMES are kept stable precisely so that resuming an old
-    checkpoint trips Spark's state-schema validation and fails LOUDLY
-    (ADVICE r10 — a silent schema reroute would permanently miss
-    duplicates instead). The default mode's dropDuplicatesWithinWatermark
-    state is unaffected."""
+    STATE FORMAT (verify mode): the ListStates "sigs" (prefilter) and
+    "entries" (band layer), schema "blob binary", holding the records laid
+    out in each processor's docstring. A record's size depends on num_perm,
+    so a checkpoint resumes only under the num_perm it was written with.
+    Earlier row-per-record layouts used the same state names, so resuming
+    one of their checkpoints fails Spark's state-schema validation LOUDLY
+    instead of silently missing duplicates; a change to the record layout
+    inside the blobs is invisible to that check and needs a new state name.
+    The default mode's dropDuplicatesWithinWatermark state is separate."""
     # band_keys_from_sig enforces this on the default path; verify mode
     # derives r inline (binary slices), so fail fast here for BOTH paths —
     # a non-divisible num_perm would silently drop trailing slots. ValueError
-    # (not assert): user-input validation must survive python -O (ADVICE r10).
+    # (not assert): user-input validation must survive python -O.
     if num_perm % bands != 0:
         raise ValueError(
             f"num_perm ({num_perm}) must be divisible by bands ({bands})"
@@ -785,8 +576,8 @@ def minhash_dedup_stream(
 
         ensure_protobuf()
         if state_buckets is None:
-            # ADVICE r10: the conf can be non-numeric on AQE-managed
-            # platforms ('auto') — fall back to defaultParallelism rather
+            # the conf can be non-numeric on AQE-managed platforms
+            # ('auto') — fall back to defaultParallelism rather
             # than raising out of a default-argument path
             try:
                 parts = int(
@@ -797,25 +588,15 @@ def minhash_dedup_stream(
             except ValueError:
                 parts = docs.sparkSession.sparkContext.defaultParallelism
             state_buckets = max(64, 2 * parts)
-        horizon_ms = _duration_ms(watermark)
-        # Prefilter (r8 task #1): exact-signature duplicates — the bulk of a
-        # dup-heavy ingest — are suppressed at DOC grain before banding, so
-        # the per-band verify layer processes only distinct-content
-        # documents. Keyed by pmod(xxhash64(sig), state_buckets): identical
-        # sigs land in the same bucket (membership is a full-signature
-        # equality check inside the processor, so bucket sharing is safe),
-        # and state RPCs amortize across the bucket. Shingle-less docs hash
-        # by doc id — xxhash64 NEVER returns null (a null input hashes to
-        # the seed), so the dispatch must be an explicit isNotNull branch,
-        # not coalesce; the processor passes them through without storing.
-        # r9 task #1: the signature crosses EVERY Arrow boundary from here
-        # on as ONE packed binary scalar (pack_signature), never as a
-        # 64-element list — the list->pandas conversion (one numpy
-        # allocation per row) was the measured all-unique-regime hotspot.
-        # r10 task #1: the FULL (un-bucketed) xxhash64 of the signature
-        # rides along as ``h`` — inside the chunk-blob prefilter it is the
-        # vectorized stage-1 membership test (int64 isin against the
-        # stored hash column), with byte-exact verification only on hits.
+        horizon_ms = interval_ms(watermark)
+        # Prefilter keyed by pmod(xxhash64(sig), state_buckets): identical
+        # sigs land in the same bucket. Shingle-less docs hash by doc id —
+        # xxhash64 NEVER returns null (a null input hashes to the seed), so
+        # the dispatch must be an explicit isNotNull branch, not coalesce.
+        # The signature crosses every Arrow boundary from here on as ONE
+        # packed binary scalar (pack_signature). The FULL (un-bucketed) hash
+        # rides along as ``h``: the prefilter's vectorized stage-1
+        # membership test.
         keyed = with_sig.select(
             "doc",
             "ev_ts",
