@@ -29,7 +29,8 @@ parallelizes naturally — unlike the single-row-group driver fixtures).
 
 Usage: python scripts/make_sf1.py [out_dir]          (default /tmp/sf1-fixture)
        python scripts/make_sf1.py --sf10 [out_dir]   (default /tmp/sf10-fixture)
-Idempotent: skips any table whose tiled row count is already right.
+Idempotent: skips any table whose tiled row count is already right (the
+check does not see row order; delete an output directory to rebuild it).
 """
 
 from __future__ import annotations
@@ -69,7 +70,8 @@ EMB_PERTURB = 0.001
 def tile(out_dir: str, n_replicas: int, tables: tuple[str, ...]) -> str:
     """Write ``n_replicas`` key-shifted copies of each of ``tables`` (keys of
     SHIFTED), plus the COPIED catalogs and the perturbed embeddings, under
-    ``out_dir``."""
+    ``out_dir``. Rows are in (replica, source row) order, so two builds of
+    one fixture are identical file for file."""
     import duckdb
 
     con = duckdb.connect()
@@ -102,9 +104,9 @@ def tile(out_dir: str, n_replicas: int, tables: tuple[str, ...]) -> str:
             f"""
             COPY (
                 SELECT {proj}
-                FROM read_parquet('{src}')
+                FROM read_parquet('{src}', file_row_number = true)
                 CROSS JOIN (SELECT UNNEST(range({n_replicas})) AS r) r
-                ORDER BY r.r
+                ORDER BY r.r, file_row_number
             ) TO '{out_dir}/{t}.parquet' (FORMAT PARQUET)
             """
         )
@@ -120,9 +122,9 @@ def tile(out_dir: str, n_replicas: int, tables: tuple[str, ...]) -> str:
                                       x -> CAST(x + r.r * {EMB_PERTURB} AS FLOAT))
                            AS embedding,
                        label
-                FROM read_parquet('{src}')
+                FROM read_parquet('{src}', file_row_number = true)
                 CROSS JOIN (SELECT UNNEST(range({n_replicas})) AS r) r
-                ORDER BY r.r
+                ORDER BY r.r, file_row_number
             ) TO '{out_dir}/embeddings.parquet' (FORMAT PARQUET)
             """
         )

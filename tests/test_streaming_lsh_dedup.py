@@ -432,7 +432,7 @@ BAND_DT = [("bi", ">i4"), ("bh", ">i8"), ("ts", ">i8"), ("dig", ">i2", (P,))]
 
 class _FakeState:
     def __init__(self):
-        self.rows, self.timers, self.ms = [], [], 0
+        self.rows, self.timers, self.ms, self.refused = [], [], 0, 0
 
     # handle
     def getListState(self, name, schema):
@@ -441,7 +441,17 @@ class _FakeState:
         return self
 
     def registerTimer(self, ms):
-        self.timers.append(int(ms))
+        # Spark keeps one timer per (key, time) and refuses a second
+        if int(ms) in self.timers:
+            self.refused += 1
+        else:
+            self.timers.append(int(ms))
+
+    def listTimers(self):
+        return iter(list(self.timers))
+
+    def deleteTimer(self, ms):
+        self.timers.remove(int(ms))
 
     # ListState
     def get(self):
@@ -478,9 +488,13 @@ def _feed(proc, st, key, cols):
 
 
 def _expire(proc, st, wm):
-    """Fire the latest armed timer once the watermark has passed it to ``wm``."""
-    st.ms, st.fired = wm, st.timers[-1]
-    assert list(proc.handleExpiredTimer((0,), st, st)) == []
+    """Move the watermark to ``wm`` and fire every armed timer it has passed,
+    as Spark does: the handler runs, then Spark deletes the fired timer."""
+    st.ms = wm
+    for t in sorted(x for x in st.timers if x < wm):
+        st.fired = t
+        assert list(proc.handleExpiredTimer((0,), st, st)) == []
+        st.timers.remove(t)
 
 
 def _sig(i):
@@ -522,21 +536,22 @@ def test_prefilter_blob_commit_fake_handle():
     assert _pre(proc, st, batch) == [501, 502]
     assert len(st.records(PRE_DT)) == n + 2 and st.timers == [T0 + H]
     # watermark jump: records 0..10 expire, so an evicted signature is fresh
-    # again; the rewrite holds only live records and re-arms the timer
+    # again; the rewrite holds only live records and replaces the timer, so
+    # exactly one stays armed and no stale one fires into a rewrite
     st.ms = T0 + 10_000 + H + 1
     assert _pre(proc, st, [(700, st.ms, _sig(700)), (701, st.ms, _sig(0))]) == [700, 701]
     want = {_sig(i) for i in [*range(11, n), 1000, 1001, 700, 0]}
     recs = st.records(PRE_DT)
     assert {r.tobytes() for r in recs["sig"]} == want and len(recs) == len(want)
-    assert st.timers == [T0 + H, T0 + 11_000 + H]
+    assert st.timers == [T0 + 11_000 + H]
     # an expired timer evicts at the watermark, which has passed its expiry
     # time, and re-arms once at the new earliest record; past every record
     # it empties the bucket and arms nothing
     _expire(proc, st, T0 + 50_000 + H)
     assert len(st.records(PRE_DT)) == n - 50 + 4
-    assert st.timers[-1] == T0 + 50_000 + H
+    assert st.timers == [T0 + 50_000 + H]
     _expire(proc, st, 10**12)
-    assert st.rows == [] and len(st.timers) == 3
+    assert st.rows == [] and st.timers == [] and st.refused == 0
 
 
 def _bands(proc, st, items, key=(0, 3)):
@@ -590,9 +605,9 @@ def test_band_verify_blob_commit_fake_handle():
     assert _bands(proc, st, [(900, st.ms, *band(2), [2] * P, -1)]) == []
     recs = st.records(BAND_DT)
     assert recs["ts"].min() == T0 + 11_000 and len(recs) == n - 11 + 4
-    assert st.timers == [T0 + H, T0 + 11_000 + H]
+    assert st.timers == [T0 + 11_000 + H]
     _expire(proc, st, T0 + 50_000 + H)
     assert len(st.records(BAND_DT)) == n - 50 + 4
-    assert st.timers[-1] == T0 + 50_000 + H
+    assert st.timers == [T0 + 50_000 + H]
     _expire(proc, st, 10**12)
-    assert st.rows == [] and len(st.timers) == 3
+    assert st.rows == [] and st.timers == [] and st.refused == 0

@@ -133,6 +133,13 @@ def nearest_neighbor_all(
     (ad-hoc DataFrames in unit tests), the matrix is collected and broadcast;
     that fallback is driver-bounded (~1M x 64 = 512 MB).
 
+    Each partition is a Python task, and a Python task's fixed cost is not
+    the JVM's ~3-5 ms scheduling floor: the worker's per-task setup comes on
+    top. On Python < 3.12 that setup re-read pyspark's zip archives, ~0.2 s
+    of CPU per task against 2-4 ms of matmul at sf0.01, until the engine's
+    worker daemon made the re-read lazy (OPERATORS.md, "Python worker
+    daemon", has the per-task cost left).
+
     ``tile_rows`` (needs corpus_path) bounds worker memory: the build side
     streams as tiles (_worker_iter_tiles) with a running per-query best —
     peak memory one tile regardless of corpus size, the configuration for a

@@ -31,6 +31,11 @@ RUNTIME_CONFS = {
 }
 
 
+# The directory holding this package: Python workers import the engine's
+# daemon and UDF modules from it, whatever the JVM's working directory.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -58,7 +63,13 @@ def get_spark(
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    worker_path = extra_conf.pop("spark.executorEnv.PYTHONPATH", "")
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join(p for p in (_PACKAGE_PARENT, worker_path) if p),
+    ).config("spark.python.daemon.module", "timing_explorer_spark.worker_daemon")
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     ensure_confs(spark)

@@ -141,12 +141,15 @@ def warm_cache(
     projection to the workload, exactly as you would a covering index.
 
     ``partition_counts`` overrides ``n_partitions`` PER TABLE — partition
-    count must track table size, not be one global constant: every task
-    carries a fixed scheduling cost (~3-5 ms measured locally), so a small
-    table sharded to full cluster width pays more floor than work (1M rows
-    over 32 partitions = 31k rows/task, sub-ms of work per 4 ms of
-    scheduling; 8 partitions measured 3x faster end-to-end at sf1). The
-    deployment-scale analog is the 128 MB split-size rule.
+    count must track table size, not be one global constant: every JVM
+    task carries a fixed scheduling cost (~3-5 ms measured locally), so a
+    small table sharded to full cluster width pays more floor than work (1M
+    rows over 32 partitions = 31k rows/task, sub-ms of work per 4 ms of
+    scheduling; 8 partitions measured 3x faster end-to-end at sf1). A task
+    that runs Python code (mapInPandas, UDFs, transformWithStateInPandas)
+    pays the Python worker's per-task setup on top, which is far larger
+    (OPERATORS.md, "Python worker daemon"). The deployment-scale analog is
+    the 128 MB split-size rule.
     """
     n = n_partitions or spark.sparkContext.defaultParallelism
     skey = session_key(spark)

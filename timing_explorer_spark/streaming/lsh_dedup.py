@@ -269,11 +269,14 @@ class _BlobStateProcessor(StatefulProcessor):
         evicted = not bool(mask.all())
         return (arr[mask] if evicted else arr), evicted, n_chunks
 
-    def _commit(self, live, evicted: bool, n_chunks: int, new) -> None:
+    def _commit(self, live, evicted: bool, n_chunks: int, new, expiring: bool = False) -> None:
         """Store ``live`` + ``new`` with the fewest state calls: append
         ``new`` as one more row unless an eviction or the chunk count calls
         for a rewrite, and (re-)arm the timer only when the earliest stored
-        record may have changed."""
+        record may have changed. An eviction first deletes the timer armed
+        before it, so the key keeps one, unless it is ``expiring``: then that
+        timer is the one firing, which Spark deletes after
+        handleExpiredTimer."""
         itemsize = self.dtype.itemsize
         if evicted or (new.size and _compaction_due(n_chunks, live.nbytes)):
             self.blobs.clear()
@@ -281,9 +284,18 @@ class _BlobStateProcessor(StatefulProcessor):
                 self.blobs.put(_blob_rows(live.tobytes() + new.tobytes(), itemsize))
         elif new.size:
             self.blobs.appendList(_blob_rows(new.tobytes(), itemsize))
-        if (evicted or not live.size) and (live.size or new.size):
-            lo = min(int(a["ts"].min()) for a in (live, new) if a.size)
-            self.handle.registerTimer(lo + self.horizon_ms)
+        if live.size and not evicted:
+            return
+        lo = [int(a["ts"].min()) for a in (live, new) if a.size]
+        expiry = min(lo) + self.horizon_ms if lo else None
+        if evicted and not expiring:
+            for t in list(self.handle.listTimers()):
+                if t == expiry:
+                    expiry = None  # already armed
+                else:
+                    self.handle.deleteTimer(t)
+        if expiry is not None:
+            self.handle.registerTimer(expiry)
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
         # evict at the watermark, not at the fired expiry time: the record
@@ -291,7 +303,7 @@ class _BlobStateProcessor(StatefulProcessor):
         # filter keeps it and re-arms the same time, which Spark refuses as
         # an existing timer and then deletes with the fired one
         live, _, _ = self._live(timerValues.getCurrentWatermarkInMs())
-        self._commit(live, True, 0, live[:0])
+        self._commit(live, True, 0, live[:0], expiring=True)
         return iter(())
 
 
