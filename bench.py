@@ -98,9 +98,9 @@ def bench_streaming_throughput(spark, n_events: int = 1_000_000) -> dict:
 
 def bench_session(app_name: str = "timing-explorer-spark-bench"):
     """The bench's SparkSession confs — shared with scripts/ab.py,
-    bench_registry.py and the plan renderers (gen_plans.py, explain.py,
-    capture_plans.py), so A/Bs, sweeps and PLANS.md run under the confs
-    bench actually runs.
+    bench_registry.py, bench_sf1.py and the plan renderers (gen_plans.py,
+    explain.py), so A/Bs, sweeps, scale probes and PLANS.md run under the
+    confs bench actually runs.
 
     Partitioning sized to the benchmark scale (single-digit-MB fact tables
     on one node): 8 shuffle partitions keeps task-launch overhead below the

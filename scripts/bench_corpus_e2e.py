@@ -7,8 +7,8 @@ crawl, the adversarial input for the dedup stages) and produces the STAGE
 AUDIT the verdict asks for: each pipeline stage is driven incrementally
 (cleaned -> neardeduped -> capped -> scored -> sampled -> packed), and for
 each increment the probe records wall seconds, the Spark stages it added,
-their total shuffle-read bytes, and the per-task skew bound from the REST
-taskSummary (bench_sf1_llm's protocol). "No new shuffles beyond the
+their total shuffle-read bytes, and the per-task skew bound from the
+status store (scripts/stage_audit.py). "No new shuffles beyond the
 components' own" is then checkable line by line: every exchange in the
 audit belongs to a named component (WARC record walk / paragraph + exact
 dedup windows / LSH band self-join / components loop / source-partitioned
@@ -31,17 +31,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import bench_sf1_llm  # noqa: E402
-from bench_sf1_llm import (  # noqa: E402
-    MAX_OVER_MEDIAN,
-    UI_PORT,
-    _app_id,
-    _completed_stages,
-    _stage_task_skew,
-)
+import stage_audit  # noqa: E402
 from make_sf1 import make_sf1  # noqa: E402
 
-MAX_TASK_READ_FLOOR = 16 * 1024 * 1024
+# profile stages down to 1 MB of task shuffle read; a violation needs a
+# straggler above 16 MB as well (the hub probe's materiality floor)
+MIN_READ = 1 * 1024 * 1024
+FLOOR = 16 * 1024 * 1024
 
 
 def main() -> int:
@@ -50,52 +46,33 @@ def main() -> int:
     from timing_explorer_spark.session import get_spark
 
     fixture = sys.argv[1] if len(sys.argv) > 1 else make_sf1()
-    spark = get_spark(
-        app_name="timing-explorer-spark-corpus-e2e",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(UI_PORT),
-            "spark.ui.retainedStages": "3000",
-        },
-    )
+    spark = get_spark(app_name="timing-explorer-spark-corpus-e2e", extra_conf=stage_audit.RETAIN)
     spark.sparkContext.setLogLevel("WARN")
-    app = _app_id()
-    bench_sf1_llm.MIN_STAGE_SHUFFLE = 1 * 1024 * 1024
 
-    audit: list[dict] = []
+    audit_rows: list[dict] = []
     violations: list[dict] = []
     counts: dict[str, int] = {}
 
     def drive(name: str, action) -> None:
-        seen = {(s["stageId"], s["attemptId"]) for s in _completed_stages(app)}
+        since = stage_audit.mark(spark)
         t0 = time.monotonic()
         counts[name] = action()
         wall = round(time.monotonic() - t0, 3)
-        stages = _completed_stages(app)
-        new = [s for s in stages if (s["stageId"], s["attemptId"]) not in seen]
-        skews = [k for s in new if (k := _stage_task_skew(app, s))]
-        worst = max(skews, key=lambda k: k["ratio"], default=None)
-        material = [
-            k
-            for k in skews
-            if k["ratio"] > MAX_OVER_MEDIAN
-            and k["max_task_shuffle_read"] > MAX_TASK_READ_FLOOR
-        ]
-        violations.extend({"stage": name, **k} for k in material)
-        audit.append(
+        audit = stage_audit.audit(stage_audit.stages(spark, since), min_read=MIN_READ, floor=FLOOR)
+        violations.extend({"stage": name, **k} for k in audit["violations"])
+        audit_rows.append(
             {
                 "pipeline_stage": name,
                 "rows": counts[name],
                 "wall_sec": wall,
-                "spark_stages_added": len(new),
-                "shuffle_read_bytes": sum(
-                    int(s.get("shuffleReadBytes", 0)) for s in new
-                ),
-                "worst_task_skew": worst,
+                "spark_stages_added": audit["stages"],
+                "shuffle_read_bytes": audit["shuffle_read_bytes"],
+                "shuffle_write_bytes": audit["shuffle_write_bytes"],
+                "worst_task_skew": audit["worst_task_skew"],
             }
         )
         print(f"# {name}: {counts[name]} rows in {wall}s "
-              f"(+{len(new)} stages)", file=sys.stderr)
+              f"(+{audit['stages']} stages)", file=sys.stderr)
 
     # plan CONSTRUCTION is itself a heavy phase: the LSH band index
     # materializes, the components loop runs to fixpoint, and the PageRank
@@ -134,11 +111,11 @@ def main() -> int:
         "metric": "corpus_assembly_e2e",
         "sf": 1,
         "fixture": fixture,
-        "stage_audit": audit,
-        "cold_total_sec": round(sum(a["wall_sec"] for a in audit), 3),
+        "stage_audit": audit_rows,
+        "cold_total_sec": round(sum(a["wall_sec"] for a in audit_rows), 3),
         "warm_e2e_sec": warm,
         "rows": counts,
-        "skew_bound": MAX_OVER_MEDIAN,
+        "skew_bound": stage_audit.SKEW_BOUND,
         "violations": violations,
     }
     print(json.dumps(out))

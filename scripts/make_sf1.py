@@ -13,7 +13,7 @@ remaining >2x-of-DuckDB headliners (q01, q03, q05, q_events_per_window) are
 partially masked by the local-mode scheduling floor (measured 0.086-0.18 s,
 comparable to their whole runtime). At sf10 (lineitem 60M rows) the floor is
 <5% of runtime, so the Spark-vs-DuckDB ratio measures per-row throughput
-(scripts/bench_sf10.py, bench_sf10_llm.py, bench_ivfpq_sweep.py).
+(scripts/bench_sf1.py --sf10, bench_sf1_llm.py --sf10, bench_ivfpq_sweep.py).
 
 Construction: each fact/dim table is the union of key-shifted replicas
 (keys += replica * 10_000_000; all other columns unchanged), so every join

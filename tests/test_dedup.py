@@ -113,7 +113,7 @@ def test_minhash_joins_plan_from_materialized_stats(spark):
     corpus-grain caches before the joins plan, so join strategy follows the
     REAL sizes at every scale: this toy corpus must broadcast (fast), and
     the caches must already be computed when the function returns (that is
-    the mechanism — scripts/bench_sf10_llm.py asserts the 500k-scale half:
+    the mechanism — scripts/bench_sf1_llm.py --sf10 asserts the 500k-scale half:
     zero broadcasts there)."""
     import re
 

@@ -172,3 +172,35 @@ def test_gradient_matches_finite_differences(spark):
         # engine ascends (y - sigma): step = -dNLL/dw
         assert abs(weights[b] - (-numeric)) < 1e-6, (b, weights[b], -numeric)
     assert abs(losses[0] - py_loss(w0)) < 1e-12
+
+
+def test_null_labels_raise(spark):
+    """A NULL y has no residual: with one NULL the means divided by a count
+    that included it, and an all-NULL column crashed in float(None). Both
+    are a named ValueError, counted in the same upfront job."""
+    import pytest
+
+    feats = spark.createDataFrame(
+        [(0, -1, 1.0), (1, -1, 1.0), (2, -1, 1.0)], "_doc bigint, bucket int, x double"
+    )
+    partly = spark.createDataFrame([(0, 1.0), (1, None), (2, 0.0)], "_doc bigint, y double")
+    with pytest.raises(ValueError, match="1 of 3 labels y are NULL"):
+        logreg_train(feats, partly, n_iters=1)
+    all_null = spark.createDataFrame([(0, None), (1, None)], "_doc bigint, y double")
+    with pytest.raises(ValueError, match="2 of 2 labels y are NULL"):
+        logreg_train(feats, all_null, n_iters=1)
+
+
+def test_registered_query_all_null_source_raises(spark, sf_smoke, tmp_path):
+    """q_quality_classifier_train labels by documents.source; over a copy of
+    the smoke fixture whose source is all NULL it names the NULL labels."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    docs = pq.read_table(f"{sf_smoke}/documents.parquet")
+    i = docs.schema.get_field_index("source")
+    docs = docs.set_column(i, "source", pa.nulls(docs.num_rows, docs.schema.field(i).type))
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    with pytest.raises(ValueError, match="labels y are NULL"):
+        SPECS["q_quality_classifier_train"].build(spark, str(tmp_path))

@@ -492,7 +492,7 @@ def resolve_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc
         # materialize the symmetrized edges NOW and drop the pair cache:
         # edges is the only consumer of pairs, and keeping both resident
         # for the whole loop doubled cached bytes — measured to OOM an 8g
-        # single-JVM session at 60M edges (bench_graph_sf10, r11) where
+        # single-JVM session at 60M edges (bench_linkgraph_skew --sf10) where
         # either cache alone fits comfortably. Unpersist is safe even if
         # the caller re-reads `pairs` (it just recomputes).
         edges.count()

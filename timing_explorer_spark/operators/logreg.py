@@ -125,10 +125,11 @@ def logreg_train(
     """Batch gradient descent on L2-regularized logistic NLL.
 
     ``features``: (_doc, bucket, x) long rows (hashed_features output);
-    ``labels``: (_doc, y) with y in {0.0, 1.0}. Returns
-    (bucket -> weight, per-iteration mean loss). The corpus never leaves the
-    cluster; each iteration moves only the O(n_buckets) weight vector through
-    the driver, and every reduction is decimal-exact (partitioning-invariant).
+    ``labels``: (_doc, y) with y in {0.0, 1.0} (a NULL y raises
+    ValueError). Returns (bucket -> weight, per-iteration mean loss). The
+    corpus never leaves the cluster; each iteration moves only the
+    O(n_buckets) weight vector through the driver, and every reduction is
+    decimal-exact (partitioning-invariant).
     """
     from .dedup import track_cache
 
@@ -137,24 +138,31 @@ def logreg_train(
     # labels are loop-invariant, so pin them (released by release_cached(),
     # guide §5.3 — the same boundary the KN/unigram trainers use).
     labels = track_cache(labels.select("_doc", F.col("y").cast("double").alias("y")))
-    # ONE upfront driver job instead of two: the label count rides the
+    # ONE upfront driver job instead of two: the label counts ride the
     # distinct-bucket collect as a tagged row (the r12/r13 trainer-fusion
-    # pattern, guide §5) and materializes the label cache the loop reads.
+    # pattern, guide §5) and materialize the label cache the loop reads.
     # Both union legs aggregate DIFFERENT frames, so no cache is raced.
     head = (
         features.select(F.col("bucket").cast("long").alias("v"))
         .distinct()
-        .select("v", F.lit(False).alias("is_n"))
+        .select("v", F.lit(False).alias("is_n"), F.lit(0).cast("long").alias("n_y"))
         .unionByName(
-            labels.agg(F.count(F.lit(1)).alias("v")).select(
-                "v", F.lit(True).alias("is_n")
+            labels.agg(F.count(F.lit(1)).alias("v"), F.count("y").alias("n_y")).select(
+                "v", F.lit(True).alias("is_n"), "n_y"
             )
         )
         .collect()
     )
-    n_rows = next(int(r["v"]) for r in head if r["is_n"])
+    n_row = next(r for r in head if r["is_n"])
+    n_rows = int(n_row["v"])
     if n_rows == 0:
         raise ValueError("logreg_train: empty label set")
+    # a NULL y has no residual: the gradient sums would skip it while the
+    # means still divided by it, and an all-NULL column fails in float(None)
+    if int(n_row["n_y"]) < n_rows:
+        raise ValueError(
+            f"logreg_train: {n_rows - int(n_row['n_y'])} of {n_rows} labels y are NULL"
+        )
     buckets = [int(r["v"]) for r in head if not r["is_n"]]
     weights = {int(b): 0.0 for b in buckets}
     losses: list[float] = []
