@@ -297,7 +297,7 @@ _SANCTIONED_PYTHON = {
     "q_semantic_dedup_keep_best",
     "q_ann_lsh_topk",
     "q_ann_ivf_topk",
-    # IVF-PQ: ivf_assign bucket scoring + pq_encode/_pq_query_luts dense
+    # IVF-PQ: the fused _pq_index_scan/_pq_probe_scan bucket scoring, dense
     # codebook argmins/LUTs (Arrow-batched; ADC scoring itself is JVM)
     "q_ann_ivfpq_topk",
     # same ivf_assign dense-algebra batch scoring (centroid matrix in the

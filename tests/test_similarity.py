@@ -68,52 +68,122 @@ def test_ivf_probes_bound_candidates(spark, sf_oracle):
         assert len(ranks) <= 10
 
 
-def test_tiled_build_side_matches_full_matrix(spark, sf_smoke):
-    """tile_rows streams the build side in bounded tiles; results must agree
-    with the full-matrix worker path: identical neighbor ids (running strict-
-    max reproduces argmax first-occurrence tie-breaks) and cos within BLAS
-    blocking noise (~2 ulps; per-tile matmuls block differently)."""
-    from timing_explorer_spark.sources.tables import load
+def _write_embeddings(path: str, rows: list[tuple[int, list[float]]]) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    emb = load(spark, sf_smoke, "embeddings")
-    path = f"{sf_smoke}/embeddings.parquet"
-    full = {
-        r.query_id: (r.neighbor_id, r.cos)
-        for r in nearest_neighbor_all(emb, corpus_path=path).collect()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+                "embedding": pa.array([v for _, v in rows], pa.list_(pa.float32())),
+            }
+        ),
+        path,
+    )
+
+
+def test_zero_vector_nn_matches_oracle(spark, tmp_path):
+    """A zero vector's cosines are NaN/NULL and rank below every number, on
+    both build sides: queries 1, 3 and 4 must not pick the zero vector 2,
+    and query 2 (all cosines NULL) gets the lowest other id with cos NULL —
+    the rows DuckDB gives for the registered oracle."""
+    from timing_explorer_spark.plans import all_queries
+    from timing_explorer_spark.testing import assert_matches_oracle, duckdb_connection
+
+    path = str(tmp_path / "embeddings.parquet")
+    _write_embeddings(path, [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.9, 0.1]), (4, [0.0, 1.0])])
+    con = duckdb_connection(str(tmp_path))
+    oracle = all_queries()["q_embedding_nn"].oracle
+    assert con.sql(oracle).order("query_id").fetchall()[1] == (2, 1, None)
+    emb = spark.read.parquet(path)
+    assert_matches_oracle(nearest_neighbor_all(emb), con, oracle, "broadcast build side")
+    assert_matches_oracle(
+        nearest_neighbor_all(emb, corpus_path=path), con, oracle, "worker build side"
+    )
+
+
+def test_nn_kernel_lone_vector_has_no_neighbor():
+    """The oracle's self-join (a.vec_id <> b.vec_id) gives a one-vector
+    corpus no row; the kernel must not answer with the query itself."""
+    import numpy as np
+    import pandas as pd
+
+    from timing_explorer_spark.operators.similarity import _nn_top1
+
+    batch = pd.DataFrame({"vid": np.array([7]), "v": [np.array([1.0, 0.0], np.float32)]})
+    (out,) = _nn_top1(np.array([7]), np.array([[1.0, 0.0]]), [batch])
+    assert out.empty
+
+
+def test_worker_matrix_cache_sees_rewritten_file(tmp_path):
+    """A reused Python worker must not serve a rewritten corpus file from
+    its cache: the entry is stamped with the file's (mtime_ns, size) and
+    replaced, not added to, when the stamp changes."""
+    import os
+
+    import numpy as np
+
+    from timing_explorer_spark.operators import similarity as sim
+
+    path = str(tmp_path / "corpus.parquet")
+    key = (path, "vec_id", "embedding")
+    _write_embeddings(path, [(1, [1.0, 0.0]), (2, [0.0, 1.0])])
+    try:
+        _, mat = sim._worker_load_matrix(path, "vec_id", "embedding")
+        assert mat.tolist() == [[1.0, 0.0], [0.0, 1.0]]
+        st = os.stat(path)
+        _write_embeddings(path, [(1, [0.0, 1.0]), (2, [1.0, 0.0])])
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+        ids, mat = sim._worker_load_matrix(path, "vec_id", "embedding")
+        assert ids.tolist() == [1, 2]
+        assert np.array_equal(mat, [[0.0, 1.0], [1.0, 0.0]])
+        assert [k for k in sim._WORKER_MATRIX_CACHE if k[0] == path] == [key]
+    finally:
+        sim._WORKER_MATRIX_CACHE.pop(key, None)
+
+
+def test_fused_pq_scans_equal_their_parts(spark, sf_smoke):
+    """_pq_index_scan is ivf_assign(n_probe=1) joined with pq_encode on id
+    (same bucket, same codes) and _pq_probe_scan probes ivf_assign's
+    buckets in its order. A zero-norm row keeps the bucket of the smallest
+    ||c||^2/2, the centroid its all-(-||c||^2/2) scores pick."""
+    import numpy as np
+
+    from timing_explorer_spark.operators.similarity import (
+        _pq_index_scan,
+        _pq_probe_scan,
+        ivf_assign,
+        pq_encode,
+    )
+
+    rng = np.random.default_rng(11)
+    centers = rng.normal(size=(16, 64)).tolist()
+    books = rng.normal(size=(8, 16, 8)).tolist()
+    zero = spark.createDataFrame([(-1, [0.0] * 64)], "vec_id long, embedding array<float>")
+    emb = load(spark, sf_smoke, "embeddings").select("vec_id", "embedding").unionByName(zero)
+
+    fused = {
+        r.neighbor_id: (r.bucket, list(r.codes))
+        for r in _pq_index_scan(emb, centers, books, "vec_id", "embedding", "neighbor_id").collect()
     }
-    tiled = {
-        r.query_id: (r.neighbor_id, r.cos)
-        for r in nearest_neighbor_all(emb, corpus_path=path, tile_rows=37).collect()
-    }
-    assert full.keys() == tiled.keys()
-    for qid, (nid, cos) in full.items():
-        t_nid, t_cos = tiled[qid]
-        assert t_nid == nid, (qid, nid, t_nid)
-        assert abs(t_cos - cos) < 1e-12
+    buckets = {r.vec_id: r.bucket for r in ivf_assign(emb, centers, "vec_id", "embedding").collect()}
+    codes = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
+    assert len(fused) == emb.count() > 1
+    assert fused == {i: (buckets[i], codes[i]) for i in buckets}
+    half_sq = (np.asarray(centers) ** 2).sum(axis=1) / 2.0
+    assert fused[-1][0] == int(np.argmin(half_sq))
 
+    def probed(df, id_col):
+        out: dict = {}
+        for r in df.collect():
+            out.setdefault(r[id_col], []).append(r.bucket)
+        return out
 
-def test_tiled_neardup_matches_full_matrix(spark, sf_smoke):
-    from timing_explorer_spark.operators.similarity import embedding_neardup_pairs
-    from timing_explorer_spark.sources.tables import load
-
-    emb = load(spark, sf_smoke, "embeddings")
-    path = f"{sf_smoke}/embeddings.parquet"
-    full = {(r.id_a, r.id_b) for r in embedding_neardup_pairs(emb, 0.45, corpus_path=path).collect()}
-    tiled = {
-        (r.id_a, r.id_b)
-        for r in embedding_neardup_pairs(emb, 0.45, corpus_path=path, tile_rows=41).collect()
-    }
-    assert full == tiled and len(full) > 0
-
-
-def test_tile_rows_requires_path(spark, sf_smoke):
-    import pytest as _pytest
-
-    from timing_explorer_spark.sources.tables import load
-
-    emb = load(spark, sf_smoke, "embeddings")
-    with _pytest.raises(ValueError):
-        nearest_neighbor_all(emb, tile_rows=10)
+    probe = _pq_probe_scan(emb, centers, books, "vec_id", "embedding", 4, with_score=True)
+    assert probed(probe, "query_id") == probed(
+        ivf_assign(emb, centers, "vec_id", "embedding", n_probe=4), "vec_id"
+    )
 
 
 def test_int8_topk_recall_vs_float(spark, sf_oracle):

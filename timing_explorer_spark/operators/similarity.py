@@ -8,17 +8,27 @@ turning the quadratic join into a bucketed equi-join (recall measured in
 tests/test_similarity.py). Embedding near-dup (cosine ≥ t over all pairs)
 reuses the same machinery.
 
-Everything is JVM-side column arithmetic (zip_with/aggregate); no Python UDF.
+Sparse and candidate work (brute force, LSH, IVF candidate scoring, the
+SemDeDup pair stage, ADC sums) is JVM-side column arithmetic
+(zip_with/aggregate). Dense algebra is the one exception: seven
+Arrow-batched numpy kernels in ``mapInPandas`` (all-pairs NN and near-dup,
+IVF assignment and residuals, PQ encoding, the two fused IVF-PQ scans),
+each composed from the worker-side helpers below, so every numpy decision
+(float64 matrix, zero-safe normalization, centroid scoring, bucket order,
+PQ code choice) is written once.
 """
 
 from __future__ import annotations
 
+import functools
+import os
 import random
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double, cosine, cosine_prenormed
+from ..functions.vectors import as_double, cosine_prenormed
 from ..functions.vectors import norm as vnorm
 
 
@@ -58,11 +68,85 @@ def brute_force_topk(
     return scored.select("*", F.row_number().over(w).alias("rank")).where(F.col("rank") <= k)
 
 
-# Per-worker-process cache of (ids, matrix) build sides loaded directly from
-# parquet by executor tasks. Keyed by (path, id_col, vec_col); a Python worker
+# ---- Worker-side numpy helpers: the dense kernels below compose these ----
+
+
+def _matrix(vectors) -> np.ndarray:
+    """An Arrow-batched array column (a pandas Series of arrays) as a
+    float64 (rows, dim) matrix."""
+    return np.vstack(vectors.to_numpy()).astype(np.float64)
+
+
+def _unit_rows(X: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(X with every row scaled to unit L2 norm, mask of its zero-norm
+    rows). A zero row has no direction: it stays the zero vector (its norm
+    counts as 1) instead of turning into NaN."""
+    norms = np.linalg.norm(X, axis=1, keepdims=True)
+    zero = norms[:, 0] == 0
+    norms[zero] = 1.0
+    return X / norms, zero
+
+
+class _Centroids:
+    """Nearest-centroid scoring against one centroid matrix (IVF coarse
+    centroids or one PQ codebook). argmin ||c - x|| == argmax c.x -
+    ||c||^2/2, so ``scores`` is one matmul and the nearest centroid has the
+    highest score."""
+
+    def __init__(self, centers) -> None:
+        self.C = np.asarray(centers, dtype=np.float64)  # (k, d)
+        self.half_sq = (self.C * self.C).sum(axis=1) / 2.0
+
+    def scores(self, X: np.ndarray) -> np.ndarray:
+        return X @ self.C.T - self.half_sq  # (rows, k)
+
+
+def _best_first(scores: np.ndarray, n: int) -> np.ndarray:
+    """Each row's ``n`` highest-scoring columns, best first (the IVF bucket
+    order: argsort of the negated scores, whose tie order argmax need not
+    share)."""
+    return np.argsort(-scores, axis=1)[:, :n]
+
+
+def _subspaces(X: np.ndarray, books: list[_Centroids]):
+    """(codebook j, the j-th contiguous subvector block of X) pairs."""
+    sub = books[0].C.shape[1]
+    return [(book, X[:, j * sub : (j + 1) * sub]) for j, book in enumerate(books)]
+
+
+def _pq_codes(X: np.ndarray, books: list[_Centroids]) -> np.ndarray:
+    """(rows, m) int32 PQ codes: code j is the nearest centroid of codebook
+    j to the j-th subvector."""
+    return np.stack(
+        [book.scores(piece).argmax(axis=1) for book, piece in _subspaces(X, books)], axis=1
+    ).astype(np.int32)
+
+
+def _map_batches(df: DataFrame, cols, schema: str, fn) -> DataFrame:
+    """``df.select(*cols).mapInPandas``: ``fn`` maps each non-empty pandas
+    batch to a dict of output columns."""
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not pdf.empty:
+                yield pd.DataFrame(fn(pdf))
+
+    return df.select(*cols).mapInPandas(run, schema)
+
+
+def _sql_type(df: DataFrame, col: str) -> str:
+    return df.schema[col].dataType.simpleString()
+
+
+# Per-worker-process cache of the build sides that executor tasks load from
+# parquet: (path, id_col, vec_col) -> (stamp, (ids, matrix)). A Python worker
 # is reused across tasks, so each worker pays the read once per corpus, which
 # is exactly the footprint a Spark broadcast would have on that worker —
-# minus the driver copy and the driver→executor transfer.
+# minus the driver copy and the driver→executor transfer. The stamp is the
+# path's (st_mtime_ns, st_size), worker_daemon.py's rule: a rewritten file is
+# read again and its entry replaced.
 _WORKER_MATRIX_CACHE: dict = {}
 
 
@@ -73,43 +157,47 @@ def _worker_load_matrix(corpus_path: str, id_col: str, vec_col: str):
     #3: `toPandas()` of the whole corpus would OOM the driver at 100× scale).
     In local mode the path is a local file; on a cluster it is the same
     object-store/DFS path every executor can read — the standard
-    "replicated build side by re-read" map-join pattern."""
-    import numpy as np
-
+    "replicated build side by re-read" map-join pattern. A path the worker
+    cannot stat (not a local file) has no stamp and is read every call."""
     key = (corpus_path, id_col, vec_col)
+    # stat before reading: a write racing the read leaves a stale stamp,
+    # so the next call reads again
+    try:
+        st = os.stat(corpus_path)
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        stamp = None
     hit = _WORKER_MATRIX_CACHE.get(key)
-    if hit is not None:
-        return hit
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return hit[1]
     import pyarrow.dataset as ds
 
     tbl = ds.dataset(corpus_path).to_table(columns=[id_col, vec_col])
     ids = tbl.column(id_col).to_numpy()
-    arr = tbl.column(vec_col).combine_chunks()
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    mat = flat.reshape(len(ids), -1)
-    _WORKER_MATRIX_CACHE[key] = (ids, mat)
+    flat = tbl.column(vec_col).combine_chunks().flatten()
+    mat = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(ids), -1)
+    if stamp is not None:
+        _WORKER_MATRIX_CACHE[key] = (stamp, (ids, mat))
     return ids, mat
 
 
-def _worker_iter_tiles(corpus_path: str, id_col: str, vec_col: str, tile_rows: int):
-    """Executor-side: stream the build side as bounded (ids, matrix) tiles
-    (pyarrow record batches re-chunked to ``tile_rows``). Peak memory is one
-    tile (+ the probe batch), independent of corpus size — the shape that
-    stays alive when the corpus outgrows worker memory and full-matrix
-    caching (_worker_load_matrix) stops being an option. IO amortization at
-    scale comes from Spark's own batching: one scan of the build side per
-    probe TASK, each task holding thousands of probe rows."""
-    import numpy as np
-    import pyarrow.dataset as ds
-
-    dataset = ds.dataset(corpus_path)
-    for rb in dataset.to_batches(columns=[id_col, vec_col], batch_size=tile_rows):
-        if rb.num_rows == 0:
-            continue
-        ids = rb.column(0).to_numpy(zero_copy_only=False)
-        arr = rb.column(1)
-        flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-        yield ids, flat.reshape(rb.num_rows, -1)
+def _dense_self_join(
+    corpus: DataFrame, id_col: str, vec_col: str, corpus_path: str | None, kernel, schema: str
+) -> DataFrame:
+    """Run ``kernel(build_ids, build_matrix, batches)`` over the corpus's
+    (vid, v) Arrow batches with the whole corpus as the build side. With
+    ``corpus_path`` (every registered query) each Python worker loads it
+    from parquet (_worker_load_matrix): zero driver materialization.
+    Without one (a frame not backed by a file) the driver collects and
+    broadcasts it, which bounds it by driver memory (~1M x 64 = 512 MB)."""
+    side = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    if corpus_path is None:
+        pdf = side.toPandas()
+        bc = corpus.sparkSession.sparkContext.broadcast((pdf["vid"].to_numpy(), _matrix(pdf["v"])))
+        build = lambda: bc.value  # noqa: E731
+    else:
+        build = lambda: _worker_load_matrix(corpus_path, id_col, vec_col)  # noqa: E731
+    return side.mapInPandas(lambda batches: kernel(*build(), batches), schema)
 
 
 def nearest_neighbor_all(
@@ -117,7 +205,6 @@ def nearest_neighbor_all(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     corpus_path: str | None = None,
-    tile_rows: int | None = None,
 ) -> DataFrame:
     """Top-1 neighbor for EVERY corpus vector (all-pairs cosine), exact.
 
@@ -125,13 +212,15 @@ def nearest_neighbor_all(
     Arrow-batched numpy by orders of magnitude (BLAS matmul vs per-element
     expression eval — measured 88 s vs <2 s at sf0.1), so this uses
     mapInPandas: each partition computes a (batch x N) matmul against the
-    full L2-normalized corpus matrix.
+    full L2-normalized corpus matrix (build side: _dense_self_join). Past
+    ~10^7 vectors prefer lsh_topk / ivf_topk — all-pairs exact NN over
+    100 TB is not a thing regardless of engine.
 
-    Build-side distribution: when ``corpus_path`` is given (the registered
-    query path), every Python worker loads the matrix itself from parquet
-    (_worker_load_matrix) — zero driver materialization. Without a path
-    (ad-hoc DataFrames in unit tests), the matrix is collected and broadcast;
-    that fallback is driver-bounded (~1M x 64 = 512 MB).
+    Ties go to the earliest build-side position. A zero vector has no
+    direction, so every cosine it takes part in is NaN (NULL), and NaN ranks
+    below every number: a query whose cosines are all NaN gets the lowest
+    other id with cos NULL — the registered oracle's ``ORDER BY cos DESC,
+    neighbor_id`` with NULLs last; a one-vector corpus has no row.
 
     Each partition is a Python task, and a Python task's fixed cost is not
     the JVM's ~3-5 ms scheduling floor: the worker's per-task setup comes on
@@ -139,72 +228,37 @@ def nearest_neighbor_all(
     of CPU per task against 2-4 ms of matmul at sf0.01, until the engine's
     worker daemon made the re-read lazy (OPERATORS.md, "Python worker
     daemon", has the per-task cost left).
-
-    ``tile_rows`` (needs corpus_path) bounds worker memory: the build side
-    streams as tiles (_worker_iter_tiles) with a running per-query best —
-    peak memory one tile regardless of corpus size, the configuration for a
-    corpus that outgrows worker RAM. Past ~10^7 vectors prefer lsh_topk /
-    ivf_topk — all-pairs exact NN over 100 TB is not a thing regardless of
-    engine.
     """
-    import numpy as np
+    return _dense_self_join(
+        corpus, id_col, vec_col, corpus_path, _nn_top1,
+        "query_id long, neighbor_id long, cos double",
+    )
+
+
+def _nn_top1(b_ids, b_mat, batches):
     import pandas as pd
 
-    if tile_rows is not None and corpus_path is None:
-        raise ValueError("tile_rows requires corpus_path (worker-side streaming)")
-    if corpus_path is None:
-        pdf = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).toPandas()
-        ids = pdf["vid"].to_numpy()
-        mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        bc = corpus.sparkSession.sparkContext.broadcast((ids, mat))
-        get_build_side = lambda: bc.value  # noqa: E731
-    else:
-        get_build_side = lambda: _worker_load_matrix(corpus_path, id_col, vec_col)  # noqa: E731
-
-    def top1(batches):
-        b_ids, b_mat = get_build_side()
-        b_mat = b_mat / np.linalg.norm(b_mat, axis=1, keepdims=True)
-        b_pos = {int(i): p for p, i in enumerate(b_ids)}
-        for batch in batches:
-            q = np.vstack(batch["v"].to_numpy()).astype(np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            sims = q @ b_mat.T
-            qids = batch["vid"].to_numpy()
-            for row, qid in enumerate(qids):
-                sims[row, b_pos[int(qid)]] = -np.inf  # exclude self
-            best = sims.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "query_id": qids,
-                    "neighbor_id": b_ids[best],
-                    "cos": sims[np.arange(len(qids)), best],
-                }
-            )
-
-    def top1_tiled(batches):
-        for batch in batches:
-            q = np.vstack(batch["v"].to_numpy()).astype(np.float64)
-            q /= np.linalg.norm(q, axis=1, keepdims=True)
-            qids = batch["vid"].to_numpy()
-            best_cos = np.full(len(qids), -np.inf)
-            best_id = np.zeros(len(qids), dtype=np.int64)
-            for t_ids, t_mat in _worker_iter_tiles(corpus_path, id_col, vec_col, tile_rows):
-                t_mat = t_mat / np.linalg.norm(t_mat, axis=1, keepdims=True)
-                sims = q @ t_mat.T
-                sims[qids[:, None] == t_ids[None, :]] = -np.inf  # exclude self
-                arg = sims.argmax(axis=1)
-                cand = sims[np.arange(len(qids)), arg]
-                # strict > keeps the EARLIEST corpus position on exact ties —
-                # the same choice argmax makes over the full matrix.
-                upd = cand > best_cos
-                best_cos[upd] = cand[upd]
-                best_id[upd] = t_ids[arg[upd]]
-            yield pd.DataFrame({"query_id": qids, "neighbor_id": best_id, "cos": best_cos})
-
-    return corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).mapInPandas(
-        top1 if tile_rows is None else top1_tiled,
-        schema="query_id long, neighbor_id long, cos double",
-    )
+    b_unit, b_zero = _unit_rows(b_mat)
+    b_zero = np.flatnonzero(b_zero)  # usually empty: the masking below is free
+    b_pos = {int(i): p for p, i in enumerate(b_ids)}
+    for batch in batches:
+        q, q_zero = _unit_rows(_matrix(batch["v"]))
+        sims = q @ b_unit.T
+        sims[:, b_zero] = -np.inf  # NaN cosines rank below every number
+        sims[q_zero] = -np.inf
+        qids = batch["vid"].to_numpy()
+        for row, qid in enumerate(qids):
+            sims[row, b_pos[int(qid)]] = -np.inf  # exclude self
+        best = sims.argmax(axis=1)
+        nid, cos = b_ids[best], sims[np.arange(len(qids)), best]
+        dead = cos == -np.inf  # no defined cosine: the lowest other id, NULL
+        if dead.any():
+            lo = np.sort(b_ids)[:2]
+            nid[dead] = np.where(qids[dead] == lo[0], lo[-1], lo[0])
+            cos[dead] = np.nan
+            keep = nid != qids  # a lone vector has no other id: no row
+            qids, nid, cos = qids[keep], nid[keep], cos[keep]
+        yield pd.DataFrame({"query_id": qids, "neighbor_id": nid, "cos": cos})
 
 
 def embedding_neardup_pairs(
@@ -213,70 +267,37 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     corpus_path: str | None = None,
-    tile_rows: int | None = None,
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold (embedding near-duplicate check).
 
-    Dense algebra on the Arrow fast path (same rationale as
+    Dense algebra on the Arrow fast path (same rationale and build side as
     nearest_neighbor_all): each partition computes a (batch x N) matmul
     against the full corpus matrix and emits only its thresholded pairs with
     id_a < id_b — so every unordered pair is scored exactly once and the
     output stays sparse. Replaces a BroadcastNestedLoopJoin with a per-pair
     interpreted HOF fold (measured 85 s -> ~2 s at sf0.1). BLAS pairwise
     summation differs from the sequential fold only in the last ~2 ulps —
-    far inside the 9-significant-digit oracle tolerance.
+    far inside the 9-significant-digit oracle tolerance. A zero vector's
+    cosines are NaN and pass no threshold. Past the full matrix, the LSH
+    prefilter (lsh_topk)."""
+    return _dense_self_join(
+        corpus, id_col, vec_col, corpus_path,
+        functools.partial(_neardup_pairs, threshold),
+        "id_a long, id_b long, cos double",
+    )
 
-    Build side: worker-side parquet re-read when ``corpus_path`` is given
-    (no driver materialization — see _worker_load_matrix); driver broadcast
-    fallback otherwise. ``tile_rows`` streams the build side in bounded
-    tiles (peak memory one tile — pairs are emitted per tile, no cross-tile
-    state); past that, the LSH prefilter (lsh_topk)."""
-    import numpy as np
+
+def _neardup_pairs(threshold, b_ids, b_mat, batches):
     import pandas as pd
 
-    if tile_rows is not None and corpus_path is None:
-        raise ValueError("tile_rows requires corpus_path (worker-side streaming)")
-    if corpus_path is None:
-        pdf = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).toPandas()
-        ids = pdf["vid"].to_numpy()
-        mat = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-        bc = corpus.sparkSession.sparkContext.broadcast((ids, mat))
-        get_build_side = lambda: bc.value  # noqa: E731
-    else:
-        get_build_side = lambda: _worker_load_matrix(corpus_path, id_col, vec_col)  # noqa: E731
-
-    def pairs(batches):
-        b_ids, b_mat = get_build_side()
-        b_norms = np.linalg.norm(b_mat, axis=1)
-        for batch in batches:
-            q = np.vstack(batch["v"].to_numpy()).astype(np.float64)
-            qids = batch["vid"].to_numpy()
-            qn = np.linalg.norm(q, axis=1)
-            cos = (q @ b_mat.T) / np.outer(qn, b_norms)
-            # id_a < id_b keeps each unordered pair exactly once.
-            keep = (cos >= threshold) & (qids[:, None] < b_ids[None, :])
-            r, c = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"id_a": qids[r], "id_b": b_ids[c], "cos": cos[r, c]}
-            )
-
-    def pairs_tiled(batches):
-        for batch in batches:
-            q = np.vstack(batch["v"].to_numpy()).astype(np.float64)
-            qids = batch["vid"].to_numpy()
-            qn = np.linalg.norm(q, axis=1)
-            for t_ids, t_mat in _worker_iter_tiles(corpus_path, id_col, vec_col, tile_rows):
-                t_norms = np.linalg.norm(t_mat, axis=1)
-                cos = (q @ t_mat.T) / np.outer(qn, t_norms)
-                keep = (cos >= threshold) & (qids[:, None] < t_ids[None, :])
-                r, c = np.nonzero(keep)
-                if len(r):
-                    yield pd.DataFrame({"id_a": qids[r], "id_b": t_ids[c], "cos": cos[r, c]})
-
-    return corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).mapInPandas(
-        pairs if tile_rows is None else pairs_tiled,
-        schema="id_a long, id_b long, cos double",
-    )
+    b_norms = np.linalg.norm(b_mat, axis=1)
+    for batch in batches:
+        q = _matrix(batch["v"])
+        qids = batch["vid"].to_numpy()
+        cos = (q @ b_mat.T) / np.outer(np.linalg.norm(q, axis=1), b_norms)
+        # id_a < id_b keeps each unordered pair exactly once.
+        r, c = np.nonzero((cos >= threshold) & (qids[:, None] < b_ids[None, :]))
+        yield pd.DataFrame({"id_a": qids[r], "id_b": b_ids[c], "cos": cos[r, c]})
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -401,53 +422,31 @@ def ivf_assign(
     n_probe: int = 1,
     id_alias: str | None = None,
     vec_alias: str | None = None,
-    with_score: bool = False,
 ) -> DataFrame:
     """Assign each vector to its ``n_probe`` nearest centroids (euclidean on
     the L2-normalized vector == cosine order against fixed centers:
-    argmin ||c - x|| == argmax c.x - ||c||^2/2).
+    argmin ||c - x|| == argmax c.x - ||c||^2/2). A zero vector scores
+    -||c||^2/2 everywhere, so it lands in the centroid of smallest norm.
 
     Dense (batch x centroids) scoring is a numpy matmul via Arrow batches —
     the same dense-algebra exception as nearest_neighbor_all; the centroid
     matrix rides the closure (n_centroids x dim doubles, KBs). Output has one
-    row per (vector, probed bucket); ``with_score`` adds ``cscore`` =
-    <normalized vector, centroid> (the exact first-order term the residual-PQ
-    ADC decomposition needs: <q̂,x̂> = <q̂,c_b> + <q̂,residual>)."""
-    import numpy as np
-
-    C = np.asarray(centers, dtype=np.float64)  # (k, d)
-    half_sq = (C * C).sum(axis=1) / 2.0
+    row per (vector, probed bucket), best bucket first."""
+    cq = _Centroids(centers)
     n_probe = min(n_probe, len(centers))
     ida = id_alias or id_col
     va = vec_alias or vec_col
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{ida} {id_type}, {va} array<float>, bucket int"
-    if with_score:
-        schema += ", cscore double"
 
-    def fn(batches):
-        import pandas as pd
+    def assign(pdf):
+        order = _best_first(cq.scores(_unit_rows(_matrix(pdf[vec_col]))[0]), n_probe)
+        return {
+            ida: np.repeat(pdf[id_col].to_numpy(), n_probe),
+            va: [v for v in pdf[vec_col] for _ in range(n_probe)],
+            "bucket": order.reshape(-1).astype("int32"),
+        }
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(X, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            scores = (X / norms) @ C.T - half_sq  # (b, k)
-            # top n_probe buckets per row, best first
-            order = np.argsort(-scores, axis=1)[:, :n_probe]
-            out = {
-                ida: np.repeat(pdf[id_col].to_numpy(), n_probe),
-                va: [v for v in pdf[vec_col] for _ in range(n_probe)],
-                "bucket": order.reshape(-1).astype("int32"),
-            }
-            if with_score:
-                dots = scores + half_sq  # <x̂, c> without the -||c||²/2 shift
-                out["cscore"] = np.take_along_axis(dots, order, axis=1).reshape(-1)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, vec_col).mapInPandas(fn, schema)
+    schema = f"{ida} {_sql_type(df, id_col)}, {va} array<float>, bucket int"
+    return _map_batches(df, (id_col, vec_col), schema, assign)
 
 
 def ivf_residuals(
@@ -461,36 +460,20 @@ def ivf_residuals(
     minus its nearest coarse centroid — the quantity residual PQ encodes
     (Jégou et al. 2011 §IV; FAISS IVFPQ's default). Same Arrow-batched dense
     shape as ivf_assign (centroid matrix in the closure, n_probe=1)."""
-    import numpy as np
-
-    C = np.asarray(centers, dtype=np.float64)
-    half_sq = (C * C).sum(axis=1) / 2.0
+    cq = _Centroids(centers)
     ida = id_alias or id_col
-    id_type = df.schema[id_col].dataType.simpleString()
 
-    def fn(batches):
-        import pandas as pd
+    def residuals(pdf):
+        Xn = _unit_rows(_matrix(pdf[vec_col]))[0]
+        best = cq.scores(Xn).argmax(axis=1)
+        return {
+            ida: pdf[id_col].to_numpy(),
+            "bucket": best.astype("int32"),
+            "rvec": list(Xn - cq.C[best]),
+        }
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(X, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            Xn = X / norms
-            best = (Xn @ C.T - half_sq).argmax(axis=1)
-            R = Xn - C[best]
-            yield pd.DataFrame(
-                {
-                    ida: pdf[id_col].to_numpy(),
-                    "bucket": best.astype("int32"),
-                    "rvec": list(R),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        fn, f"{ida} {id_type}, bucket int, rvec array<double>"
-    )
+    schema = f"{ida} {_sql_type(df, id_col)}, bucket int, rvec array<double>"
+    return _map_batches(df, (id_col, vec_col), schema, residuals)
 
 
 def ivf_topk(
@@ -863,42 +846,23 @@ def pq_encode(
     ANN serving tier). ``carry_cols`` pass through unchanged — a consumer
     that needs (id, bucket, codes) gets it in THIS scan instead of joining
     the codes back to the source on id (a full-corpus shuffle at scale)."""
-    import numpy as np
-
-    C = [np.asarray(b, dtype=np.float64) for b in books]  # m x (k, sub)
-    m = len(C)
-    sub = C[0].shape[1]
+    pq = [_Centroids(b) for b in books]
     ida = id_alias or id_col
-    id_type = df.schema[id_col].dataType.simpleString()
-    carry_types = {c: df.schema[c].dataType.simpleString() for c in carry_cols}
 
-    def fn(batches):
-        import pandas as pd
+    def encode(pdf):
+        X = _matrix(pdf[vec_col])
+        if normalize:
+            X = _unit_rows(X)[0]
+        out = {ida: pdf[id_col].to_numpy()}
+        for c in carry_cols:
+            out[c] = pdf[c].to_numpy()
+        out["codes"] = list(_pq_codes(X, pq))
+        return out
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if normalize:
-                norms = np.linalg.norm(X, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                X = X / norms
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                piece = X[:, j * sub : (j + 1) * sub]  # (b, sub)
-                # argmin ||c - x|| == argmax c.x - ||c||^2/2 per subspace
-                scores = piece @ C[j].T - (C[j] * C[j]).sum(axis=1) / 2.0
-                codes[:, j] = scores.argmax(axis=1)
-            out = {ida: pdf[id_col].to_numpy()}
-            for c in carry_cols:
-                out[c] = pdf[c].to_numpy()
-            out["codes"] = list(codes)
-            yield pd.DataFrame(out)
-
-    schema = f"{ida} {id_type}, " + "".join(
-        f"{c} {carry_types[c]}, " for c in carry_cols
+    schema = f"{ida} {_sql_type(df, id_col)}, " + "".join(
+        f"{c} {_sql_type(df, c)}, " for c in carry_cols
     ) + "codes array<int>"
-    return df.select(id_col, *carry_cols, vec_col).mapInPandas(fn, schema)
+    return _map_batches(df, (id_col, *carry_cols, vec_col), schema, encode)
 
 
 def _pq_index_scan(
@@ -914,49 +878,22 @@ def _pq_index_scan(
     index. Replaces ivf_assign(n_probe=1) ⋈ pq_encode on id, which read the
     corpus through the Python boundary twice and zipped the two map-only
     derivations with a full-corpus shuffle join (r12, guide §2.1/§4.2).
-    The math is the byte-identical composition of the two operators it
-    fuses: same normalization, the assign keeps ivf_assign's
-    argsort-of-negated-scores bucket choice (not argmax — tie order must
-    not change), the codes keep pq_encode's per-subspace argmax. The full
-    vector never crosses back out of Python (ivf_assign returned cvec only
-    for a downstream projection to drop it)."""
-    import numpy as np
+    It composes the helpers those two operators call (normalization,
+    ivf_assign's argsort bucket order, pq_encode's per-subspace argmax), so
+    its output is theirs joined on id (pinned in tests). The full vector
+    never crosses back out of Python."""
+    cq, pq = _Centroids(centers), [_Centroids(b) for b in books]
 
-    Cc = np.asarray(centers, dtype=np.float64)  # (k, d)
-    half_sq = (Cc * Cc).sum(axis=1) / 2.0
-    B = [np.asarray(b, dtype=np.float64) for b in books]  # m x (k_sub, sub)
-    m = len(B)
-    sub = B[0].shape[1]
-    id_type = df.schema[id_col].dataType.simpleString()
+    def scan(pdf):
+        X = _unit_rows(_matrix(pdf[vec_col]))[0]
+        return {
+            id_alias: pdf[id_col].to_numpy(),
+            "bucket": _best_first(cq.scores(X), 1).reshape(-1).astype("int32"),
+            "codes": list(_pq_codes(X, pq)),
+        }
 
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(X, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            X = X / norms
-            scores = X @ Cc.T - half_sq
-            order = np.argsort(-scores, axis=1)[:, :1]
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                piece = X[:, j * sub : (j + 1) * sub]
-                s = piece @ B[j].T - (B[j] * B[j]).sum(axis=1) / 2.0
-                codes[:, j] = s.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_alias: pdf[id_col].to_numpy(),
-                    "bucket": order.reshape(-1).astype("int32"),
-                    "codes": list(codes),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        fn, f"{id_alias} {id_type}, bucket int, codes array<int>"
-    )
+    schema = f"{id_alias} {_sql_type(df, id_col)}, bucket int, codes array<int>"
+    return _map_batches(df, (id_col, vec_col), schema, scan)
 
 
 def _pq_probe_scan(
@@ -970,54 +907,33 @@ def _pq_probe_scan(
 ) -> DataFrame:
     """Fused IVF probe assign + ADC lookup table for the query side of
     IVF-PQ: ONE Arrow pass emitting one row per (query, probed bucket) with
-    the flattened LUT on every row. Replaces ivf_assign(n_probe) ⋈
-    _pq_query_luts on query_id (two scans + a join whose output carried the
-    LUT per probe row anyway — the broadcast payload is unchanged). Same
-    fusion-soundness rules as _pq_index_scan: identical normalization,
-    identical argsort bucket order, cscore identical to ivf_assign
-    with_score (r12, guide §2.1/§4.2)."""
-    import numpy as np
-
-    Cc = np.asarray(centers, dtype=np.float64)
-    half_sq = (Cc * Cc).sum(axis=1) / 2.0
-    B = [np.asarray(b, dtype=np.float64) for b in books]
-    m, k_sub = len(B), B[0].shape[0]
-    sub = B[0].shape[1]
+    the flattened LUT (one m x k_sub inner-product table) on every row.
+    Same helpers and bucket order as ivf_assign(n_probe) (r12, guide
+    §2.1/§4.2). ``with_score`` adds ``cscore`` = <q̂, c_bucket>, the exact
+    first-order term of the residual-PQ ADC decomposition
+    <q̂,x̂> = <q̂,c_b> + <q̂,residual>."""
+    cq, pq = _Centroids(centers), [_Centroids(b) for b in books]
     n_probe = min(n_probe, len(centers))
-    id_type = queries.schema[id_col].dataType.simpleString()
-    schema = f"query_id {id_type}, bucket int"
-    if with_score:
-        schema += ", cscore double"
-    schema += ", lut array<double>"
+    schema = f"query_id {_sql_type(queries, id_col)}, bucket int" + (
+        ", cscore double" if with_score else ""
+    ) + ", lut array<double>"
 
-    def fn(batches):
-        import pandas as pd
+    def probe(pdf):
+        X = _unit_rows(_matrix(pdf[vec_col]))[0]
+        scores = cq.scores(X)
+        order = _best_first(scores, n_probe)
+        luts = np.hstack([piece @ book.C.T for book, piece in _subspaces(X, pq)])
+        out = {
+            "query_id": np.repeat(pdf[id_col].to_numpy(), n_probe),
+            "bucket": order.reshape(-1).astype("int32"),
+        }
+        if with_score:
+            dots = scores + cq.half_sq  # <x̂, c> without the -||c||²/2 shift
+            out["cscore"] = np.take_along_axis(dots, order, axis=1).reshape(-1)
+        out["lut"] = [lut for lut in luts for _ in range(n_probe)]
+        return out
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(X, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            X = X / norms
-            scores = X @ Cc.T - half_sq
-            order = np.argsort(-scores, axis=1)[:, :n_probe]
-            luts = np.empty((len(X), m * k_sub), dtype=np.float64)
-            for j in range(m):
-                luts[:, j * k_sub : (j + 1) * k_sub] = (
-                    X[:, j * sub : (j + 1) * sub] @ B[j].T
-                )
-            out = {
-                "query_id": np.repeat(pdf[id_col].to_numpy(), n_probe),
-                "bucket": order.reshape(-1).astype("int32"),
-            }
-            if with_score:
-                dots = scores + half_sq
-                out["cscore"] = np.take_along_axis(dots, order, axis=1).reshape(-1)
-            out["lut"] = [lut for lut in luts for _ in range(n_probe)]
-            yield pd.DataFrame(out)
-
-    return queries.select(id_col, vec_col).mapInPandas(fn, schema)
+    return _map_batches(queries, (id_col, vec_col), schema, probe)
 
 
 def ivfpq_topk(
@@ -1059,7 +975,7 @@ def ivfpq_topk(
     (pooled residual codebooks, trained with normalize=False), and the
     ADC score decomposes exactly as <q̂,x̂> = <q̂,c_b> + <q̂,residual> —
     the first term computed exactly per (query, probed bucket)
-    (ivf_assign with_score), the second from the same LUT sum. Residuals
+    (_pq_probe_scan's cscore), the second from the same LUT sum. Residuals
     are smaller than raw vectors, so the same code budget quantizes finer
     (measured in BENCH_ivfpq_sweep.json: the ADC-only recall gap). Scale
     shape: one corpus shuffle on bucket; LUTs broadcast with the (small)
