@@ -37,15 +37,19 @@ def main() -> int:
     from timing_explorer_spark.plans import all_queries
     from timing_explorer_spark.sources.tables import warm_cache
 
+    qs = all_queries()
+    if only is not None:
+        unknown = only - set(qs)
+        if unknown:
+            print(f"unknown --only names: {sorted(unknown)}")
+            return 2
+        qs = {k: v for k, v in qs.items() if k in only}
+
     spark = bench_session("bench-registry")
     spark.sparkContext.setLogLevel("ERROR")
     # events.props stays cached: the sweep runs q_json_extract and
     # q_data_profile, which read it.
     warm_cache(spark, sf_dir, **{**WARM_CACHE_LAYOUT, "drop_columns": None})
-
-    qs = all_queries()
-    if only is not None:
-        qs = {k: v for k, v in qs.items() if k in only}
 
     results: dict[str, dict] = {}
     t_start = time.monotonic()

@@ -318,6 +318,75 @@ def test_pagerank_convergence_deterministic_under_partitioning(spark):
     assert a == b
 
 
+def _pagerank_reference(edges, iterations):
+    """[{doc: units}] for rounds 0..iterations of the fixed-point recurrence
+    in plain Python integers, dangling share included."""
+    from timing_explorer_spark.operators.graph import BASE, DAMP_DEN, DAMP_NUM, SCALE
+
+    nodes = {n for e in edges for n in e}
+    outs = {n: [d for s, d in edges if s == n] for n in nodes}
+    rounds = [{n: SCALE for n in nodes}]
+    for _ in range(iterations):
+        units = rounds[-1]
+        dang = sum(units[n] for n in nodes if not outs[n])
+        nxt = {n: BASE + dang * DAMP_NUM // (DAMP_DEN * len(nodes)) for n in nodes}
+        for s in nodes:
+            for d in outs[s]:
+                nxt[d] += units[s] * DAMP_NUM // (DAMP_DEN * len(outs[s]))
+        rounds.append(nxt)
+    return rounds
+
+
+def test_pagerank_family_exact_against_reference(spark):
+    """Every PageRank entry point equals the integer reference to the unit,
+    for 0..3 rounds: the undirected form on a triangle with a tail, the
+    directed pair on a graph whose node 5 has no out-links (dangling)."""
+    from timing_explorer_spark.operators.graph import (
+        SCALE,
+        pagerank_directed,
+        pagerank_directed_convergence,
+        pagerank_fixed,
+    )
+
+    def units(df):
+        return {r["doc"]: round(r["rank"] * SCALE) for r in df.collect()}
+
+    pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)]
+    directed = [(1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (2, 5), (6, 1)]
+    pairs_df = spark.createDataFrame(pairs, ["doc_a", "doc_b"])
+    edges_df = spark.createDataFrame(directed, ["src", "dst"])
+    und = _pagerank_reference(pairs + [(b, a) for a, b in pairs], 3)
+    ref = _pagerank_reference(directed, 3)
+    assert any(u != SCALE for u in ref[1].values())
+    for it in range(4):
+        assert units(pagerank_fixed(pairs_df, it)) == und[it]
+        assert units(pagerank_directed(edges_df, it)) == ref[it]
+    want = [
+        (i, sum(abs(ref[i][n] - ref[i - 1][n]) for n in ref[i]),
+         max(abs(ref[i][n] - ref[i - 1][n]) for n in ref[i]))
+        for i in range(1, 4)
+    ]
+    for it in range(1, 4):
+        got = sorted(map(tuple, pagerank_directed_convergence(edges_df, it).collect()))
+        assert got == want[:it]
+
+
+def test_pagerank_convergence_rejects_fewer_than_one_round(spark):
+    """No round means no delta row: both the Spark operator and its oracle
+    refuse ``iterations < 1`` by name instead of failing on an empty list."""
+    from timing_explorer_spark.operators.graph import (
+        pagerank_directed_convergence,
+        pagerank_directed_convergence_oracle_sql,
+    )
+
+    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match=f"iterations.*{bad}"):
+            pagerank_directed_convergence(edges, iterations=bad)
+        with pytest.raises(ValueError, match=f"iterations.*{bad}"):
+            pagerank_directed_convergence_oracle_sql("SELECT 1 AS src, 2 AS dst", bad)
+
+
 def test_hits_hub_authority_separation(spark):
     """r9: on a bipartite hub->authority fan (h0,h1 each link to a0..a3;
     nothing links to hubs, authorities have no outlinks), HITS must give

@@ -264,6 +264,26 @@ def test_semdedup_same_seed_deterministic(spark, sf_oracle):
     assert a == b
 
 
+def test_semdedup_pairs_cache_is_released(spark, sf_smoke):
+    """Every RDD a q_semdedup_pairs build persists is gone after
+    release_cached(): the salted self-join's per-row frame is tracked, not
+    left cached for the session's lifetime. Compared as RDD ids, so a
+    cleanup of older RDDs during the run cannot hide a leak."""
+    from timing_explorer_spark.operators.dedup import release_cached
+    from timing_explorer_spark.plans import all_queries
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    release_cached()
+    before = persisted()
+    df = all_queries()["q_semdedup_pairs"].build(spark, sf_smoke)
+    df.write.mode("overwrite").format("noop").save()
+    assert persisted() - before  # the build did cache something
+    release_cached()
+    assert persisted() - before == set()
+
+
 def test_kmeans_cluster_profile_invariants(spark, sf_smoke):
     from timing_explorer_spark.plans import all_queries
 

@@ -1,8 +1,10 @@
 """Graph analytics over similarity/duplicate edge lists.
 
-``pagerank_fixed``: damped PageRank with FIXED-POINT integer arithmetic and a
-fixed iteration count — the design that makes an iterative algorithm
-oracle-checkable and cluster-deterministic at once:
+The PageRank family (``pagerank_fixed``, ``pagerank_directed``,
+``pagerank_directed_convergence``) is one damped recurrence with
+FIXED-POINT integer arithmetic and a fixed iteration count — the design
+that makes an iterative algorithm oracle-checkable and cluster-deterministic
+at once:
 
   - ranks live in integer units (10^6 = 1.0); the per-edge contribution is
     (units * 85) DIV (100 * deg) — pure integer multiply/divide, so every
@@ -11,23 +13,31 @@ oracle-checkable and cluster-deterministic at once:
   - a fixed iteration count (power iteration converges geometrically;
     5 rounds is plenty for ranking within small near-dup components) keeps
     the computation a finite, unrollable dataflow: the DuckDB oracle is the
-    same recurrence unrolled into chained CTEs.
+    same recurrence unrolled into chained CTEs (``_oracle_chain``).
 
-Scale shape per iteration: one join (edges ⋈ ranks on src) + one aggregation
-(sum of contributions by dst) — the same co-partitioned bounded-shuffle loop
-as ``resolve_components`` (operators/dedup.py). Ranks persist per round via
-a lazy ``localCheckpoint`` (lineage cut + persist — the r9 doctrine shared
-with ``pagerank_directed``): plan depth stays O(1) in the iteration count
-and repeated actions read the final round instead of re-running the
-fixpoint. At 100 TB you would additionally pre-partition both edge
-endpoints and ranks on the node key so every round reuses one partitioning.
+All three run the one round loop ``_rank_rounds``. Scale shape (r9, the
+power-law-skew-proof form): edges are pre-grouped ONCE into cached per-src
+adjacency lists, and the node/degree table is derived from those lists, so
+the upstream edge derivation runs once. The per-round join is adjacency ⋈
+ranks with EXACTLY ONE row per key on each side — an out-degree hub cannot
+skew a join in which it is a single row (GraphX's messaging layout without
+the library); in-degree hubs are absorbed by the map-side partial sum of
+the dst aggregation. Each round's rank table is a lazy ``localCheckpoint``
+(lineage cut + persist): plan depth stays O(1) in the iteration count and
+repeated actions read the final round instead of re-running the fixpoint.
 
-Dangling-node note: the near-dup graph is symmetric (every node has
-deg ≥ 1 by construction — nodes exist only via edges), so no dangling-mass
-redistribution term is needed.
+Dangling mass: a directed graph has nodes with no out-links, whose damped
+mass is redistributed uniformly (a 1-row aggregate broadcast back per
+round). ``pagerank_fixed`` symmetrizes its pairs, so every node is a src
+with deg ≥ 1: the adjacency lists are the node table, the dangling term is
+always 0 and the loop leaves it out — the undirected round is one join
+plus one aggregate, with no broadcasts.
 """
 
 from __future__ import annotations
+
+import functools
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,63 +47,84 @@ DAMP_NUM, DAMP_DEN = 85, 100
 BASE = SCALE - SCALE * DAMP_NUM // DAMP_DEN  # (1-d) * scale = 150000
 
 
+def _rank_rounds(
+    edges: DataFrame, iterations: int, symmetric: bool
+) -> Iterator[DataFrame]:
+    """Yield the (doc, deg, units) rank table of rounds 0..iterations over
+    (src, dst) ``edges`` (``symmetric``: every dst is also a src); each
+    table is a lazy localCheckpoint, so the next round's references
+    (contribution join, dangling aggregate, a caller's delta join) read it
+    instead of re-growing the lineage tree (uncut it grows 2^iterations
+    and a default-memory driver OOMs just RENDERING it, r9). Cluster note:
+    swap for checkpoint() with a reliable dir when executor loss must be
+    survivable."""
+    from .dedup import track_cache
+
+    adj = track_cache(
+        edges.groupBy("src").agg(
+            F.collect_list("dst").alias("dsts"),
+            F.count(F.lit(1)).cast("bigint").alias("deg"),
+        )
+    )
+    if symmetric:
+        nodes = adj.select(F.col("src").alias("doc"), "deg")
+    else:
+        nodes = track_cache(
+            adj.select(F.col("src").alias("doc"))
+            .unionAll(adj.select(F.explode("dsts").alias("doc")))
+            .distinct()
+            .join(adj.select("src", "deg"), F.col("doc") == F.col("src"), "left")
+            .select("doc", F.coalesce("deg", F.lit(0)).cast("bigint").alias("deg"))
+        )
+        n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
+    ranks = nodes.select(
+        "doc", "deg", F.lit(SCALE).cast("bigint").alias("units")
+    ).localCheckpoint(eager=False)
+    yield ranks
+    for _ in range(iterations):
+        contrib = (
+            adj.join(ranks.select("doc", "units"), adj.src == F.col("doc"))
+            .select(
+                F.explode("dsts").alias("dst"),
+                F.expr(f"(units * {DAMP_NUM}) DIV ({DAMP_DEN} * deg)").alias("c"),
+            )
+            .groupBy("dst")
+            .agg(F.sum("c").alias("in_units"))
+        )
+        nxt = nodes.join(contrib, nodes.doc == contrib.dst, "left")
+        units = F.lit(BASE) + F.coalesce(F.col("in_units"), F.lit(0))
+        if not symmetric:
+            dang = ranks.where(F.col("deg") == 0).agg(
+                F.coalesce(F.sum("units"), F.lit(0)).alias("dang_units")
+            )
+            nxt = nxt.crossJoin(F.broadcast(dang)).crossJoin(F.broadcast(n_nodes))
+            units = units + F.expr(f"(dang_units * {DAMP_NUM}) DIV ({DAMP_DEN} * n)")
+        ranks = nxt.select(
+            "doc", "deg", units.cast("bigint").alias("units")
+        ).localCheckpoint(eager=False)
+        yield ranks
+
+
+def _final_rank(edges: DataFrame, iterations: int, symmetric: bool) -> DataFrame:
+    *_, ranks = _rank_rounds(edges, iterations, symmetric)
+    return ranks.select(
+        "doc", (F.col("units").cast("double") / F.lit(float(SCALE))).alias("rank")
+    )
+
+
 def pagerank_fixed(
     pairs: DataFrame,
     iterations: int = 5,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
 ) -> DataFrame:
-    """(doc, rank) over the undirected pair graph; rank = units / 10^6."""
-    from .dedup import track_cache
-
-    # Persist the edge list: the rank recurrence references it in every
-    # round (plus deg/nodes), and without a materialization boundary the
-    # upstream pair computation (e.g. the jaccard inverted-index self-join)
-    # re-executes once per reference — measured 25-44 s vs ~4 s cached at
-    # sf0.1. Same lifecycle as the dedup caches (released by
-    # release_cached()).
-    edges = track_cache(
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).unionAll(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
+    """(doc, rank) over the undirected pair graph; rank = units / 10^6.
+    Each pair is an edge both ways (a duplicated pair counts twice)."""
+    a, b = F.col(a_col), F.col(b_col)
+    edges = pairs.select(a.alias("src"), b.alias("dst")).unionAll(
+        pairs.select(b.alias("src"), a.alias("dst"))
     )
-    # Loop-invariant node/degree table: cached once like the directed
-    # variant's adj/nodes — otherwise every round re-runs the deg
-    # aggregate (r12, guide §5.3).
-    nodes = track_cache(
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .select(F.col("src").alias("doc"), "deg")
-    )
-    ranks = nodes.select("doc", "deg", F.lit(SCALE).cast("bigint").alias("units"))
-    for _ in range(iterations):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.doc)
-            .select(
-                F.col("dst"),
-                F.expr(f"(units * {DAMP_NUM}) DIV ({DAMP_DEN} * deg)").alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_units"))
-        )
-        # Per-round lazy localCheckpoint — the same lineage-cut-plus-persist
-        # the directed variant has carried since r9. Without it the final
-        # plan inlines all `iterations` rounds and EVERY action re-runs the
-        # whole fixpoint (the warm bench path re-ran 5 rounds per noop
-        # save; measured 0.6 s -> checkpoint-read at sf0.01). Values are
-        # fixed-point integers — bit-identical with or without the cut.
-        ranks = (
-            nodes.join(contrib, nodes.doc == contrib.dst, "left")
-            .select(
-                "doc",
-                "deg",
-                (F.lit(BASE) + F.coalesce(F.col("in_units"), F.lit(0)))
-                .cast("bigint")
-                .alias("units"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select("doc", (F.col("units").cast("double") / F.lit(float(SCALE))).alias("rank"))
+    return _final_rank(edges, iterations, symmetric=True)
 
 
 def pagerank_directed(
@@ -105,87 +136,18 @@ def pagerank_directed(
     """(doc, rank) over a DIRECTED edge list — true link-graph PageRank
     (r8): mass flows src -> dst only, out-degree divides the contribution,
     and DANGLING nodes (linked-to pages with no outlinks — ubiquitous in a
-    crawl frontier) redistribute their damped mass uniformly. Same
-    fixed-point integer arithmetic as pagerank_fixed, so every engine and
-    partitioning produces identical bits; the dangling share is
-    (dangling_units * 85) DIV (100 * n_nodes) per node — the integer
-    division leaks < n_nodes units per round (sub-normalized,
-    deterministic, mirrored exactly by the oracle).
-
-    Scale shape per round (r9, the power-law-skew-proof form): edges are
-    pre-grouped ONCE into per-src adjacency lists (loop-invariant), so the
-    per-round join is adjacency ⋈ ranks with EXACTLY ONE row per key on
-    each side — an out-degree hub cannot skew a join in which it is a
-    single row (GraphX's messaging layout without the library). In-degree
-    hubs are absorbed by the map-side partial sum of the dst aggregation
-    (a hub's million contributions collapse to one partial row per task
-    before the shuffle). Adjacency arrays are bounded by a page's OUT-link
-    count — naturally small in real link graphs (in-degree is where
-    power-law mass lives, and that never materializes as an array here).
-    Plus a 1-row dangling-mass aggregate broadcast back per round (never
-    fact-sized). Verified against a 250,000x-median-degree synthetic hub
-    in scripts/bench_linkgraph_skew.py (BENCH_sf1.json "link_graph_skew").
+    crawl frontier) redistribute their damped mass uniformly. The dangling
+    share is (dangling_units * 85) DIV (100 * n_nodes) per node — the
+    integer division leaks < n_nodes units per round (sub-normalized,
+    deterministic, mirrored exactly by the oracle). Adjacency arrays are
+    bounded by a page's OUT-link count — naturally small in real link
+    graphs (in-degree is where power-law mass lives, and that never
+    materializes as an array here). Verified against a
+    250,000x-median-degree synthetic hub in scripts/bench_linkgraph_skew.py
+    (BENCH_sf1.json "link_graph_skew").
     """
-    from .dedup import track_cache
-
-    edges = edges_df.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    adj = track_cache(
-        edges.groupBy("src").agg(
-            F.collect_list("dst").alias("dsts"),
-            F.count(F.lit(1)).cast("bigint").alias("deg"),
-        )
-    )
-    nodes = track_cache(
-        edges.select(F.col("src").alias("doc"))
-        .unionAll(edges.select(F.col("dst").alias("doc")))
-        .distinct()
-        .join(adj.select("src", "deg"), F.col("doc") == F.col("src"), "left")
-        .select("doc", F.coalesce("deg", F.lit(0)).cast("bigint").alias("deg"))
-    )
-    n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
-    ranks = nodes.select("doc", "deg", F.lit(SCALE).cast("bigint").alias("units"))
-    for _ in range(iterations):
-        contrib = (
-            adj.join(ranks.select("doc", "units"), adj.src == F.col("doc"))
-            .select(
-                F.explode("dsts").alias("dst"),
-                F.expr(f"(units * {DAMP_NUM}) DIV ({DAMP_DEN} * deg)").alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_units"))
-        )
-        dang = ranks.where(F.col("deg") == 0).agg(
-            F.coalesce(F.sum("units"), F.lit(0)).alias("dang_units")
-        )
-        share = F.expr(f"(dang_units * {DAMP_NUM}) DIV ({DAMP_DEN} * n)")
-        # lazy localCheckpoint = lineage cut per round: the next round's
-        # plan references this one TWICE (contrib + dangling mass), so an
-        # uncut tree grows 2^iterations and a default-memory driver OOMs
-        # just RENDERING it (r9). The cut also persists each round, so no
-        # recompute fan-out. Cluster note: swap for checkpoint() with a
-        # reliable dir when executor loss must be survivable.
-        ranks = (
-            nodes.join(contrib, nodes.doc == contrib.dst, "left")
-            .crossJoin(F.broadcast(dang))
-            .crossJoin(F.broadcast(n_nodes))
-            .select(
-                "doc",
-                "deg",
-                (
-                    F.lit(BASE)
-                    + F.coalesce(F.col("in_units"), F.lit(0))
-                    + share
-                )
-                .cast("bigint")
-                .alias("units"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select(
-        "doc", (F.col("units").cast("double") / F.lit(float(SCALE))).alias("rank")
-    )
+    edges = edges_df.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    return _final_rank(edges, iterations, symmetric=False)
 
 
 def pagerank_directed_convergence(
@@ -201,75 +163,20 @@ def pagerank_directed_convergence(
     geometrically, so consecutive deltas shrinking by ~the damping factor
     is the healthy signature; a flat tail means more rounds are needed).
 
-    Deltas are over the fixed-point integer units, so the output is
-    bit-deterministic and oracle-checkable like the ranks themselves. Each
-    round's rank table is lazily localCheckpoint-ed: THREE consumers
-    reference it (the next round's contribution join, its dangling
-    aggregate, and the delta join), so an uncut lineage tree would grow
-    3^iterations (the r9 driver-heap lesson from resolve_components); the
-    cut also persists each round, so the extra cost over the rank loop is
-    one co-partitioned join + a 1-row aggregate per round.
+    Deltas are over the fixed-point integer units between consecutive
+    rounds of the same loop, so the output is bit-deterministic and
+    oracle-checkable like the ranks themselves; the extra cost over the
+    rank loop is one co-partitioned join + a 1-row aggregate per round.
     """
-    from .dedup import track_cache
-
-    edges = edges_df.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    adj = track_cache(
-        edges.groupBy("src").agg(
-            F.collect_list("dst").alias("dsts"),
-            F.count(F.lit(1)).cast("bigint").alias("deg"),
-        )
-    )
-    nodes = track_cache(
-        edges.select(F.col("src").alias("doc"))
-        .unionAll(edges.select(F.col("dst").alias("doc")))
-        .distinct()
-        .join(adj.select("src", "deg"), F.col("doc") == F.col("src"), "left")
-        .select("doc", F.coalesce("deg", F.lit(0)).cast("bigint").alias("deg"))
-    )
-    n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
-    ranks = nodes.select(
-        "doc", "deg", F.lit(SCALE).cast("bigint").alias("units")
-    ).localCheckpoint(eager=False)
-    deltas = []
-    for i in range(1, iterations + 1):
-        contrib = (
-            adj.join(ranks.select("doc", "units"), adj.src == F.col("doc"))
-            .select(
-                F.explode("dsts").alias("dst"),
-                F.expr(f"(units * {DAMP_NUM}) DIV ({DAMP_DEN} * deg)").alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_units"))
-        )
-        dang = ranks.where(F.col("deg") == 0).agg(
-            F.coalesce(F.sum("units"), F.lit(0)).alias("dang_units")
-        )
-        share = F.expr(f"(dang_units * {DAMP_NUM}) DIV ({DAMP_DEN} * n)")
-        prev = ranks
-        ranks = (
-            nodes.join(contrib, nodes.doc == contrib.dst, "left")
-            .crossJoin(F.broadcast(dang))
-            .crossJoin(F.broadcast(n_nodes))
-            .select(
-                "doc",
-                "deg",
-                (
-                    F.lit(BASE)
-                    + F.coalesce(F.col("in_units"), F.lit(0))
-                    + share
-                )
-                .cast("bigint")
-                .alias("units"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        diff = F.abs(
-            F.col("cur.units") - F.col("prev.units")
-        )
-        deltas.append(
-            ranks.alias("cur")
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    edges = edges_df.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    rounds = list(_rank_rounds(edges, iterations, symmetric=False))
+    diff = F.abs(F.col("cur.units") - F.col("prev.units"))
+    return functools.reduce(
+        DataFrame.unionAll,
+        [
+            cur.alias("cur")
             .join(prev.alias("prev"), F.col("cur.doc") == F.col("prev.doc"))
             .agg(
                 F.sum(diff).cast("bigint").alias("l1_delta_units"),
@@ -280,27 +187,26 @@ def pagerank_directed_convergence(
                 "l1_delta_units",
                 "linf_delta_units",
             )
-        )
-    out = deltas[0]
-    for d in deltas[1:]:
-        out = out.unionAll(d)
-    return out
+            for i, (prev, cur) in enumerate(zip(rounds, rounds[1:]), 1)
+        ],
+    )
 
 
-def pagerank_directed_convergence_oracle_sql(
-    edges_sql: str, iterations: int = 5
-) -> str:
-    """pagerank_directed_convergence unrolled as chained DuckDB CTEs — the
-    same it0..itN chain as pagerank_directed_oracle_sql plus one delta
-    aggregate per consecutive pair."""
+def _oracle_chain(edges_sql: str, iterations: int, tail: str) -> str:
+    """The rank recurrence unrolled as chained DuckDB CTEs ``edges``,
+    ``nodes``, ``it0``..``itN`` over (src, dst) rows, followed by ``tail``.
+    MATERIALIZED: round i references round i-1 twice (contributions and
+    the dangling total), so inlined CTEs would expand 2^iterations times."""
     ctes = [
-        f"edges AS ({edges_sql})",
+        f"edges AS MATERIALIZED ({edges_sql})",
         "outdeg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)",
-        "nodes AS (SELECT n.doc, CAST(COALESCE(o.deg, 0) AS BIGINT) AS deg"
+        "nodes AS MATERIALIZED"
+        " (SELECT n.doc, CAST(COALESCE(o.deg, 0) AS BIGINT) AS deg"
         " FROM (SELECT src AS doc FROM edges UNION SELECT dst FROM edges) n"
         " LEFT JOIN outdeg o ON o.src = n.doc)",
         "nn AS (SELECT COUNT(*) AS n FROM nodes)",
-        f"it0 AS (SELECT doc, deg, CAST({SCALE} AS BIGINT) AS units FROM nodes)",
+        f"it0 AS MATERIALIZED"
+        f" (SELECT doc, deg, CAST({SCALE} AS BIGINT) AS units FROM nodes)",
     ]
     for i in range(1, iterations + 1):
         ctes.append(
@@ -309,7 +215,7 @@ def pagerank_directed_convergence_oracle_sql(
                 FROM it{i - 1} WHERE deg = 0)"""
         )
         ctes.append(
-            f"""it{i} AS (
+            f"""it{i} AS MATERIALIZED (
                 SELECT d.doc, d.deg,
                        CAST({BASE}
                             + COALESCE(SUM((p.units * {DAMP_NUM}) // ({DAMP_DEN} * p.deg)), 0)
@@ -322,79 +228,47 @@ def pagerank_directed_convergence_oracle_sql(
                   ON p.dst = d.doc
                 GROUP BY d.doc, d.deg)"""
         )
-    selects = [
-        f"""SELECT CAST({i} AS INTEGER) AS iteration,
-                   CAST(SUM(ABS(a.units - b.units)) AS BIGINT) AS l1_delta_units,
-                   CAST(MAX(ABS(a.units - b.units)) AS BIGINT) AS linf_delta_units
-            FROM it{i} a JOIN it{i - 1} b ON a.doc = b.doc"""
-        for i in range(1, iterations + 1)
-    ]
-    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
+    return "WITH " + ",\n".join(ctes) + "\n" + tail
 
 
 def pagerank_directed_oracle_sql(edges_sql: str, iterations: int = 5) -> str:
     """pagerank_directed's recurrence unrolled as chained DuckDB CTEs —
     ``edges_sql`` must yield (src, dst) directed rows."""
-    ctes = [
-        f"edges AS ({edges_sql})",
-        "outdeg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)",
-        "nodes AS (SELECT n.doc, CAST(COALESCE(o.deg, 0) AS BIGINT) AS deg"
-        " FROM (SELECT src AS doc FROM edges UNION SELECT dst FROM edges) n"
-        " LEFT JOIN outdeg o ON o.src = n.doc)",
-        "nn AS (SELECT COUNT(*) AS n FROM nodes)",
-        f"it0 AS (SELECT doc, deg, CAST({SCALE} AS BIGINT) AS units FROM nodes)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""dang{i} AS (
-                SELECT COALESCE(SUM(units), 0) AS dang_units
-                FROM it{i - 1} WHERE deg = 0)"""
-        )
-        ctes.append(
-            f"""it{i} AS (
-                SELECT d.doc, d.deg,
-                       CAST({BASE}
-                            + COALESCE(SUM((p.units * {DAMP_NUM}) // ({DAMP_DEN} * p.deg)), 0)
-                            + (SELECT (dang_units * {DAMP_NUM}) // ({DAMP_DEN} * n)
-                               FROM dang{i}, nn) AS BIGINT) AS units
-                FROM nodes d
-                LEFT JOIN (SELECT e.dst, i.units, i.deg
-                           FROM edges e JOIN it{i - 1} i ON e.src = i.doc
-                           WHERE i.deg > 0) p
-                  ON p.dst = d.doc
-                GROUP BY d.doc, d.deg)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT doc, CAST(units AS DOUBLE) / {SCALE} AS rank FROM it{iterations}"
+    return _oracle_chain(
+        edges_sql,
+        iterations,
+        f"SELECT doc, CAST(units AS DOUBLE) / {SCALE} AS rank FROM it{iterations}",
+    )
+
+
+def pagerank_directed_convergence_oracle_sql(
+    edges_sql: str, iterations: int = 5
+) -> str:
+    """pagerank_directed_convergence as the same CTE chain plus one delta
+    aggregate per consecutive pair."""
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    return _oracle_chain(
+        edges_sql,
+        iterations,
+        "\nUNION ALL\n".join(
+            f"""SELECT CAST({i} AS INTEGER) AS iteration,
+                   CAST(SUM(ABS(a.units - b.units)) AS BIGINT) AS l1_delta_units,
+                   CAST(MAX(ABS(a.units - b.units)) AS BIGINT) AS linf_delta_units
+            FROM it{i} a JOIN it{i - 1} b ON a.doc = b.doc"""
+            for i in range(1, iterations + 1)
+        ),
     )
 
 
 def pagerank_oracle_sql(pairs_sql: str, iterations: int = 5) -> str:
-    """The identical recurrence unrolled as chained DuckDB CTEs."""
-    ctes = [
-        f"pairs AS ({pairs_sql})",
-        "edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs"
-        " UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs)",
-        "deg AS (SELECT src AS doc, COUNT(*) AS deg FROM edges GROUP BY src)",
-        f"it0 AS (SELECT doc, deg, CAST({SCALE} AS BIGINT) AS units FROM deg)",
-    ]
-    for i in range(1, iterations + 1):
-        ctes.append(
-            f"""it{i} AS (
-                SELECT d.doc, d.deg,
-                       CAST({BASE} + COALESCE(SUM((p.units * {DAMP_NUM}) // ({DAMP_DEN} * p.deg)), 0) AS BIGINT) AS units
-                FROM deg d
-                LEFT JOIN (SELECT e.dst, i.units, i.deg
-                           FROM edges e JOIN it{i - 1} i ON e.src = i.doc) p
-                  ON p.dst = d.doc
-                GROUP BY d.doc, d.deg)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT doc, CAST(units AS DOUBLE) / {SCALE} AS rank FROM it{iterations}"
+    """pagerank_fixed's oracle: the directed chain over the UNION ALL-
+    symmetrized ``pairs_sql`` (doc_a, doc_b) rows; no node is dangling
+    there, so the dangling share evaluates to 0."""
+    return pagerank_directed_oracle_sql(
+        f"WITH pairs AS ({pairs_sql}) SELECT doc_a AS src, doc_b AS dst FROM pairs"
+        " UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs",
+        iterations,
     )
 
 

@@ -710,15 +710,15 @@ def semdedup_pairs(
             as_double(F.col(vec_col)), F.lit(0.0), lambda acc, x: acc + x * x
         )
     )
-    assigned = (
-        ivf_assign(embs, centers, id_col, vec_col, n_probe=1)
-        .select(
+    from .dedup import track_cache
+
+    assigned = track_cache(
+        ivf_assign(embs, centers, id_col, vec_col, n_probe=1).select(
             "bucket",
             F.col(id_col),
             F.transform(as_double(F.col(vec_col)), lambda x: x / nrm).alias("__vn"),
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt)).alias("__salt"),
         )
-        .persist()
     )
     a = assigned.select(
         "bucket", "__salt", F.col(id_col).alias("id_a"), F.col("__vn").alias("__va")

@@ -455,8 +455,9 @@ from ..operators.graph import pagerank_oracle_sql  # noqa: E402
         "cluster better than min-id when clusters are chains. Fixed-point "
         "integer arithmetic ((units*85) DIV (100*deg)) makes every round "
         "bit-deterministic on any cluster; the oracle is the same recurrence "
-        "unrolled into chained CTEs. One co-partitioned join + one agg per "
-        "round (the resolve_components shuffle shape)."
+        "unrolled into chained CTEs. The pairs are symmetrized once into "
+        "cached per-src adjacency lists; per round one one-row-per-key "
+        "adjacency-ranks join + one dst aggregate."
     ),
     tags=("dedup", "graph", "pagerank", "iterative"),
 )

@@ -3008,54 +3008,10 @@ _LINK_PAIRS_SQL = f"""
 """
 
 
-@register(
-    "q_link_pagerank",
-    oracle=pagerank_oracle_sql(_LINK_PAIRS_SQL, iterations=5),
-    doc=(
-        "Link-graph centrality: damped PageRank (5 fixed rounds, the "
-        "fixed-point-integer recurrence of operators/graph.py — "
-        "bit-deterministic on any cluster) over the DISTINCT intra-corpus "
-        "link edges extracted from page markup — the Common Crawl-style "
-        "quality-weighting signal a mixture owner feeds into sampling "
-        "weights. Undirected-pair form (the pagerank_fixed contract — a "
-        "co-citation-style centrality; the directed variant is the same "
-        "recurrence without the edge symmetrization). Oracle = the "
-        "identical recurrence unrolled into chained CTEs over the same "
-        "edge extraction. One co-partitioned join + one agg per round; "
-        "the edge list persists across rounds."
-    ),
-    tags=("graph", "pagerank", "links", "crawl", "llm-pipeline"),
-)
-def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import pagerank_fixed
-
-    pages = _link_pages(load(spark, sf_dir, "documents"))
-    hrefs = F.concat(
-        F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
-        F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
-    )
-    target = F.nullif(F.regexp_extract("url", r"/doc/(\d+)", 1), F.lit(""))
-    pairs = (
-        pages.select("doc_id", F.explode(hrefs).alias("url"))
-        .select("doc_id", target.cast("long").alias("dst"))
-        .where(F.col("dst").isNotNull() & (F.col("dst") != F.col("doc_id")))
-        .select(F.col("doc_id").alias("doc_a"), F.col("dst").alias("doc_b"))
-        .distinct()
-    )
-    return pagerank_fixed(pairs, iterations=5)
-
-
-from ..operators.graph import pagerank_directed_oracle_sql  # noqa: E402
-
-_LINK_EDGES_SQL = _LINK_PAIRS_SQL.replace("doc_id AS doc_a", "doc_id AS src").replace(
-    "CAST(u AS BIGINT) AS doc_b", "CAST(u AS BIGINT) AS dst"
-)
-
-
 def _link_edges(pages: DataFrame) -> DataFrame:
     """DISTINCT intra-corpus (src, dst) link edges from the synthesized page
-    markup — the shared front end of the directed link-graph family
-    (PageRank, convergence, components, rank-weighted budget)."""
+    markup — the shared front end of the link-graph family (undirected and
+    directed PageRank, convergence, components, rank-weighted budget)."""
     hrefs = F.concat(
         F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
         F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
@@ -3071,6 +3027,41 @@ def _link_edges(pages: DataFrame) -> DataFrame:
 
 
 @register(
+    "q_link_pagerank",
+    oracle=pagerank_oracle_sql(_LINK_PAIRS_SQL, iterations=5),
+    doc=(
+        "Link-graph centrality: damped PageRank (5 fixed rounds, the "
+        "fixed-point-integer recurrence of operators/graph.py — "
+        "bit-deterministic on any cluster) over the DISTINCT intra-corpus "
+        "link edges extracted from page markup — the Common Crawl-style "
+        "quality-weighting signal a mixture owner feeds into sampling "
+        "weights. Undirected-pair form (the pagerank_fixed contract — a "
+        "co-citation-style centrality; the directed variant is the same "
+        "recurrence without the edge symmetrization). Oracle = the "
+        "identical recurrence unrolled into chained CTEs over the same "
+        "edge extraction. Runs the shared PageRank round loop over the "
+        "symmetrized edges: cached per-src adjacency lists, then per round "
+        "one one-row-per-key adjacency-ranks join + one dst aggregate, "
+        "each round's ranks checkpointed."
+    ),
+    tags=("graph", "pagerank", "links", "crawl", "llm-pipeline"),
+)
+def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.graph import pagerank_fixed
+
+    docs = load(spark, sf_dir, "documents")
+    pairs = _link_edges(_link_pages(docs)).toDF("doc_a", "doc_b")
+    return pagerank_fixed(pairs, iterations=5)
+
+
+from ..operators.graph import pagerank_directed_oracle_sql  # noqa: E402
+
+_LINK_EDGES_SQL = _LINK_PAIRS_SQL.replace("doc_id AS doc_a", "doc_id AS src").replace(
+    "CAST(u AS BIGINT) AS doc_b", "CAST(u AS BIGINT) AS dst"
+)
+
+
+@register(
     "q_link_pagerank_directed",
     oracle=pagerank_directed_oracle_sql(_LINK_EDGES_SQL, iterations=5),
     doc=(
@@ -3082,7 +3073,7 @@ def _link_edges(pages: DataFrame) -> DataFrame:
         "< n_nodes units/round, mirrored exactly). Same fixed-point "
         "arithmetic as the undirected q_link_pagerank — the two queries "
         "differ ONLY in edge symmetrization, which is the documented "
-        "contrast. Per round: one co-partitioned edges-ranks join + agg, "
+        "contrast. Per round: one one-row-per-key adjacency-ranks join + agg, "
         "plus a 1-row dangling-mass broadcast (never fact-sized)."
     ),
     tags=("graph", "pagerank", "links", "crawl", "directed", "llm-pipeline"),
