@@ -157,6 +157,17 @@ def test_canonicalize_url_cases(spark):
     df = spark.createDataFrame(cases, "url string, want string")
     for r in df.select(canonicalize_url(F.col("url")).alias("got"), "want").collect():
         assert r["got"] == r["want"]
+    # cross-engine pin: the DuckDB oracle mirror agrees on every case
+    import duckdb
+
+    from timing_explorer_spark.operators.html_extract import canonicalize_url_sql
+
+    con = duckdb.connect()
+    for url, want in cases:
+        (oracle,) = con.execute(
+            f"SELECT {canonicalize_url_sql('u')} FROM (SELECT $1 AS u)", [url]
+        ).fetchone()
+        assert oracle == want, (url, oracle)
 
 
 def test_canonicalize_url_idempotent_fuzz(spark):

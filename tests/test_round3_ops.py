@@ -845,6 +845,19 @@ def test_budget_sampler_deterministic_and_rate_bounded(spark, sf_oracle):
             assert abs(any_doc["sample_rate"] - row["sample_rate"]) < 1e-12
 
 
+def test_approx_ntile3_buckets_empty_ranks(spark):
+    """An empty rank table buckets to an empty (doc, rank, n_tokens,
+    bucket) frame, like the exact NTILE variant — percentile_approx over
+    zero rows is NULL, so there are no thresholds to read."""
+    from timing_explorer_spark.plans.text_pipeline import approx_ntile3_buckets
+
+    ranks = spark.createDataFrame([], "doc long, rank long")
+    tokens = spark.createDataFrame([(1, 5)], "doc_id long, n_tokens int")
+    out = approx_ntile3_buckets(ranks, tokens)
+    assert out.columns == ["doc", "rank", "n_tokens", "bucket"]
+    assert out.collect() == []
+
+
 def test_budget_sampled_corpus_approx_pins(spark, sf_oracle):
     """r11 verdict task #1: the scale-safe (approx-bucket) budget sampler.
     Pins: (a) deterministic across reruns; (b) its kept set differs from
@@ -975,6 +988,17 @@ def test_registrable_domain_psl_subset(spark):
         ).collect()
     }
     assert got == cases
+    # cross-engine pin: the DuckDB oracle mirror agrees on every case
+    import duckdb
+
+    from timing_explorer_spark.operators.html_extract import registrable_domain_sql
+
+    con = duckdb.connect()
+    for h, want in cases.items():
+        (oracle,) = con.execute(
+            f"SELECT {registrable_domain_sql('h')} FROM (SELECT $1 AS h)", [h]
+        ).fetchone()
+        assert oracle == want, (h, oracle)
 
 
 _SPINE_RECURSIVE_SQL = """

@@ -320,9 +320,17 @@ def synthesize_html(text: Column, doc_id: Column) -> Column:
     )
 
 
+def sql_quote(s: str) -> str:
+    """``s`` as a DuckDB string literal: single quotes doubled. DuckDB
+    takes backslashes literally, so a Python regex needs nothing else."""
+    return "'" + s.replace("'", "''") + "'"
+
+
 # tracking parameters every crawl canonicalizer strips (public convention:
 # the UTM family + the big platforms' click ids)
 _TRACKING_PARAM_RX = r"^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_eid)="
+# the port each scheme drops when it is spelled out
+_DEFAULT_PORTS = {"http": "80", "https": "443"}
 
 
 def canonicalize_url(url: Column) -> Column:
@@ -331,21 +339,21 @@ def canonicalize_url(url: Column) -> Column:
     case / default port):
 
       - scheme and host lowercased
-      - default port stripped (:80 for http, :443 for https)
+      - default port stripped (_DEFAULT_PORTS)
       - fragment dropped
-      - tracking params dropped (utm_*, fbclid, gclid, msclkid, ref, mc_eid)
+      - tracking params dropped (_TRACKING_PARAM_RX)
       - remaining query params sorted bytewise; empty query -> no '?'
       - empty path -> '/'
 
-    Pure regexp + HOF column expression (map-only; DuckDB-mirrorable for
-    the oracle). Non-URL input degrades gracefully (empty components)."""
+    Pure regexp + HOF column expression (map-only); canonicalize_url_sql is
+    its DuckDB mirror for the oracles. Non-URL input degrades gracefully
+    (empty components)."""
     scheme = F.lower(F.regexp_extract(url, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1))
     hostport = F.lower(F.regexp_extract(url, r"^[^:]+://([^/?#]*)", 1))
-    host = (
-        F.when(scheme == "http", F.regexp_replace(hostport, r":80$", ""))
-        .when(scheme == "https", F.regexp_replace(hostport, r":443$", ""))
-        .otherwise(hostport)
-    )
+    host = F  # F.when opens the CASE, Column.when adds each later branch
+    for name, port in _DEFAULT_PORTS.items():
+        host = host.when(scheme == name, F.regexp_replace(hostport, f":{port}$", ""))
+    host = host.otherwise(hostport)
     path = F.regexp_extract(url, r"^[^:]+://[^/?#]*([^?#]*)", 1)
     path = F.when(F.length(path) == 0, F.lit("/")).otherwise(path)
     query = F.regexp_extract(url, r"\?([^#]*)", 1)
@@ -359,6 +367,30 @@ def canonicalize_url(url: Column) -> Column:
         F.size(params) > 0, F.concat(F.lit("?"), F.array_join(params, "&"))
     ).otherwise(F.lit(""))
     return F.concat(scheme, F.lit("://"), host, path, qpart)
+
+
+def canonicalize_url_sql(url: str) -> str:
+    """The DuckDB mirror of canonicalize_url over the SQL expression
+    ``url`` (named several times, so pass a column, not a computation).
+    Written independently in DuckDB regexp/list functions; only the data
+    constants are shared with the Spark expression."""
+    scheme = rf"lower(regexp_extract({url}, '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1))"
+    hostport = rf"lower(regexp_extract({url}, '^[^:]+://([^/?#]*)', 1))"
+    host = " ".join(
+        f"WHEN '{name}' THEN regexp_replace({hostport}, ':{port}$', '')"
+        for name, port in _DEFAULT_PORTS.items()
+    )
+    path = rf"regexp_extract({url}, '^[^:]+://[^/?#]*([^?#]*)', 1)"
+    params = (
+        rf"list_sort(list_filter(string_split(regexp_extract({url}, '\?([^#]*)', 1),"
+        rf" '&'), p -> LENGTH(p) > 0 AND NOT regexp_matches(p, "
+        rf"{sql_quote(_TRACKING_PARAM_RX)})))"
+    )
+    return (
+        f"({scheme} || '://' || CASE {scheme} {host} ELSE {hostport} END"
+        f" || coalesce(nullif({path}, ''), '/')"
+        f" || coalesce('?' || nullif(array_to_string({params}, '&'), ''), ''))"
+    )
 
 
 # Multi-label public suffixes recognized by registrable_domain — a small
@@ -388,8 +420,8 @@ def registrable_domain(host: Column) -> Column:
     the single last label), keep suffix + one label. Degenerate inputs
     degrade gracefully: a bare TLD or a lone label (localhost) returns
     itself; a host that IS a public suffix (co.uk) returns itself, where
-    the full PSL would say "no registrable domain". DuckDB-mirrorable
-    (list slicing + CASE IN) for oracle-checked queries."""
+    the full PSL would say "no registrable domain". registrable_domain_sql
+    is its DuckDB mirror for the oracles."""
     h = F.regexp_replace(F.lower(host), r":[0-9]+$", "")
     labels = F.split(h, r"\.")
     n = F.size(labels)
@@ -399,3 +431,16 @@ def registrable_domain(host: Column) -> Column:
     ).otherwise(F.lit(1))
     take = F.least(n, suffix_len + 1)
     return F.array_join(F.slice(labels, -take, take), ".")
+
+
+def registrable_domain_sql(host: str) -> str:
+    """The DuckDB mirror of registrable_domain over the SQL expression
+    ``host``: the same port strip and label split, with DuckDB's clamped
+    negative list slices keeping the last two or three labels (a one-label
+    host never matches the all-dotted suffix set)."""
+    labels = f"string_split(regexp_replace(lower({host}), ':[0-9]+$', ''), '.')"
+    suffixes = ", ".join(sql_quote(s) for s in _MULTI_LABEL_SUFFIXES)
+    return (
+        f"array_to_string(CASE WHEN array_to_string({labels}[-2:], '.')"
+        f" IN ({suffixes}) THEN {labels}[-3:] ELSE {labels}[-2:] END, '.')"
+    )

@@ -8,7 +8,7 @@ flag to match Spark's replace-all default.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -19,6 +19,16 @@ from ..functions.text import (
     stopword_ratio,
     token_count,
     tokens,
+)
+from ..operators.html_extract import (
+    canonicalize_url,
+    canonicalize_url_sql,
+    extract_main_text,
+    registrable_domain,
+    registrable_domain_sql,
+    sql_quote,
+    strip_html,
+    synthesize_html,
 )
 from ..sources.tables import load
 from .registry import register
@@ -1179,8 +1189,6 @@ def _strip_sql(inner: str) -> str:
     tags=("text", "html", "crawl", "llm-pipeline"),
 )
 def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.html_extract import strip_html, synthesize_html
-
     d = load(spark, sf_dir, "documents")
     clean = strip_html(synthesize_html(F.col("text"), F.col("doc_id")))
     return d.select(
@@ -1208,8 +1216,6 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "html", "crawl", "boilerplate", "llm-pipeline"),
 )
 def q_html_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.html_extract import extract_main_text, synthesize_html
-
     d = load(spark, sf_dir, "documents")
     pages = d.select(
         "doc_id",
@@ -1327,7 +1333,6 @@ def q_warc_gz_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "warc", "html", "crawl", "llm-pipeline"),
 )
 def q_warc_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.html_extract import strip_html, synthesize_html
     from ..sources.warc import synthetic_warc_blobs, warc_records
 
     pages = load(spark, sf_dir, "documents").select(
@@ -1343,57 +1348,30 @@ def q_warc_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_url_canonicalize",
-    oracle="""
-        WITH raw AS (
+    oracle=f"""
+        SELECT doc_id, url, {canonicalize_url_sql("url")} AS canonical_url
+        FROM (
             SELECT doc_id,
                    'HTTP://Example.COM:80/Doc/' || CAST(doc_id AS VARCHAR)
                    || '?utm_source=news&b=' || CAST(n_chars AS VARCHAR)
                    || '&a=' || CAST(doc_id AS VARCHAR) || '&fbclid=xyz#frag'
                        AS url
             FROM documents
-        ),
-        parts AS (
-            SELECT doc_id, url,
-                   lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
-                   lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1))  AS hostport,
-                   regexp_extract(url, '^[^:]+://[^/?#]*([^?#]*)', 1)   AS path,
-                   regexp_extract(url, '\\?([^#]*)', 1)                 AS query
-            FROM raw
-        ),
-        canon AS (
-            SELECT doc_id, url, scheme,
-                   CASE WHEN scheme = 'http'  THEN regexp_replace(hostport, ':80$', '')
-                        WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-                        ELSE hostport END AS host,
-                   CASE WHEN LENGTH(path) = 0 THEN '/' ELSE path END AS path2,
-                   list_sort(list_filter(string_split(query, '&'),
-                       p -> LENGTH(p) > 0 AND NOT regexp_matches(p,
-                            '^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_eid)=')))
-                       AS params
-            FROM parts
         )
-        SELECT doc_id, url,
-               scheme || '://' || host || path2
-               || CASE WHEN len(params) > 0
-                       THEN '?' || array_to_string(params, '&')
-                       ELSE '' END AS canonical_url
-        FROM canon
     """,
     doc=(
         "URL canonicalization — the crawl-dedup KEY (two fetches of one "
         "page routinely differ only in tracking params / fragment / case / "
         "default port): lowercase scheme+host, strip default port, drop "
-        "fragment and tracking params (utm_*, fbclid, gclid, msclkid, ref, "
-        "mc_eid), sort surviving query params "
+        "fragment and tracking params, sort surviving query params "
         "(operators/html_extract.py::canonicalize_url). Map-only regexp + "
-        "HOF expression; the DuckDB oracle mirrors every step on the same "
-        "synthesized messy URLs, so the whole normalization is hash-checked."
+        "HOF expression; the oracle runs its DuckDB mirror "
+        "(canonicalize_url_sql) on the same synthesized messy URLs, so the "
+        "whole normalization is hash-checked."
     ),
     tags=("text", "url", "crawl", "dedup", "llm-pipeline"),
 )
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.html_extract import canonicalize_url
-
     d = load(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("HTTP://Example.COM:80/Doc/"),
@@ -2125,7 +2103,6 @@ def _crawl_cleaned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions.text import fix_mojibake
-    from ..operators.html_extract import strip_html, synthesize_html
     from ..sources.warc import synthetic_warc_blobs, warc_records
 
     d = load(spark, sf_dir, "documents")
@@ -2414,9 +2391,11 @@ from ..operators.graph import pagerank_oracle_sql  # noqa: E402
 # messy-cased tracking-parameter one and a single-quoted fragment one), one
 # external asset link, and (r10 verdict task #5) one anchor whose inner text
 # carries NESTED MARKUP (<b>) — the case the r9 [^<]* grammar silently
-# dropped — all reproduced VERBATIM in the DuckDB oracles. The nested anchor
-# targets a non-/doc/ URL so the intra-corpus EDGE set (and with it the
-# whole PageRank/HITS/BFS family) is unchanged.
+# dropped. _link_pages builds it in Spark and _LINK_HTML_SQL in DuckDB; the
+# href regexes are shared (sql_quote) and every oracle canonicalizes through
+# the html_extract mirrors (canonicalize_url_sql, registrable_domain_sql).
+# The nested anchor targets a non-/doc/ URL so the intra-corpus EDGE set
+# (and with it the whole PageRank/HITS/BFS family) is unchanged.
 _LINK_HTML_SQL = (
     "'<html><body><p>see also</p>"
     "<a class=\"nav\" href=\"HTTP://Example.COM:80/doc/' "
@@ -2431,6 +2410,29 @@ _LINK_HTML_SQL = (
 
 _DQ_HREF = r'(?i)<a\s[^>]*href\s*=\s*"([^"]*)"'
 _SQ_HREF = r"(?i)<a\s[^>]*href\s*=\s*'([^']*)'"
+
+
+def _link_hrefs() -> Column:
+    """Every anchor href of the ``html`` column, double-quoted ones first."""
+    return F.concat(
+        F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
+        F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
+    )
+
+
+# (doc_id, link_idx, url): every href of the synthesized pages, 1-based
+# position in _link_hrefs order
+_LINK_URLS_SQL = f"""
+    SELECT doc_id, i AS link_idx, hrefs[i] AS url
+    FROM (
+        SELECT doc_id,
+               list_concat(
+                   regexp_extract_all(html, {sql_quote(_DQ_HREF)}, 1),
+                   regexp_extract_all(html, {sql_quote(_SQ_HREF)}, 1)
+               ) AS hrefs
+        FROM (SELECT doc_id, {_LINK_HTML_SQL} AS html FROM documents)
+    ), UNNEST(range(1, LEN(hrefs) + 1)) AS r(i)
+"""
 
 
 def _link_pages(d: DataFrame) -> DataFrame:
@@ -2459,54 +2461,14 @@ def _link_pages(d: DataFrame) -> DataFrame:
 @register(
     "q_link_graph",
     oracle=f"""
-        WITH raw AS (
-            SELECT doc_id, {_LINK_HTML_SQL} AS html FROM documents
-        ),
-        arrs AS (
-            SELECT doc_id,
-                   list_concat(
-                       regexp_extract_all(html, '{_DQ_HREF}', 1),
-                       regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*''([^'']*)''', 1)
-                   ) AS hrefs
-            FROM raw
-        ),
-        exploded AS (
-            SELECT doc_id, i AS link_idx, hrefs[i] AS url
-            FROM arrs, UNNEST(range(1, LEN(hrefs) + 1)) AS r(i)
-        ),
-        parts AS (
-            SELECT doc_id, link_idx, url,
-                   lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
-                   lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1))  AS hostport,
-                   regexp_extract(url, '^[^:]+://[^/?#]*([^?#]*)', 1)   AS path,
-                   regexp_extract(url, '\\?([^#]*)', 1)                 AS query
-            FROM exploded
-        ),
-        canon AS (
-            SELECT doc_id, link_idx, scheme,
-                   CASE WHEN scheme = 'http'  THEN regexp_replace(hostport, ':80$', '')
-                        WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-                        ELSE hostport END AS host,
-                   CASE WHEN LENGTH(path) = 0 THEN '/' ELSE path END AS path2,
-                   list_sort(list_filter(string_split(query, '&'),
-                       p -> LENGTH(p) > 0 AND NOT regexp_matches(p,
-                            '^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_eid)=')))
-                       AS params
-            FROM parts
-        ),
-        edges AS (
-            SELECT doc_id, link_idx,
-                   scheme || '://' || host || path2
-                   || CASE WHEN len(params) > 0
-                           THEN '?' || array_to_string(params, '&')
-                           ELSE '' END AS dst_url
-            FROM canon
-        )
         SELECT doc_id, link_idx, dst_url,
                CAST(NULLIF(regexp_extract(dst_url, '/doc/(\\d+)$', 1), '') AS BIGINT)
                    AS dst_doc,
                regexp_matches(dst_url, '/doc/(\\d+)$') AS is_internal
-        FROM edges
+        FROM (
+            SELECT doc_id, link_idx, {canonicalize_url_sql("url")} AS dst_url
+            FROM ({_LINK_URLS_SQL})
+        )
     """,
     doc=(
         "Crawl link-graph extraction, oracle-checked end to end: anchor "
@@ -2522,15 +2484,9 @@ def _link_pages(d: DataFrame) -> DataFrame:
     tags=("text", "html", "crawl", "links", "llm-pipeline"),
 )
 def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.html_extract import canonicalize_url
-
     pages = _link_pages(load(spark, sf_dir, "documents"))
-    hrefs = F.concat(
-        F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
-        F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
-    )
     exploded = pages.select(
-        "doc_id", F.posexplode(hrefs).alias("idx0", "url")
+        "doc_id", F.posexplode(_link_hrefs()).alias("idx0", "url")
     ).select("doc_id", (F.col("idx0") + 1).alias("link_idx"), "url")
     canon = exploded.select(
         "doc_id", "link_idx", canonicalize_url(F.col("url")).alias("dst_url")
@@ -2547,59 +2503,40 @@ def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# (doc_id, dst_url, host): every link target canonicalized, with the host
+# read back out of the canonical URL — the input of the two link rollups
+_CANON_LINKS_SQL = f"""
+    SELECT doc_id, dst_url, regexp_extract(dst_url, '^[^:]+://([^/?#]*)', 1) AS host
+    FROM (
+        SELECT doc_id, {canonicalize_url_sql("url")} AS dst_url
+        FROM ({_LINK_URLS_SQL})
+    )
+"""
+
+
+def _canon_links(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Spark side of _CANON_LINKS_SQL."""
+    pages = _link_pages(load(spark, sf_dir, "documents"))
+    canon = pages.select(
+        "doc_id", F.explode(_link_hrefs()).alias("url")
+    ).select("doc_id", canonicalize_url(F.col("url")).alias("dst_url"))
+    return canon.select(
+        "doc_id",
+        "dst_url",
+        F.regexp_extract("dst_url", r"^[^:]+://([^/?#]*)", 1).alias("host"),
+    )
+
+
 @register(
     "q_link_host_rollup",
     oracle=f"""
-        WITH raw AS (
-            SELECT doc_id, {_LINK_HTML_SQL} AS html FROM documents
-        ),
-        arrs AS (
-            SELECT doc_id,
-                   list_concat(
-                       regexp_extract_all(html, '{_DQ_HREF}', 1),
-                       regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*''([^'']*)''', 1)
-                   ) AS hrefs
-            FROM raw
-        ),
-        exploded AS (
-            SELECT doc_id, hrefs[i] AS url
-            FROM arrs, UNNEST(range(1, LEN(hrefs) + 1)) AS r(i)
-        ),
-        parts AS (
-            SELECT doc_id, url,
-                   lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
-                   lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1))  AS hostport,
-                   regexp_extract(url, '^[^:]+://[^/?#]*([^?#]*)', 1)   AS path,
-                   regexp_extract(url, '\\?([^#]*)', 1)                 AS query
-            FROM exploded
-        ),
-        canon AS (
-            SELECT doc_id, scheme,
-                   CASE WHEN scheme = 'http'  THEN regexp_replace(hostport, ':80$', '')
-                        WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-                        ELSE hostport END AS host,
-                   CASE WHEN LENGTH(path) = 0 THEN '/' ELSE path END AS path2,
-                   list_sort(list_filter(string_split(query, '&'),
-                       p -> LENGTH(p) > 0 AND NOT regexp_matches(p,
-                            '^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_eid)=')))
-                       AS params
-            FROM parts
-        ),
-        edges AS (
-            SELECT doc_id, host,
-                   scheme || '://' || host || path2
-                   || CASE WHEN len(params) > 0
-                           THEN '?' || array_to_string(params, '&')
-                           ELSE '' END AS dst_url
-            FROM canon
-        )
         SELECT host,
                COUNT(*) AS n_links,
                COUNT(DISTINCT doc_id) AS n_src_docs,
                COUNT(DISTINCT dst_url) AS n_distinct_targets,
                CAST(SUM(CASE WHEN regexp_matches(dst_url, '/doc/(\\d+)$')
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_internal
-        FROM edges
+        FROM ({_CANON_LINKS_SQL})
         GROUP BY host
     """,
     doc=(
@@ -2620,22 +2557,7 @@ def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "html", "links", "crawl", "domains", "quality", "llm-pipeline"),
 )
 def q_link_host_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.html_extract import canonicalize_url
-
-    pages = _link_pages(load(spark, sf_dir, "documents"))
-    hrefs = F.concat(
-        F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
-        F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
-    )
-    canon = pages.select(
-        "doc_id", F.explode(hrefs).alias("url")
-    ).select("doc_id", canonicalize_url(F.col("url")).alias("dst_url"))
-    edges = canon.select(
-        "doc_id",
-        "dst_url",
-        F.regexp_extract("dst_url", r"^[^:]+://([^/?#]*)", 1).alias("host"),
-    )
-    return edges.groupBy("host").agg(
+    return _canon_links(spark, sf_dir).groupBy("host").agg(
         F.count(F.lit(1)).alias("n_links"),
         F.count_distinct("doc_id").alias("n_src_docs"),
         F.count_distinct("dst_url").alias("n_distinct_targets"),
@@ -2647,81 +2569,9 @@ def q_link_host_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PSL_IN_SQL = (
-    "('co.uk','org.uk','ac.uk','gov.uk','me.uk','com.au','net.au','org.au',"
-    "'co.jp','ne.jp','or.jp','ac.jp','com.br','com.cn','com.mx','com.ar',"
-    "'com.tr','com.sg','co.in','co.nz','co.za','co.kr')"
-)
-
-
 @register(
     "q_link_domain_rollup",
     oracle=f"""
-        WITH raw AS (
-            SELECT doc_id, {_LINK_HTML_SQL} AS html FROM documents
-        ),
-        arrs AS (
-            SELECT doc_id,
-                   list_concat(
-                       regexp_extract_all(html, '{_DQ_HREF}', 1),
-                       regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*''([^'']*)''', 1)
-                   ) AS hrefs
-            FROM raw
-        ),
-        exploded AS (
-            SELECT doc_id, hrefs[i] AS url
-            FROM arrs, UNNEST(range(1, LEN(hrefs) + 1)) AS r(i)
-        ),
-        parts AS (
-            SELECT doc_id, url,
-                   lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
-                   lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1))  AS hostport,
-                   regexp_extract(url, '^[^:]+://[^/?#]*([^?#]*)', 1)   AS path,
-                   regexp_extract(url, '\\?([^#]*)', 1)                 AS query
-            FROM exploded
-        ),
-        canon AS (
-            SELECT doc_id, scheme,
-                   CASE WHEN scheme = 'http'  THEN regexp_replace(hostport, ':80$', '')
-                        WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-                        ELSE hostport END AS host,
-                   CASE WHEN LENGTH(path) = 0 THEN '/' ELSE path END AS path2,
-                   list_sort(list_filter(string_split(query, '&'),
-                       p -> LENGTH(p) > 0 AND NOT regexp_matches(p,
-                            '^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_eid)=')))
-                       AS params
-            FROM parts
-        ),
-        edges AS (
-            SELECT doc_id, host,
-                   scheme || '://' || host || path2
-                   || CASE WHEN len(params) > 0
-                           THEN '?' || array_to_string(params, '&')
-                           ELSE '' END AS dst_url
-            FROM canon
-        ),
-        dom AS (
-            SELECT doc_id, host, dst_url,
-                   array_to_string(
-                       l[GREATEST(LEN(l) - tk + 1, 1):LEN(l)], '.'
-                   ) AS domain
-            FROM (
-                SELECT doc_id, host, dst_url, l,
-                       LEAST(LEN(l),
-                             CASE WHEN LEN(l) >= 2
-                                       AND array_to_string(
-                                           l[GREATEST(LEN(l)-1,1):LEN(l)], '.'
-                                       ) IN {_PSL_IN_SQL}
-                                  THEN 2 ELSE 1 END + 1) AS tk
-                FROM (
-                    SELECT doc_id, host, dst_url,
-                           string_split(
-                               regexp_replace(host, ':[0-9]+$', ''), '.'
-                           ) AS l
-                    FROM edges
-                )
-            )
-        )
         SELECT domain,
                COUNT(*) AS n_links,
                COUNT(DISTINCT host)   AS n_hosts,
@@ -2729,7 +2579,10 @@ _PSL_IN_SQL = (
                COUNT(DISTINCT dst_url) AS n_distinct_targets,
                CAST(SUM(CASE WHEN regexp_matches(dst_url, '/doc/(\\d+)$')
                              THEN 1 ELSE 0 END) AS BIGINT) AS n_internal
-        FROM dom
+        FROM (
+            SELECT *, {registrable_domain_sql("host")} AS domain
+            FROM ({_CANON_LINKS_SQL})
+        )
         GROUP BY domain
     """,
     doc=(
@@ -2754,22 +2607,7 @@ _PSL_IN_SQL = (
     tags=("text", "html", "links", "crawl", "domains", "quality", "llm-pipeline"),
 )
 def q_link_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.html_extract import canonicalize_url, registrable_domain
-
-    pages = _link_pages(load(spark, sf_dir, "documents"))
-    hrefs = F.concat(
-        F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
-        F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
-    )
-    canon = pages.select(
-        "doc_id", F.explode(hrefs).alias("url")
-    ).select("doc_id", canonicalize_url(F.col("url")).alias("dst_url"))
-    edges = canon.select(
-        "doc_id",
-        "dst_url",
-        F.regexp_extract("dst_url", r"^[^:]+://([^/?#]*)", 1).alias("host"),
-    )
-    return edges.select(
+    return _canon_links(spark, sf_dir).select(
         "doc_id",
         "dst_url",
         "host",
@@ -2790,39 +2628,20 @@ def q_link_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_host_capped_sample",
     oracle=f"""
-        WITH raw AS (
-            SELECT doc_id, {_LINK_HTML_SQL} AS html FROM documents
-        ),
-        arrs AS (
-            SELECT doc_id,
-                   list_concat(
-                       regexp_extract_all(html, '{_DQ_HREF}', 1),
-                       regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*''([^'']*)''', 1)
-                   ) AS hrefs
-            FROM raw
-        ),
-        exploded AS (
-            SELECT doc_id, hrefs[i] AS url
-            FROM arrs, UNNEST(range(1, LEN(hrefs) + 1)) AS r(i)
-        ),
-        hosts AS (
+        WITH hosts AS (
             SELECT DISTINCT doc_id,
-                   lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1)) AS hostport
-            FROM exploded
-        ),
-        keyed AS (
-            SELECT doc_id, hostport,
-                   (doc_id * 2654435761) % 4294967296 AS hkey
-            FROM hosts
+                   lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1)) AS host
+            FROM ({_LINK_URLS_SQL})
         ),
         ranked AS (
-            SELECT doc_id, hostport,
+            SELECT host, doc_id,
                    ROW_NUMBER() OVER (
-                       PARTITION BY hostport ORDER BY hkey, doc_id
+                       PARTITION BY host
+                       ORDER BY (doc_id * 2654435761) % 4294967296, doc_id
                    ) AS rn
-            FROM keyed
+            FROM hosts
         )
-        SELECT hostport AS host, doc_id, CAST(rn AS BIGINT) AS rn
+        SELECT host, doc_id, CAST(rn AS BIGINT) AS rn
         FROM ranked WHERE rn <= 40
     """,
     doc=(
@@ -2849,12 +2668,8 @@ def q_host_capped_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     pages = _link_pages(load(spark, sf_dir, "documents"))
-    hrefs = F.concat(
-        F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
-        F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
-    )
     hosts = (
-        pages.select("doc_id", F.explode(hrefs).alias("url"))
+        pages.select("doc_id", F.explode(_link_hrefs()).alias("url"))
         .select(
             "doc_id",
             F.lower(
@@ -2885,50 +2700,16 @@ def q_host_capped_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_domain_capped_sample",
     oracle=f"""
-        WITH raw AS (
-            SELECT doc_id, {_LINK_HTML_SQL} AS html FROM documents
-        ),
-        arrs AS (
-            SELECT doc_id,
-                   list_concat(
-                       regexp_extract_all(html, '{_DQ_HREF}', 1),
-                       regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*''([^'']*)''', 1)
-                   ) AS hrefs
-            FROM raw
-        ),
-        exploded AS (
-            SELECT doc_id, hrefs[i] AS url
-            FROM arrs, UNNEST(range(1, LEN(hrefs) + 1)) AS r(i)
-        ),
-        hosts AS (
-            SELECT DISTINCT doc_id,
-                   lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1)) AS hostport
-            FROM exploded
-        ),
-        doms AS (
-            SELECT DISTINCT doc_id,
-                   array_to_string(
-                       l[GREATEST(LEN(l) - tk + 1, 1):LEN(l)], '.'
-                   ) AS domain
+        WITH doms AS (
+            SELECT DISTINCT doc_id, {registrable_domain_sql("hostport")} AS domain
             FROM (
-                SELECT doc_id, l,
-                       LEAST(LEN(l),
-                             CASE WHEN LEN(l) >= 2
-                                       AND array_to_string(
-                                           l[GREATEST(LEN(l)-1,1):LEN(l)], '.'
-                                       ) IN {_PSL_IN_SQL}
-                                  THEN 2 ELSE 1 END + 1) AS tk
-                FROM (
-                    SELECT doc_id,
-                           string_split(
-                               regexp_replace(hostport, ':[0-9]+$', ''), '.'
-                           ) AS l
-                    FROM hosts
-                )
+                SELECT doc_id,
+                       lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1)) AS hostport
+                FROM ({_LINK_URLS_SQL})
             )
         ),
         ranked AS (
-            SELECT doc_id, domain,
+            SELECT domain, doc_id,
                    ROW_NUMBER() OVER (
                        PARTITION BY domain
                        ORDER BY (doc_id * 2654435761) % 4294967296, doc_id
@@ -2956,15 +2737,9 @@ def q_host_capped_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_domain_capped_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.html_extract import registrable_domain
-
     pages = _link_pages(load(spark, sf_dir, "documents"))
-    hrefs = F.concat(
-        F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
-        F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
-    )
     doms = (
-        pages.select("doc_id", F.explode(hrefs).alias("url"))
+        pages.select("doc_id", F.explode(_link_hrefs()).alias("url"))
         .select(
             "doc_id",
             registrable_domain(
@@ -2986,39 +2761,26 @@ def q_domain_capped_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the intra-corpus link edges as (doc_a, doc_b) pairs — DISTINCT, no self
-# loops — shared by the Spark plan and the PageRank recurrence oracle
-_LINK_PAIRS_SQL = f"""
-    SELECT DISTINCT doc_id AS doc_a,
-           CAST(u AS BIGINT) AS doc_b
+# the intra-corpus link edges — DISTINCT, no self loops — shared by the
+# Spark plan (_link_edges) and the graph-family oracles
+_LINK_EDGES_SQL = f"""
+    SELECT DISTINCT doc_id AS src, CAST(u AS BIGINT) AS dst
     FROM (
-        SELECT doc_id,
-               NULLIF(regexp_extract(x, '/doc/(\\d+)', 1), '') AS u
-        FROM (
-            SELECT doc_id,
-                   UNNEST(list_concat(
-                       regexp_extract_all({_LINK_HTML_SQL}, '{_DQ_HREF}', 1),
-                       regexp_extract_all({_LINK_HTML_SQL},
-                           '(?i)<a\\s[^>]*href\\s*=\\s*''([^'']*)''', 1)
-                   )) AS x
-            FROM documents
-        )
+        SELECT doc_id, NULLIF(regexp_extract(url, '/doc/(\\d+)', 1), '') AS u
+        FROM ({_LINK_URLS_SQL})
     )
     WHERE u IS NOT NULL AND CAST(u AS BIGINT) <> doc_id
 """
 
 
-def _link_edges(pages: DataFrame) -> DataFrame:
-    """DISTINCT intra-corpus (src, dst) link edges from the synthesized page
-    markup — the shared front end of the link-graph family (undirected and
-    directed PageRank, convergence, components, rank-weighted budget)."""
-    hrefs = F.concat(
-        F.regexp_extract_all("html", F.lit(_DQ_HREF), F.lit(1)),
-        F.regexp_extract_all("html", F.lit(_SQ_HREF), F.lit(1)),
-    )
+def _link_edges(docs: DataFrame) -> DataFrame:
+    """DISTINCT intra-corpus (src, dst) link edges of the synthesized pages
+    of ``docs`` — the shared front end of the link-graph family (undirected
+    and directed PageRank, convergence, components, rank-weighted budget)."""
     target = F.nullif(F.regexp_extract("url", r"/doc/(\d+)", 1), F.lit(""))
     return (
-        pages.select("doc_id", F.explode(hrefs).alias("url"))
+        _link_pages(docs)
+        .select("doc_id", F.explode(_link_hrefs()).alias("url"))
         .select("doc_id", target.cast("long").alias("dst"))
         .where(F.col("dst").isNotNull() & (F.col("dst") != F.col("doc_id")))
         .select(F.col("doc_id").alias("src"), "dst")
@@ -3028,7 +2790,9 @@ def _link_edges(pages: DataFrame) -> DataFrame:
 
 @register(
     "q_link_pagerank",
-    oracle=pagerank_oracle_sql(_LINK_PAIRS_SQL, iterations=5),
+    oracle=pagerank_oracle_sql(
+        f"SELECT src AS doc_a, dst AS doc_b FROM ({_LINK_EDGES_SQL})", iterations=5
+    ),
     doc=(
         "Link-graph centrality: damped PageRank (5 fixed rounds, the "
         "fixed-point-integer recurrence of operators/graph.py — "
@@ -3049,17 +2813,11 @@ def _link_edges(pages: DataFrame) -> DataFrame:
 def q_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank_fixed
 
-    docs = load(spark, sf_dir, "documents")
-    pairs = _link_edges(_link_pages(docs)).toDF("doc_a", "doc_b")
+    pairs = _link_edges(load(spark, sf_dir, "documents")).toDF("doc_a", "doc_b")
     return pagerank_fixed(pairs, iterations=5)
 
 
 from ..operators.graph import pagerank_directed_oracle_sql  # noqa: E402
-
-_LINK_EDGES_SQL = _LINK_PAIRS_SQL.replace("doc_id AS doc_a", "doc_id AS src").replace(
-    "CAST(u AS BIGINT) AS doc_b", "CAST(u AS BIGINT) AS dst"
-)
-
 
 @register(
     "q_link_pagerank_directed",
@@ -3081,9 +2839,8 @@ _LINK_EDGES_SQL = _LINK_PAIRS_SQL.replace("doc_id AS doc_a", "doc_id AS src").re
 def q_link_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank_directed
 
-    return pagerank_directed(
-        _link_edges(_link_pages(load(spark, sf_dir, "documents"))), iterations=5
-    )
+    edges = _link_edges(load(spark, sf_dir, "documents"))
+    return pagerank_directed(edges, iterations=5)
 
 
 from ..operators.graph import (  # noqa: E402
@@ -3112,7 +2869,7 @@ def q_link_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank_directed_convergence
 
     return pagerank_directed_convergence(
-        _link_edges(_link_pages(load(spark, sf_dir, "documents"))), iterations=5
+        _link_edges(load(spark, sf_dir, "documents")), iterations=5
     )
 
 
@@ -3148,7 +2905,7 @@ def q_link_pagerank_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_link_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import resolve_components
 
-    edges = _link_edges(_link_pages(load(spark, sf_dir, "documents")))
+    edges = _link_edges(load(spark, sf_dir, "documents"))
     # max_iters: min-label propagation needs O(component diameter) rounds.
     # Near-dup clusters are 2-3 deep (the default cap of 20 is a runaway
     # guard there), but the link graph's halving-chain diameter grows like
@@ -3184,17 +2941,11 @@ def q_link_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DQ_A = r'(?is)<a\s[^>]*href\s*=\s*"([^"]*)"[^>]*>(.*?)</a>'
 _SQ_A = r"(?is)<a\s[^>]*href\s*=\s*'([^']*)'[^>]*>(.*?)</a>"
 
-# DuckDB-side mirrors (single quotes doubled for the SQL literal)
-_DQ_A_SQL = '(?is)<a\\s[^>]*href\\s*=\\s*"([^"]*)"[^>]*>(.*?)</a>'
-_SQ_A_SQL = "(?is)<a\\s[^>]*href\\s*=\\s*''([^'']*)''[^>]*>(.*?)</a>"
-
 
 def anchor_term_counts(pages: DataFrame) -> DataFrame:
     """The q_anchor_terms dataflow over any (doc_id, html) frame — factored
     out so the nested-markup grammar is unit-pinnable on crafted inputs
     (tests/test_round3_ops.py) as well as oracle-checked on the fixture."""
-    from ..operators.html_extract import canonicalize_url, strip_html
-
     pairs = pages.select(
         "doc_id",
         F.explode(
@@ -3236,52 +2987,24 @@ def anchor_term_counts(pages: DataFrame) -> DataFrame:
 @register(
     "q_anchor_terms",
     oracle=f"""
-        WITH raw AS (
-            SELECT doc_id, {_LINK_HTML_SQL} AS html FROM documents
-        ),
-        arrs AS (
+        WITH arrs AS (
             SELECT doc_id,
                    list_concat(
-                       regexp_extract_all(html, '{_DQ_A_SQL}', 1),
-                       regexp_extract_all(html, '{_SQ_A_SQL}', 1)
+                       regexp_extract_all(html, {sql_quote(_DQ_A)}, 1),
+                       regexp_extract_all(html, {sql_quote(_SQ_A)}, 1)
                    ) AS hrefs,
                    list_concat(
-                       regexp_extract_all(html, '{_DQ_A_SQL}', 2),
-                       regexp_extract_all(html, '{_SQ_A_SQL}', 2)
+                       regexp_extract_all(html, {sql_quote(_DQ_A)}, 2),
+                       regexp_extract_all(html, {sql_quote(_SQ_A)}, 2)
                    ) AS anchors
-            FROM raw
-        ),
-        exploded AS (
-            SELECT doc_id, hrefs[i] AS url, anchors[i] AS anchor
-            FROM arrs, UNNEST(range(1, LEN(hrefs) + 1)) AS r(i)
-        ),
-        parts AS (
-            SELECT doc_id, anchor, url,
-                   lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
-                   lower(regexp_extract(url, '^[^:]+://([^/?#]*)', 1))  AS hostport,
-                   regexp_extract(url, '^[^:]+://[^/?#]*([^?#]*)', 1)   AS path,
-                   regexp_extract(url, '\\?([^#]*)', 1)                 AS query
-            FROM exploded
-        ),
-        canon AS (
-            SELECT doc_id, anchor, scheme,
-                   CASE WHEN scheme = 'http'  THEN regexp_replace(hostport, ':80$', '')
-                        WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-                        ELSE hostport END AS host,
-                   CASE WHEN LENGTH(path) = 0 THEN '/' ELSE path END AS path2,
-                   list_sort(list_filter(string_split(query, '&'),
-                       p -> LENGTH(p) > 0 AND NOT regexp_matches(p,
-                            '^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_eid)=')))
-                       AS params
-            FROM parts
+            FROM (SELECT doc_id, {_LINK_HTML_SQL} AS html FROM documents)
         ),
         edges AS (
-            SELECT doc_id, anchor,
-                   scheme || '://' || host || path2
-                   || CASE WHEN len(params) > 0
-                           THEN '?' || array_to_string(params, '&')
-                           ELSE '' END AS dst_url
-            FROM canon
+            SELECT doc_id, {canonicalize_url_sql("url")} AS dst_url, anchor
+            FROM (
+                SELECT doc_id, hrefs[i] AS url, anchors[i] AS anchor
+                FROM arrs, UNNEST(range(1, LEN(hrefs) + 1)) AS r(i)
+            )
         ),
         terms AS (
             SELECT doc_id, dst_url, t AS term
@@ -3338,7 +3061,7 @@ def _budget_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank_directed
 
     docs = load(spark, sf_dir, "documents")
-    ranks = pagerank_directed(_link_edges(_link_pages(docs)), iterations=5)
+    ranks = pagerank_directed(_link_edges(docs), iterations=5)
     return ranks.join(
         docs.select(
             "doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tokens")
@@ -3466,53 +3189,56 @@ def approx_ntile3_buckets(ranks: DataFrame, doc_tokens: DataFrame) -> DataFrame:
         F.percentile_approx("rank", [2.0 / 3.0, 1.0 / 3.0], acc).alias("t"),
     ).collect()[0]
     n = int(r0["n"])
-    t1, t2 = float(r0["t"][0]), float(r0["t"][1])
-    # NTILE(3) bucket sizes over n rows: the first (n mod 3) buckets get the
-    # extra row — reproduce them so boundary splits land where NTILE's do
-    size1 = n // 3 + (1 if n % 3 >= 1 else 0)
-    size12 = size1 + n // 3 + (1 if n % 3 >= 2 else 0)
-    # pass 2: how much of each boundary TIE group (rank == threshold) must
-    # go to the upper bucket to hit the NTILE sizes (NTILE order is rank
-    # DESC, doc ASC — so within a tie group, SMALLEST doc ids go up)
-    r1 = ranks.agg(
-        F.sum((F.col("rank") > t1).cast("long")).alias("above1"),
-        F.sum((F.col("rank") == t1).cast("long")).alias("tie1"),
-        F.sum((F.col("rank") > t2).cast("long")).alias("above2"),
-        F.sum((F.col("rank") == t2).cast("long")).alias("tie2"),
-    ).collect()[0]
-    need1 = min(max(size1 - int(r1["above1"]), 0), int(r1["tie1"]))
-    need2 = min(max(size12 - int(r1["above2"]), 0), int(r1["tie2"]))
-    # pass 3: doc-id quantile WITHIN each boundary tie group at the needed
-    # fraction — conditional sketch aggregates (nulls ignored), still one
-    # 1-row parallel pass. need == 0 -> no doc from that tie goes up.
-    d_aggs = []
-    if need1 > 0:
-        d_aggs.append(
-            F.percentile_approx(
-                F.when(F.col("rank") == t1, F.col("doc")),
-                need1 / int(r1["tie1"]),
-                acc,
-            ).alias("d1")
+    if n == 0:  # percentile_approx over zero rows is NULL: nothing to split
+        up1 = up2 = F.lit(False)
+    else:
+        t1, t2 = float(r0["t"][0]), float(r0["t"][1])
+        # NTILE(3) bucket sizes over n rows: the first (n mod 3) buckets get the
+        # extra row — reproduce them so boundary splits land where NTILE's do
+        size1 = n // 3 + (1 if n % 3 >= 1 else 0)
+        size12 = size1 + n // 3 + (1 if n % 3 >= 2 else 0)
+        # pass 2: how much of each boundary TIE group (rank == threshold) must
+        # go to the upper bucket to hit the NTILE sizes (NTILE order is rank
+        # DESC, doc ASC — so within a tie group, SMALLEST doc ids go up)
+        r1 = ranks.agg(
+            F.sum((F.col("rank") > t1).cast("long")).alias("above1"),
+            F.sum((F.col("rank") == t1).cast("long")).alias("tie1"),
+            F.sum((F.col("rank") > t2).cast("long")).alias("above2"),
+            F.sum((F.col("rank") == t2).cast("long")).alias("tie2"),
+        ).collect()[0]
+        need1 = min(max(size1 - int(r1["above1"]), 0), int(r1["tie1"]))
+        need2 = min(max(size12 - int(r1["above2"]), 0), int(r1["tie2"]))
+        # pass 3: doc-id quantile WITHIN each boundary tie group at the needed
+        # fraction — conditional sketch aggregates (nulls ignored), still one
+        # 1-row parallel pass. need == 0 -> no doc from that tie goes up.
+        d_aggs = []
+        if need1 > 0:
+            d_aggs.append(
+                F.percentile_approx(
+                    F.when(F.col("rank") == t1, F.col("doc")),
+                    need1 / int(r1["tie1"]),
+                    acc,
+                ).alias("d1")
+            )
+        if need2 > 0:
+            d_aggs.append(
+                F.percentile_approx(
+                    F.when(F.col("rank") == t2, F.col("doc")),
+                    need2 / int(r1["tie2"]),
+                    acc,
+                ).alias("d2")
+            )
+        drow = ranks.agg(*d_aggs).collect()[0] if d_aggs else {}
+        up1 = (F.col("rank") > t1) | (
+            (F.col("rank") == t1) & (F.col("doc") <= int(drow["d1"]))
+            if need1 > 0
+            else F.lit(False)
         )
-    if need2 > 0:
-        d_aggs.append(
-            F.percentile_approx(
-                F.when(F.col("rank") == t2, F.col("doc")),
-                need2 / int(r1["tie2"]),
-                acc,
-            ).alias("d2")
+        up2 = (F.col("rank") > t2) | (
+            (F.col("rank") == t2) & (F.col("doc") <= int(drow["d2"]))
+            if need2 > 0
+            else F.lit(False)
         )
-    drow = ranks.agg(*d_aggs).collect()[0] if d_aggs else {}
-    up1 = (F.col("rank") > t1) | (
-        (F.col("rank") == t1) & (F.col("doc") <= int(drow["d1"]))
-        if need1 > 0
-        else F.lit(False)
-    )
-    up2 = (F.col("rank") > t2) | (
-        (F.col("rank") == t2) & (F.col("doc") <= int(drow["d2"]))
-        if need2 > 0
-        else F.lit(False)
-    )
     return ranks.join(
         doc_tokens, ranks.doc == doc_tokens.doc_id
     ).select(
@@ -3531,9 +3257,8 @@ def _budget_scored_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank_directed
 
     docs = load(spark, sf_dir, "documents")
-    ranks = pagerank_directed(
-        _link_edges(_link_pages(docs)), iterations=5
-    ).localCheckpoint(eager=False)  # 3 aggregate passes + downstream read it
+    ranks = pagerank_directed(_link_edges(docs), iterations=5)
+    ranks = ranks.localCheckpoint(eager=False)  # read by 3 passes + downstream
     return approx_ntile3_buckets(
         ranks,
         docs.select(
@@ -3821,9 +3546,8 @@ def corpus_assembly_stages(
         .where(F.col("rn") <= _E2E_SOURCE_CAP)
         .drop("hkey", "rn")
     )
-    ranks = pagerank_directed(
-        _link_edges(_link_pages(docs)), iterations=5
-    ).localCheckpoint(eager=False)
+    ranks = pagerank_directed(_link_edges(docs), iterations=5)
+    ranks = ranks.localCheckpoint(eager=False)
     scored = approx_ntile3_buckets(
         ranks,
         capped.select(
@@ -3934,9 +3658,7 @@ from ..operators.graph import hits_oracle_sql  # noqa: E402
 def q_link_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import hits_fixed
 
-    return hits_fixed(
-        _link_edges(_link_pages(load(spark, sf_dir, "documents"))), iterations=5
-    )
+    return hits_fixed(_link_edges(load(spark, sf_dir, "documents")), iterations=5)
 
 
 @register(
@@ -3973,7 +3695,7 @@ def q_link_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "links", "stats", "crawl", "llm-pipeline"),
 )
 def q_link_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _link_edges(_link_pages(load(spark, sf_dir, "documents")))
+    edges = _link_edges(load(spark, sf_dir, "documents"))
     degs = (
         edges.groupBy(F.col("src").alias("doc"))
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -4022,6 +3744,6 @@ def q_link_crawl_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bfs_depth
 
     docs = load(spark, sf_dir, "documents")
-    edges = _link_edges(_link_pages(docs))
+    edges = _link_edges(docs)
     seeds = docs.where(F.col("doc_id") < 10).select(F.col("doc_id").alias("doc"))
     return bfs_depth(edges, seeds, max_hops=30)
